@@ -12,8 +12,9 @@ import graft.streaming.EventStreams
   * commits, state-store open) plus per-row work; at sf0.1 the events
   * table is one ~2 MB file, so the fixed cost dominates and the ratio
   * reads ~4× even though the per-row cost matches the batch side —
-  * the committed amortization study (St01Amortization, BENCH_NOTES.md)
-  * measures 1.25× at 100M rows with production-size ~90 MB files.
+  * the amortization study recorded in BENCH_NOTES.md ("Amortization
+  * measurement") measured 1.25× at 100M rows with production-size
+  * ~90 MB files.
   *
   * Per the r7 review, the bench fixture itself now reads a
   * production-SHAPED corpus: the events table replicated [[Mult]]×
@@ -160,9 +161,10 @@ object BenchFixtures {
     * 31 distinct tokens, so the sketch's second scan is pure overhead
     * against a nearly-free full-vocabulary shuffle and the ratio
     * reads ~1.6–2.1× run-noise-wide (it flipped the 2× bar in one r13
-    * run on a 0.17 s baseline). The committed crossover study
-    * (T22VocabScale, BENCH_NOTES) shows the regime the sketch exists
-    * for — ≥10⁶ distinct keys — where it is ~3× FASTER; this fixture
+    * run on a 0.17 s baseline). The crossover study recorded in
+    * BENCH_NOTES.md ("Measured crossover") shows the regime the
+    * sketch exists for — ≥10⁶ distinct keys — where it is ~3× FASTER;
+    * this fixture
     * stages that regime (20M rows, 1M-key Zipf-ish tail, 4 hot keys
     * at ~5%, md5-width tokens) once per session and times BOTH plans
     * over it. The correctness gate still runs the original corpus

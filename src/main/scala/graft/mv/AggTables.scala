@@ -13,6 +13,8 @@ import org.apache.spark.sql.graftbridge.ColumnExpr
 import org.json4s._
 import org.json4s.jackson.Serialization
 
+import graft.table.SegmentedTable.SegmentScan
+
 /** One registered aggregate table: a parquet rollup of `basePath`
   * grouped by `groupCols`, holding pre-aggregated measures.
   * `measures` maps (func, baseColumn) → MV column name, where func ∈
@@ -313,20 +315,13 @@ object AggTables {
       .map(st => Serialization.read[AggTableMeta](
         graft.table.TableIO.readString(st.getPath)))
 
-  /** Whether a scan carries FILE-LEVEL read filters (glob, mtime
-    * bounds, recursive lookup): such a scan reads a SUBSET of its
-    * root paths' files, so neither the catalog-count fast path nor an
-    * MV rewrite may answer for it — both reason about roots, not the
-    * filtered file set. Shared by [[StatsAggFromCatalog]],
-    * [[AggTableRewrite]] and the sorted-scan strategy.
-    */
-  private[graft] def hasFileFilterOptions(
-      h: org.apache.spark.sql.execution.datasources.HadoopFsRelation): Boolean =
-    hasFileFilterKeys(h.options.keySet)
-
-  /** Same guard over a bare option-key set — the V2 ParquetScan path
-    * carries its read options as a CaseInsensitiveStringMap, not a
-    * HadoopFsRelation.
+  /** Whether a scan's read options carry FILE-LEVEL filters (glob,
+    * mtime bounds, recursive lookup): such a scan reads a SUBSET of its
+    * root paths' files, so no rule that reasons about roots — catalog
+    * stats, segment pruning, an MV rewrite — may answer for it.
+    * [[graft.table.SegmentedTable.scanOf]] refuses such scans for
+    * every segment-scan rule; [[AggTableRewrite]] also checks it for
+    * a plain-parquet base.
     */
   private[graft] def hasFileFilterKeys(optionKeys: Iterable[String]): Boolean = {
     val keys = optionKeys.map(_.toLowerCase(java.util.Locale.ROOT)).toSet
@@ -397,7 +392,8 @@ object AggTables {
       .digest(entries.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
 
-  private def normalize(p: String): String =
+  /** The catalog's spelling of a base path (`basePath` keys). */
+  private[mv] def normalize(p: String): String =
     p.stripPrefix("file:").stripSuffix("/")
 }
 
@@ -455,13 +451,13 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           AggTables.fingerprint(spark, mv.basePath)) == mv.fingerprint
     plan.transformUp {
       case agg @ Aggregate(grouping, aggExprs, child, _) =>
-        baseCandidates(child).flatMap { case (base, scanPaths, needLiveCheck) =>
+        baseCandidates(child).flatMap { case (base, segmented) =>
           // try EVERY fresh MV on this base, first servable wins — a
           // base can carry several rollups (different dims) and the
           // listing-order-first one failing to serve must not mask a
           // sibling that matches exactly
           mvs.filter(_.basePath == base).filter(isFresh)
-            .filter(_ => !needLiveCheck || scanIsCurrentLive(base, scanPaths))
+            .filter(_ => segmented.forall(scanIsCurrentLive))
             .flatMap(mv => rewrite(agg, mv))
             .headOption
         }.headOption.getOrElse(agg)
@@ -473,34 +469,26 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * would make the rollup wrong). Two admissible base candidates,
     * tried in order:
     *  - exactly one parquet location → base = that path;
-    *  - every scan path a `segment_*` dir under one common parent →
-    *    base = the parent (a segmented-table read, possibly of a
-    *    single segment); [[scanIsCurrentLive]] then verifies the
-    *    paths are exactly the table's CURRENT live segments, so a
-    *    time-travel read or a reader's stale snapshot is never
-    *    rewritten.
-    * Returns (candidate base, scan paths, live-check required).
+    *  - a segment scan of one graft table
+    *    ([[graft.table.SegmentedTable.scanOf]], possibly of a single
+    *    segment) → base = the table root; [[scanIsCurrentLive]] then
+    *    verifies the scan reads exactly the table's CURRENT live
+    *    segments, so a time-travel read or a reader's stale snapshot
+    *    is never rewritten.
+    * File-filtered scans (glob/mtime/recursive options) are neither:
+    * they read a subset of the base's files and the full rollup would
+    * overcount. Returns (candidate base, the segment scan to
+    * live-check, if any).
     */
-  private def baseCandidates(p: LogicalPlan): Seq[(String, Seq[String], Boolean)] = p match {
+  private def baseCandidates(p: LogicalPlan): Seq[(String, Option[SegmentScan])] = p match {
     case l: LogicalRelation => l.relation match {
-      // file-filtered scans (glob/mtime/recursive options) read a
-      // subset of the base's files — the full rollup would overcount
-      case h: HadoopFsRelation if !AggTables.hasFileFilterOptions(h) =>
-        val roots = h.location.rootPaths.toList
-          .map(_.toString.stripPrefix("file:").stripSuffix("/"))
-        val exact = roots match {
-          case rp :: Nil => Seq((rp, roots, false))
+      case h: HadoopFsRelation if !AggTables.hasFileFilterKeys(h.options.keySet) =>
+        val exact = h.location.rootPaths match {
+          case Seq(rp) => Seq((AggTables.normalize(rp.toString), None))
           case _ => Nil
         }
-        val segParent =
-          if (roots.nonEmpty &&
-              roots.forall(r => r.drop(r.lastIndexOf('/') + 1).startsWith("segment_")))
-            roots.map(r => r.take(r.lastIndexOf('/'))).distinct match {
-              case parent :: Nil => Seq((parent, roots, true))
-              case _ => Nil
-            }
-          else Nil
-        exact ++ segParent
+        exact ++ graft.table.SegmentedTable.scanOf(spark, h)
+          .map(s => (AggTables.normalize(s.root.toString), Some(s)))
       case _ => Nil
     }
     case Project(exprs, child) if exprs.forall(_.isInstanceOf[Attribute]) =>
@@ -508,15 +496,13 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => Nil
   }
 
-  /** A multi-path scan is rewritable only when it reads exactly the
-    * segmented table's current live segment set.
+  /** A segment scan is rewritable only when it reads exactly the
+    * table's current live segment set.
     */
-  private def scanIsCurrentLive(base: String, scanPaths: Seq[String]): Boolean =
-    graft.table.SegmentedTable.exists(base) && {
-      val live = graft.table.SegmentedTable.open(spark, base)
-        .liveSegmentPaths.map(_.toString.stripSuffix("/")).toSet
-      live.nonEmpty && scanPaths.toSet == live
-    }
+  private def scanIsCurrentLive(scan: SegmentScan): Boolean = {
+    val live = scan.table.liveScan.ids.toSet
+    live.nonEmpty && scan.ids.toSet == live
+  }
 
   private def rewrite(agg: Aggregate, mv: AggTableMeta): Option[LogicalPlan] = {
     // grouping must be plain columns, all present in the MV dims

@@ -11,6 +11,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.table.{SegmentedTable, SegmentMeta}
+import graft.table.SegmentedTable.SegmentScan
 
 /** Driver-only global aggregates: an unfiltered, ungrouped
   * COUNT(*) / COUNT(col) / MIN(col) / MAX(col) over a graft table's
@@ -26,9 +27,10 @@ import graft.table.{SegmentedTable, SegmentMeta}
   * 100 TB" from a full scan into a driver-side catalog read.
   *
   * Fires only when: no grouping, every aggregate output is one of the
-  * four servable shapes over a bare column, and every scanned path is
-  * a `segment_N` dir of one graft table whose CURRENT catalog still
-  * tracks each scanned id as live (ids are never reused and segment
+  * four servable shapes over a bare column, and the scan is a segment
+  * scan of one graft table ([[SegmentedTable.scanOf]], or the catalog
+  * relation's own live set) whose CURRENT catalog still tracks each
+  * scanned id as live (ids are never reused and segment
   * dirs are immutable, so the stats describe the scanned data
   * verbatim; a stale plan over a since-deleted segment bails).
   * FILTERED aggregates fold too, when the catalog can prove a
@@ -272,8 +274,8 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case agg @ Aggregate(Nil, aggExprs, child, _) if servableShapes(aggExprs) =>
       extract(child, None) match {
-        case Some((cond, paths, rel)) =>
-          answer(paths, cond, aggExprs) match {
+        case Some((cond, scan, rel)) =>
+          answer(scan, cond, aggExprs) match {
             case Some(FullFold(values)) =>
               // the V2 builder's own pushed-aggregate LocalScan serves
               // full folds on the pre-pushdown path — don't steal the
@@ -301,8 +303,8 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
         if groups.nonEmpty && groups.forall(_.isInstanceOf[AttributeReference]) &&
           groupedShapes(groups, aggExprs) =>
       extract(child, None) match {
-        case Some((cond, paths, rel)) =>
-          answerGrouped(paths, cond,
+        case Some((cond, scan, rel)) =>
+          answerGrouped(scan, cond,
             groups.map(_.asInstanceOf[AttributeReference]), aggExprs) match {
             case Some(GroupedFull(rows)) =>
               if (rel.deferFullFold && aggShapesOf(aggExprs,
@@ -495,31 +497,32 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
   /** Strip attribute-only Projects and at most ONE Filter between the
     * aggregate and the scan (the optimizer has already collapsed
     * filter chains). Returns the filter condition (if any), the
-    * scanned segment paths, and the [[FoldableScan]] leaf (the hybrid
-    * fold rebuilds it over the straddler paths so downstream attribute
-    * references stay valid). Three leaf shapes:
-    *  - V1 `LogicalRelation(HadoopFsRelation)` over segment dirs — the
-    *    rule path (DataFrame reads, `format("graft")`, temp views);
+    * [[SegmentScan]] the leaf reads, and the [[FoldableScan]] leaf
+    * (the hybrid fold rebuilds it over the straddler segments so
+    * downstream attribute references stay valid). Three leaf shapes:
+    *  - V1 `LogicalRelation(HadoopFsRelation)` that
+    *    [[SegmentedTable.scanOf]] recognizes — the rule path
+    *    (DataFrame reads, `format("graft")`, temp views);
     *  - post-pushdown `DataSourceV2ScanRelation(ParquetScan)` — plain
     *    sessions register via extraOptimizations, which run AFTER V2
     *    scan pushdown, so a catalog read the builder could not fold
     *    (one straddler disables its all-or-nothing pushed aggregate)
     *    arrives here with the Filter kept and the survivor dirs as the
-    *    scan's root paths;
+    *    scan's root paths, recognized the same way;
     *  - pre-pushdown `DataSourceV2Relation(GraftV2Table)` — extension-
     *    injected rules run BEFORE V2 scan pushdown, so the same
-    *    catalog read is intercepted at the relation itself (live
-    *    snapshot paths; full folds defer to the builder).
+    *    catalog read is intercepted at the relation itself, which
+    *    hands over its table and live segment ids directly (full
+    *    folds defer to the builder).
+    * The recognizer refuses scans with file-level read options (glob,
+    * mtime bounds, recursive lookup): they read a SUBSET of the
+    * segment dirs' files, and the catalog answer would silently drift.
     */
   private def extract(p: LogicalPlan, cond: Option[Expression])
-      : Option[(Option[Expression], Seq[String], FoldableScan)] = p match {
+      : Option[(Option[Expression], SegmentScan, FoldableScan)] = p match {
     case l: LogicalRelation => l.relation match {
-      // a scan carrying file-level read filters (glob, mtime bounds,
-      // recursive lookup) reads a SUBSET of the segment dirs' files —
-      // the catalog answer would silently drift; leave it alone
-      case h: HadoopFsRelation if !AggTables.hasFileFilterOptions(h) =>
-        Some((cond, h.location.rootPaths.map(_.toString.stripPrefix("file:")),
-          V1Leaf(l)))
+      case h: HadoopFsRelation =>
+        SegmentedTable.scanOf(spark, h).map(s => (cond, s, V1Leaf(l)))
       case _ => None
     }
     case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
@@ -532,25 +535,18 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
         // them from the SAME conjuncts the retained Filter node (our
         // `cond`) carries, so any file they advise skipping holds no
         // cond-matching rows and the fold over cond stays exact.
-        // file-level read options (glob, mtime bounds, recursive
-        // lookup) make the scan read a SUBSET of the segment dirs'
-        // files — mirror the V1 path's hasFileFilterOptions guard
         case ps: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
             if ps.readPartitionSchema.isEmpty && ps.partitionFilters.isEmpty &&
-              ps.pushedAggregate.isEmpty &&
-              !AggTables.hasFileFilterKeys(
-                scala.jdk.CollectionConverters
-                  .SetHasAsScala(ps.options.keySet()).asScala) =>
-          Some((cond,
-            ps.fileIndex.rootPaths.map(_.toString.stripPrefix("file:")),
-            V2Leaf(r.output, deferFullFold = false)))
+              ps.pushedAggregate.isEmpty =>
+          SegmentedTable.scanOf(spark, ps.fileIndex.rootPaths,
+            scala.jdk.CollectionConverters.SetHasAsScala(ps.options.keySet()).asScala)
+            .map(s => (cond, s, V2Leaf(r.output, deferFullFold = false)))
         case _ => None
       }
     case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation =>
       r.table match {
         case t: graft.sql.GraftV2Table =>
-          t.foldSnapshotPaths.map(paths => (cond, paths,
-            V2Leaf(r.output, deferFullFold = true)))
+          t.foldSnapshot.map(s => (cond, s, V2Leaf(r.output, deferFullFold = true)))
         case _ => None
       }
     case Project(exprs, child) if exprs.forall(_.isInstanceOf[Attribute]) =>
@@ -577,39 +573,24 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
                                 schema: StructType) extends FoldResult
   private sealed trait FoldResult
 
-  /** Resolve scanned segment paths to (table, scanned metas, id→path).
-    * All paths must be segment dirs of ONE graft table; every scanned
-    * id must still be live (ids are never reused and segment dirs are
-    * immutable, so live stats describe the scanned data verbatim; a
-    * stale plan over a since-deleted segment bails). A scan of a
-    * live-set SUBSET is legitimate and folds over exactly the scanned
-    * segments — [[graft.table.GraftSegmentPruning]] produces such
-    * scans (with the Filter kept for straddlers, WITHOUT one when the
-    * predicate was proven exact and elided), and a hand-built scan of
-    * one live segment dir means "aggregate this segment", which the
-    * per-segment stats describe verbatim either way.
+  /** The catalog metas of a scan's segments, in scan order. Every
+    * scanned id must be distinct and still live (ids are never reused
+    * and segment dirs are immutable, so live stats describe the
+    * scanned data verbatim; a stale plan over a since-deleted segment
+    * bails). A scan of a live-set SUBSET is legitimate and folds over
+    * exactly the scanned segments — [[graft.table.GraftSegmentPruning]]
+    * produces such scans (with the Filter kept for straddlers, WITHOUT
+    * one when the predicate was proven exact and elided), and a
+    * hand-built scan of one live segment dir means "aggregate this
+    * segment", which the per-segment stats describe verbatim either
+    * way.
     */
-  private def resolveScanned(paths: Seq[String])
-      : Option[(SegmentedTable, Seq[SegmentMeta], Map[Int, String])] = {
-    val seg = """(.*)/segment_(\d+)/?$""".r
-    val parsed = paths.map {
-      case seg(root, id) => Some(root -> id.toInt)
-      case _ => None
-    }
-    if (parsed.exists(_.isEmpty)) return None
-    val byRoot = parsed.flatten.groupBy(_._1)
-    if (byRoot.size != 1) return None
-    val (root, pairs) = byRoot.head
-    if (!SegmentedTable.exists(root)) return None
-    val t = SegmentedTable.open(spark, root)
-    val live = t.showSegments().filter(_.status == SegmentedTable.SUCCESS)
-    val byId = live.map(s => s.id -> s).toMap
-    val scannedIds = pairs.map(_._2)
-    if (scannedIds.distinct.size != scannedIds.size) return None
-    val scanned = scannedIds.flatMap(byId.get)
-    if (scanned.size != scannedIds.size) return None
-    val idPath = scannedIds.zip(paths).toMap
-    Some((t, scanned, idPath))
+  private def resolveScanned(scan: SegmentScan): Option[Seq[SegmentMeta]] = {
+    val byId = scan.table.showSegments()
+      .filter(_.status == SegmentedTable.SUCCESS).map(s => s.id -> s).toMap
+    val scanned = scan.ids.flatMap(byId.get)
+    if (scan.ids.distinct.size != scan.ids.size || scanned.size != scan.ids.size) None
+    else Some(scanned)
   }
 
   /** Fold every requested shape over `segs`; None = some shape is not
@@ -627,10 +608,10 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
     * the proven mass, scan only the straddlers); nothing proven →
     * bail to the real scan.
     */
-  private def answer(paths: Seq[String], cond: Option[Expression],
+  private def answer(scan: SegmentScan, cond: Option[Expression],
                      exprs: Seq[NamedExpression]): Option[FoldResult] = {
-    val (t, scanned, idPath) =
-      resolveScanned(paths).getOrElse(return None)
+    val t = scan.table
+    val scanned = resolveScanned(scan).getOrElse(return None)
     cond match {
       case None => foldValues(scanned, exprs).map(FullFold(_))
       case Some(c) =>
@@ -641,8 +622,8 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
         if (straddlers.isEmpty) foldValues(proven, exprs).map(FullFold(_))
         else if (proven.isEmpty ||
             !exprs.forall(e => combinable(shapeOf(e).get))) None
-        else foldValues(proven, exprs).map(v =>
-          HybridFold(v, straddlers.map(s => idPath(s.id)), t.schema))
+        else foldValues(proven, exprs).map(v => HybridFold(v,
+          t.segmentPaths(straddlers.map(_.id)).map(_.toString), t.schema))
     }
   }
 
@@ -865,12 +846,12 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
     * which also serves tables where only SOME loads are key-aligned.
     * Nothing foldable → bail.
     */
-  private def answerGrouped(paths: Seq[String], cond: Option[Expression],
+  private def answerGrouped(scan: SegmentScan, cond: Option[Expression],
                             groups: Seq[AttributeReference],
                             exprs: Seq[NamedExpression])
       : Option[GroupedFoldResult] = {
-    val (t, scanned, idPath) =
-      resolveScanned(paths).getOrElse(return None)
+    val t = scan.table
+    val scanned = resolveScanned(scan).getOrElse(return None)
     val survivors = cond match {
       case None => scanned
       case Some(c) =>
@@ -911,7 +892,8 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
         if (vals.exists(_.isEmpty)) return None
         (kv ++ vals.map(_.get)).toArray[Any]
       }
-      Some(GroupedHybrid(partials, scanSet.map(s => idPath(s.id)), t.schema))
+      Some(GroupedHybrid(partials,
+        t.segmentPaths(scanSet.map(_.id)).map(_.toString), t.schema))
     }
   }
 

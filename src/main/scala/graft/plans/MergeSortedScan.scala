@@ -63,8 +63,7 @@ case class GraftSortedScanStrategy(spark: SparkSession) extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case s @ Sort(order, true, child, _) if order.nonEmpty =>
       stripProjects(child) match {
-        case Some(l @ LogicalRelation(h: HadoopFsRelation, _, _, _, _))
-            if !graft.mv.AggTables.hasFileFilterOptions(h) =>
+        case Some(l @ LogicalRelation(h: HadoopFsRelation, _, _, _, _)) =>
           // the replacement must produce the SORT node's own output —
           // the (possibly pruned/reordered) attribute list any
           // stripped Projects left, which also becomes the merge
@@ -88,15 +87,10 @@ case class GraftSortedScanStrategy(spark: SparkSession) extends SparkStrategy {
   private def planMerge(order: Seq[SortOrder], out: Seq[Attribute],
                         l: LogicalRelation,
                         h: HadoopFsRelation): Option[SparkPlan] = {
-    // ONE segment dir of one graft table
-    val segRe = """(.*)/segment_(\d+)/?$""".r
-    val paths = h.location.rootPaths.map(_.toString.stripPrefix("file:"))
-    val (root, segId) = paths match {
-      case Seq(segRe(r, id)) => (r, id.toInt)
-      case _ => return None
-    }
-    if (!SegmentedTable.exists(root)) return None
-    val t = SegmentedTable.open(spark, root)
+    // ONE segment dir of one graft table, read without file filters
+    val scan = SegmentedTable.scanOf(spark, h).filter(_.ids.size == 1)
+      .getOrElse(return None)
+    val (t, segId) = (scan.table, scan.ids.head)
     // raw per-file order describes read rows only when no declared
     // default could coalesce over NULLs, and only when the layout
     // actually sorted (z-order does not)

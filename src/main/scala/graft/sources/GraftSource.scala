@@ -55,11 +55,9 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
           pruned.rdd
         }
       }
-    } else {
-      val live = t.showSegments().filter(_.status == SegmentedTable.SUCCESS)
+    } else
       ColumnExpr.parquetRelation(sqlContext.sparkSession,
-        live.map(s => s"${t.root}/segment_${s.id}"), t.schema)
-    }
+        t.liveSegmentPaths.map(_.toString), t.schema)
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,

@@ -418,7 +418,7 @@ private[graft] class GraftV2Table(ident: Identifier, tablePath: String,
   private def spark: SparkSession = SparkSession.active
   private def open(): SegmentedTable = SegmentedTable.open(spark, tablePath)
 
-  /** The live segment-dir paths a stats fold may reason over, exposed
+  /** The live segment scan a stats fold may reason over, exposed
     * for [[graft.mv.StatsAggFromCatalog]]'s PRE-pushdown interception
     * (extension-injected optimizer rules run before V2 scan pushdown,
     * so the HYBRID fold — which the builder's all-or-nothing pushed-
@@ -427,10 +427,10 @@ private[graft] class GraftV2Table(ident: Identifier, tablePath: String,
     * defaults-bearing tables (their reads coalesce declared defaults
     * over physical NULLs, which raw segment stats know nothing about).
     */
-  private[graft] def foldSnapshotPaths: Option[Seq[String]] = {
+  private[graft] def foldSnapshot: Option[SegmentedTable.SegmentScan] = {
     val t = open()
     if (asOfVersion.nonEmpty || t.hasDeclaredDefaults) None
-    else Some(t.liveSegmentSnapshot._2.map(_.toString.stripPrefix("file:")))
+    else Some(t.liveScan)
   }
 
   override def name(): String =

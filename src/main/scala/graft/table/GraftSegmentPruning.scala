@@ -1,7 +1,5 @@
 package graft.table
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -17,13 +15,15 @@ import org.apache.spark.sql.graftbridge.ColumnExpr
   * driver-side block pruning (CarbonInputFormat.getSplits BTree
   * lookup feeding CarbonQueryRDD partitions).
   *
-  * Shape: `Filter(cond, LogicalRelation(parquet over segment_N dirs))`
-  * where every root path is a `segment_N` child of one table root that
-  * has graft metadata. The relation is swapped for one over only the
-  * surviving segments (same schema, SAME output attributes, so the
-  * rest of the plan is untouched); the Filter stays for exact row
-  * semantics — min/max pruning is conservative, Parquet row-group
-  * stats prune further inside the scan.
+  * Shape: `Filter(cond, LogicalRelation(parquet))` whose relation
+  * [[SegmentedTable.scanOf]] recognizes as a segment scan of one graft
+  * table, on any Hadoop scheme; a read with file-level filter options
+  * is not one, since rebuilding it over the survivors would drop the
+  * options. The relation is swapped for one over only the surviving
+  * segments (same schema, SAME output attributes, so the rest of the
+  * plan is untouched); the Filter stays for exact row semantics —
+  * min/max pruning is conservative, Parquet row-group stats prune
+  * further inside the scan.
   *
   * Cost: one status-file read per candidate (filter, graft-relation)
   * pair per optimization pass — driver-side, kilobyte-scale, the same
@@ -57,15 +57,13 @@ object GraftSegmentPruning {
 case class GraftSegmentPruning(spark: SparkSession) extends Rule[LogicalPlan] {
   spark.conf.set(GraftSegmentPruning.Marker, "true")
 
-  private val segRe = "segment_(\\d+)".r
-
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case f @ Filter(cond, l: LogicalRelation) if !l.isStreaming =>
       l.relation match {
         case h: HadoopFsRelation =>
-          tableRootOf(h) match {
-            case Some(root) =>
-              val t = SegmentedTable.open(spark, root)
+          SegmentedTable.scanOf(spark, h) match {
+            case Some(scan) =>
+              val t = scan.table
               // prune WITHIN the relation's snapshot: look up catalog
               // stats for exactly the segment ids the relation already
               // references (whatever their current status — COMPACTED/
@@ -74,13 +72,11 @@ case class GraftSegmentPruning(spark: SparkSession) extends Rule[LogicalPlan] {
               // keeps returning its snapshot's rows. An id no longer
               // in the catalog has no stats → kept, conservative.
               val byId = t.status.segments.map(m => m.id -> m).toMap
-              val referenced = h.location.rootPaths
-                .flatMap(p => idOf(p.getName).flatMap(byId.get))
-              val survivors = t.pruneAmong(referenced, cond)
+              val survivors = t.pruneAmong(scan.ids.flatMap(byId.get), cond)
               val survivorIds = survivors.map(_.id).toSet
-              val keep = h.location.rootPaths.filter(p =>
-                idOf(p.getName).forall(id =>
-                  !byId.contains(id) || survivorIds.contains(id)))
+              val keep = h.location.rootPaths.zip(scan.ids).filter {
+                case (_, id) => !byId.contains(id) || survivorIds.contains(id)
+              }
               // exact-filter elision (the rule-path twin of the V2
               // catalog's trichotomy): when every kept path is a
               // catalog-known segment PROVEN all-in — every row
@@ -92,9 +88,9 @@ case class GraftSegmentPruning(spark: SparkSession) extends Rule[LogicalPlan] {
               // directly). Conservative: one unknown id or one
               // unproven survivor keeps the Filter.
               val exact = keep.nonEmpty &&
-                keep.forall(p => idOf(p.getName).exists(byId.contains)) &&
+                keep.forall { case (_, id) => byId.contains(id) } &&
                 t.provenAllIn(survivors, cond)
-              if (keep.length == h.location.rootPaths.length) {
+              if (keep.length == scan.ids.length) {
                 if (exact) l else f
               } else if (keep.isEmpty)
                 // nothing can match: collapse to an empty relation with
@@ -102,7 +98,7 @@ case class GraftSegmentPruning(spark: SparkSession) extends Rule[LogicalPlan] {
                 Filter(cond, LocalRelation(l.output))
               else {
                 val rel = ColumnExpr.parquetRelation(spark,
-                  keep.map(_.toString), t.schema)
+                  keep.map(_._1.toString), t.schema)
                 val pruned = l.copy(relation = rel)
                 if (exact) pruned else Filter(cond, pruned)
               }
@@ -110,21 +106,5 @@ case class GraftSegmentPruning(spark: SparkSession) extends Rule[LogicalPlan] {
           }
         case _ => f
       }
-  }
-
-  private def idOf(dirName: String): Option[Int] = dirName match {
-    case segRe(n) => Some(n.toInt)
-    case _ => None
-  }
-
-  /** All root paths must be segment dirs of ONE graft table root. */
-  private def tableRootOf(h: HadoopFsRelation): Option[String] = {
-    val paths = h.location.rootPaths
-    if (paths.isEmpty || !paths.forall(p => idOf(p.getName).isDefined)) return None
-    val parents = paths.map(_.getParent).distinct
-    if (parents.length != 1) return None
-    val root = parents.head.toUri.getPath
-    if (Files.exists(Paths.get(root, "_meta", "status.json"))) Some(root)
-    else None
   }
 }

@@ -768,12 +768,21 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
 
   /** Current live segment directories — the surface
     * [[graft.mv.AggTables]] lists for MV-over-segmented-table bases
-    * and [[graft.mv.AggTableRewrite]] validates multi-path scans
-    * against (a scan is rewritable only when it reads exactly this
-    * set).
+    * and `format("graft")` reads.
     */
   private[graft] def liveSegmentPaths: Seq[Path] =
     liveSegments.map(s => segmentDir(s.id))
+
+  /** The current live set as a scan of this table — what a catalog
+    * relation reads, and what [[graft.mv.AggTableRewrite]] requires a
+    * segmented scan to equal before it rewrites.
+    */
+  private[graft] def liveScan: SegmentScan =
+    new SegmentScan(root, liveSegments.map(_.id), this)
+
+  /** The directories of segments `ids`, in order. */
+  private[graft] def segmentPaths(ids: Seq[Int]): Seq[Path] =
+    ids.map(segmentDir)
 
   /** ONE status read → (metas, dirs) of the same snapshot — the V2
     * catalog scan builder needs the stats metas and the scan paths to
@@ -2194,6 +2203,51 @@ object SegmentedTable {
   val SUCCESS = "SUCCESS"
   val DELETED = "DELETED"
   val COMPACTED = "COMPACTED"
+
+  /** A read of one graft table's segment directories: the table root,
+    * the segment ids the read names (in its path order, duplicates
+    * kept) and the table, opened on first use.
+    */
+  private[graft] final class SegmentScan(val root: Path, val ids: Seq[Int],
+                                         openTable: => SegmentedTable) {
+    lazy val table: SegmentedTable = openTable
+  }
+
+  /** A segment directory name as the table writes it (no leading zeros). */
+  private val SegmentDirName = "segment_(0|[1-9][0-9]*)".r
+
+  /** The one reader of the segment-directory layout, behind every rule
+    * that reasons from the catalog: `rootPaths` is a segment scan iff
+    * every path is `<root>/segment_N` of ONE root that holds a graft
+    * table. Paths compare as Hadoop Paths (parents spelled with and
+    * without a scheme are qualified first) and `_meta/status.json` is
+    * probed through the path's own FileSystem, so any scheme works. A
+    * read with a file-level filter option (glob, mtime bounds,
+    * recursive lookup) sees a SUBSET of the segments' files, which the
+    * catalog does not describe, so it is never a segment scan.
+    */
+  private[graft] def scanOf(spark: SparkSession, rootPaths: Seq[Path],
+                            optionKeys: Iterable[String]): Option[SegmentScan] = {
+    val ids = rootPaths.flatMap(_.getName match {
+      case SegmentDirName(n) => n.toIntOption
+      case _ => None
+    })
+    if (ids.isEmpty || ids.size != rootPaths.size ||
+        graft.mv.AggTables.hasFileFilterKeys(optionKeys)) return None
+    val parents = rootPaths.map(_.getParent).distinct
+    (if (parents.size == 1) parents
+     else parents.map(p => new Path(TableIO.qualified(p))).distinct) match {
+      case Seq(root) if exists(root.toString) =>
+        Some(new SegmentScan(root, ids, open(spark, root.toString)))
+      case _ => None
+    }
+  }
+
+  /** [[scanOf]] over a V1 file relation's root paths and read options. */
+  private[graft] def scanOf(spark: SparkSession,
+      h: org.apache.spark.sql.execution.datasources.HadoopFsRelation)
+      : Option[SegmentScan] =
+    scanOf(spark, h.location.rootPaths, h.options.keySet)
 
   /** Bound on concurrent per-segment staging jobs during broad COW
     * DML (delete/update/merge). The stage writes are independent

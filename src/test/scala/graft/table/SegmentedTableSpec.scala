@@ -238,6 +238,107 @@ class SegmentedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(filtersOf(df).nonEmpty, df.queryExecution.optimizedPlan.toString)
   }
 
+  /** Four segments of three part files each under
+    * [[FaultFileSystem.localRoot]] (so `faultfs:` reaches them too):
+    * segment i holds ids i*1000 until (i+1)*1000. The live segment
+    * dirs as the table spells them.
+    */
+  private lazy val fourSegDirs: Seq[String] = {
+    val base = Files.createTempDirectory(Paths.get(FaultFileSystem.localRoot), "four")
+    val t = SegmentedTable.create(spark, base.resolve("t").toString, spark.range(0).schema)
+    (0 until 4).foreach(i => t.load(spark.range(i * 1000L, (i + 1) * 1000L, 1, 3).toDF()))
+    t.liveSegmentPaths.map(_.toString)
+  }
+
+  private def relationsOf(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.datasources.HadoopFsRelation] =
+    df.queryExecution.optimizedPlan.collect {
+      case org.apache.spark.sql.execution.datasources.LogicalRelation(
+          h: org.apache.spark.sql.execution.datasources.HadoopFsRelation, _, _, _, _) => h
+    }
+
+  private def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.collect().map(_.getLong(0)).sorted.toSeq
+
+  test("optimizer rule keeps a file-filtered read's rows: a globbed segment read answers like plain Spark") {
+    val dirs = fourSegDirs
+    // the first part file of every segment, named file by file: not a
+    // segment scan, so this is plain Spark's answer
+    val firstParts = dirs.flatMap(d => Files.list(Paths.get(d)).toArray.map(_.toString)
+      .filter(_.contains("/part-00000")))
+    assert(firstParts.size == 4)
+    val expected = ids(spark.read.parquet(firstParts: _*).where("id >= 1000"))
+    assert(expected.nonEmpty && expected.size < 3000)
+    val globbed = spark.read.option("pathGlobFilter", "part-00000*")
+      .parquet(dirs: _*).where("id >= 1000")
+    assert(globbed.count() == expected.size)
+    assert(ids(globbed) == expected)
+  }
+
+  test("optimizer rule prunes segments read through a non-file: Hadoop scheme") {
+    FaultFileSystem.register(spark)
+    val dirs = fourSegDirs
+    val remote = dirs.map(FaultFileSystem.pathOf)
+    val pred = "id >= 2500"
+    val (df, calls) = FaultFileSystem.recording {
+      val df = spark.read.parquet(remote: _*).where(pred)
+      df.queryExecution.optimizedPlan
+      df
+    }
+    val kept = relationsOf(df).flatMap(_.location.rootPaths)
+    assert(kept.nonEmpty && kept.size < remote.size, s"kept: $kept")
+    assert(kept.forall(_.toUri.getScheme == FaultFileSystem.Scheme), s"kept: $kept")
+    // the table was found through the scheme's own FileSystem
+    assert(calls.exists(_._2.toString.endsWith("/_meta/status.json")), calls)
+    assert(ids(df) == ids(spark.read.parquet(dirs: _*).where(pred)))
+    assert(ids(df) == (2500L until 4000L))
+  }
+
+  test("scanOf recognizes exactly the segment dirs of one graft table") {
+    FaultFileSystem.register(spark)
+    val dirs = fourSegDirs
+    val root = new org.apache.hadoop.fs.Path(dirs.head).getParent.toString
+    def scan(paths: Seq[String], optionKeys: Seq[String] = Nil) =
+      SegmentedTable.scanOf(spark, paths.map(new org.apache.hadoop.fs.Path(_)), optionKeys)
+    def idsOf(paths: Seq[String], optionKeys: Seq[String] = Nil) =
+      scan(paths, optionKeys).map(_.ids)
+
+    // unqualified, qualified, trailing-slash and mixed spellings; ids
+    // come back in path order
+    assert(idsOf(Seq(dirs(2), dirs(0))) == Some(Seq(2, 0)))
+    assert(idsOf(dirs.map("file:" + _)) == Some(Seq(0, 1, 2, 3)))
+    assert(idsOf(dirs.map(_ + "/")) == Some(Seq(0, 1, 2, 3)))
+    assert(idsOf(Seq("file:" + dirs(0), dirs(1))) == Some(Seq(0, 1)))
+    // another scheme: probed and opened through that scheme
+    val remote = scan(dirs.map(FaultFileSystem.pathOf))
+    assert(remote.map(_.ids) == Some(Seq(0, 1, 2, 3)))
+    assert(remote.get.root.toUri.getScheme == FaultFileSystem.Scheme)
+    assert(remote.get.table.countFromCatalog == 4000L)
+
+    // a non-segment sibling, a non-canonical name, no paths at all
+    assert(idsOf(dirs :+ s"$root/_meta").isEmpty)
+    assert(idsOf(Seq(s"$root/segment_01")).isEmpty)
+    assert(idsOf(Nil).isEmpty)
+    // segment dirs of two roots
+    val other = freshRoot("scanof_other")
+    SegmentedTable.create(spark, other, spark.range(0).schema).load(spark.range(3).toDF())
+    assert(idsOf(Seq(s"$other/segment_0")) == Some(Seq(0)))
+    assert(idsOf(Seq(dirs(0), s"$other/segment_0")).isEmpty)
+    // a root without _meta/status.json
+    val bare = Files.createTempDirectory("graft_scanof_bare")
+    Files.createDirectories(bare.resolve("segment_0"))
+    assert(idsOf(Seq(bare.resolve("segment_0").toString)).isEmpty)
+    // file-filter read options, as keys and on a real relation
+    assert(idsOf(dirs, Seq("pathGlobFilter")).isEmpty)
+    assert(idsOf(dirs, Seq("recursiveFileLookup")).isEmpty)
+    def relation(r: org.apache.spark.sql.DataFrameReader) =
+      relationsOf(r.parquet(dirs: _*)).head
+    assert(SegmentedTable.scanOf(spark, relation(spark.read)).map(_.ids) ==
+      Some(Seq(0, 1, 2, 3)))
+    assert(SegmentedTable.scanOf(spark,
+      relation(spark.read.option("modifiedBefore", "2999-01-01T00:00:00"))).isEmpty)
+  }
+
   test("date-column stats prune segments") {
     val root = freshRoot("dateprune")
     val withDate = li.withColumn("ship_date", to_date(col("l_shipdate")))
