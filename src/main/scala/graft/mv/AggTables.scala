@@ -1,35 +1,54 @@
 package graft.mv
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
-import org.apache.spark.sql.graftbridge.ColumnExpr
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.json4s._
 import org.json4s.jackson.Serialization
 
+import graft.table.{SegmentedTable, SegmentMeta}
 import graft.table.SegmentedTable.SegmentScan
 
 /** One registered aggregate table: a parquet rollup of `basePath`
   * grouped by `groupCols`, holding pre-aggregated measures.
   * `measures` maps (func, baseColumn) → MV column name, where func ∈
   * sum | min | max and the implicit row count lives in `countCol`.
-  */
-/** `coveredFiles` records the base data-file listing entries
-  * (name:length:mtime) the rollup aggregates — the incremental-refresh
-  * watermark. Old catalogs without the field deserialize to Nil, which
-  * simply forces the first refresh to be a full rebuild.
+  *
+  * The entry alone decides whether the rollup can serve an aggregate
+  * and whether it is fresh, so [[AggTableRewrite]] touches the
+  * rollup's files only to build the relation it returns:
+  *  - `schema`: the rollup's output schema (StructType JSON), stamped
+  *    by every build and refresh; the rewrite reads the rollup with it
+  *    and never infers one.
+  *  - `liveStamp`: for a segmented-table base, the
+  *    [[AggTables.stampOf]] of the live segment set the rollup
+  *    aggregates, taken from the same status read whose segment
+  *    directories the build listed. Empty for a plain-directory base.
+  *  - `fingerprint`: the digest of the base's data-file listing — the
+  *    freshness test of a plain-directory base.
+  *  - `coveredFiles`: the listing entries (path:length:mtime) the
+  *    rollup aggregates — the incremental-refresh watermark.
+  * Entries written before a field existed read it as empty: no
+  * `coveredFiles` makes the next refresh a full rebuild, and no
+  * `schema` or `liveStamp` leaves the rollup unused until one refresh
+  * stamps them.
   */
 case class AggTableMeta(name: String, basePath: String, mvPath: String,
                         groupCols: List[String],
                         measures: List[MeasureMeta], countCol: String,
                         fingerprint: String = "",
-                        coveredFiles: List[String] = Nil)
+                        coveredFiles: List[String] = Nil,
+                        schema: String = "",
+                        liveStamp: String = "")
 /** cntCol: for sum measures, the MV column holding COUNT(baseCol)
   * (non-null count — required for exact AVG rewrites); empty otherwise.
   */
@@ -85,9 +104,9 @@ object AggTables {
     // file exactly once. Scanning the directory instead would bake the
     // late file into the rollup while leaving it out of coveredFiles —
     // the next incremental refresh would double-count it.
-    val statuses = listFiles(spark, basePath)
-    val entries = statuses.map(entryOf(_, normalize(basePath))).sorted
-    val coveredPaths = statuses.map(_.getPath.toString)
+    val listing = listBase(spark, basePath)
+    val entries = listing.files.map(entryOf(_, normalize(basePath))).sorted
+    val coveredPaths = listing.files.map(_.getPath.toString)
     // empty base: a segmented table (or bare dir) with no data files
     // yet — the reference workflow declares aggregate tables BEFORE
     // the first load, so register an empty rollup with the base
@@ -100,9 +119,11 @@ object AggTables {
         s"aggregate table $name: base $basePath has no data files and no table schema")
     // versioned build: the rollup lands in a brand-new directory and
     // the catalog pointer flips to it — see [[newVersionPath]]
-    rollup(src, groupCols, ms).write.mode("overwrite").parquet(mvPath)
+    val out = rollup(src, groupCols, ms)
+    out.write.mode("overwrite").parquet(mvPath)
     val meta = AggTableMeta(name, normalize(basePath), mvPath, groupCols.toList,
-      ms, "cnt_rows", digest(entries), entries.toList)
+      ms, "cnt_rows", digest(entries), entries.toList,
+      storedSchema(out), listing.liveStamp)
     writeMeta(dir, name, meta)
     sweepOldVersions(dir, name, Set(mvPath) ++ prevPath)
     meta
@@ -169,14 +190,16 @@ object AggTables {
     // the noop path instead of re-merging the same delta
     val meta = registered(spark).find(_.name == name)
       .getOrElse(throw new IllegalArgumentException(s"no MV named $name"))
-    val currentStatuses = listFiles(spark, meta.basePath)
-    val current = currentStatuses.map(entryOf(_, meta.basePath)).sorted
+    val listing = listBase(spark, meta.basePath)
+    val current = listing.files.map(entryOf(_, meta.basePath)).sorted
     val covered = meta.coveredFiles.toSet
     // a missing rollup (e.g. a crash inside a previous refresh's swap
     // window) must self-heal with a full rebuild, never an
-    // incremental merge against nothing
+    // incremental merge against nothing; an entry without a stored
+    // schema (written before the field existed) is rebuilt so that
+    // no path ever infers the rollup's schema
     val fullRebuild = covered.isEmpty || !covered.subsetOf(current.toSet) ||
-      !graft.table.TableIO.exists(new Path(meta.mvPath))
+      meta.schema.isEmpty || !graft.table.TableIO.exists(new Path(meta.mvPath))
     if (fullRebuild)
       (createLocked(spark, meta.name, meta.basePath, meta.groupCols,
         meta.measures.map(m => (m.func, m.baseCol))), "full")
@@ -185,14 +208,14 @@ object AggTables {
       val dir = catalogDir(spark)
       if (delta.isEmpty) {
         val stamped = meta.copy(fingerprint = digest(current),
-          coveredFiles = current.toList)
+          coveredFiles = current.toList, liveStamp = listing.liveStamp)
         writeMeta(dir, name, stamped)
         (stamped, "noop")
       } else {
-        val deltaPaths = currentStatuses
+        val deltaPaths = listing.files
           .filterNot(st => covered.contains(entryOf(st, meta.basePath)))
           .map(_.getPath.toString)
-        val old = spark.read.parquet(meta.mvPath)
+        val old = spark.read.schema(schemaOf(meta)).parquet(meta.mvPath)
         val deltaAgg = rollup(spark.read.parquet(deltaPaths: _*),
           meta.groupCols, meta.measures)
         val mergeAggs = meta.measures.flatMap {
@@ -219,7 +242,8 @@ object AggTables {
         val newPath = newVersionPath(dir, name)
         remerged.write.mode("overwrite").parquet(newPath)
         val stamped = meta.copy(mvPath = newPath,
-          fingerprint = digest(current), coveredFiles = current.toList)
+          fingerprint = digest(current), coveredFiles = current.toList,
+          schema = storedSchema(remerged), liveStamp = listing.liveStamp)
         writeMeta(dir, name, stamped)
         sweepOldVersions(dir, name, Set(newPath, meta.mvPath))
         (stamped, "incremental")
@@ -329,38 +353,88 @@ object AggTables {
       "recursivefilelookup").exists(keys.contains)
   }
 
-  /** Staleness guard: digest of the base directory's data-file listing
-    * (name, length, modtime). Any append/overwrite/compaction changes
-    * it, which disables the rewrite until refresh(). One driver-side
-    * directory listing — same cost class as Spark's own file-index
-    * refresh, independent of data volume.
+  /** The data-file listing digest (name, length, modtime) of a base —
+    * what a plain-directory base's rollup records as `fingerprint` and
+    * [[isFresh]] compares: any append, overwrite or compaction changes
+    * it. One driver-side listing per data directory (for a segmented
+    * base, per live segment directory), independent of data volume.
     */
   def fingerprint(spark: SparkSession, basePath: String): String =
-    digest(listEntries(spark, basePath))
+    digest(listBase(spark, basePath).files.map(entryOf(_, normalize(basePath))).sorted)
+
+  /** Whether `meta`'s rollup still answers exactly for its base — the
+    * one freshness test behind the rewrite, the `fresh` column of
+    * `SHOW GRAFT AGGREGATE TABLES` and the q40 gate. A segmented-table
+    * base is fresh iff its current live segment set has the stamp the
+    * rollup recorded: one status read, cached by content identity, and
+    * no listing. A plain-directory base is fresh iff its listing still
+    * has the recorded fingerprint. An entry without a stored schema or
+    * stamp (written before those fields existed) is never fresh; one
+    * refresh stamps it.
+    */
+  def isFresh(spark: SparkSession, meta: AggTableMeta): Boolean =
+    isFreshAgainst(spark, meta, {
+      val base = normalize(meta.basePath)
+      if (!SegmentedTable.exists(base)) None
+      else Some(SegmentedTable.open(spark, base).liveSegmentSnapshot._1)
+    })
+
+  /** [[isFresh]] given the base table's current live segments (None:
+    * the base is not a segmented table), for a caller that has them.
+    */
+  private[mv] def isFreshAgainst(spark: SparkSession, meta: AggTableMeta,
+                                 live: => Option[Seq[SegmentMeta]]): Boolean =
+    meta.schema.nonEmpty && (
+      if (meta.liveStamp.isEmpty) fingerprint(spark, meta.basePath) == meta.fingerprint
+      else live.exists(stampOf(_) == meta.liveStamp))
+
+  /** The identity of a segmented table's live set: every segment's id
+    * with its `createdAt`. Segment directories are immutable and ids
+    * are never reused within one table, so an equal stamp means the
+    * same rows. The creation times tell a table dropped and recreated
+    * at the same root (ids and the commit version restart there) from
+    * the one the rollup was built over. Never empty.
+    */
+  private[mv] def stampOf(live: Seq[SegmentMeta]): String =
+    "segments:" + digest(live.map(s => s"${s.id}:${s.createdAt}").sorted)
+
+  /** A rollup's output schema as its catalog entry stores it: every
+    * column nullable, as Parquet reads it back.
+    */
+  private def storedSchema(rollup: DataFrame): String =
+    StructType(rollup.schema.fields.map(_.copy(nullable = true))).json
+
+  /** The rollup's stored output schema. */
+  private[mv] def schemaOf(meta: AggTableMeta): StructType =
+    DataType.fromJson(meta.schema).asInstanceOf[StructType]
+
+  /** A base's data files, and for a segmented-table base the
+    * [[stampOf]] of the live set they belong to (empty otherwise).
+    */
+  private case class BaseListing(files: Seq[FileStatus], liveStamp: String)
 
   /** The base's data files — a single-file base (a bare .parquet
     * path) lists as itself, a directory base as its non-hidden files,
     * and a SEGMENTED-TABLE root as the data files of its current live
-    * segments (read from the table catalog, so retired/staging/index
-    * dirs never leak into the rollup or the fingerprint).
+    * segments, read from the table catalog (so retired/staging/index
+    * dirs never leak into the rollup or the fingerprint) together with
+    * the stamp of that same live set: ONE status read gives both.
     */
-  private def listFiles(spark: SparkSession,
-      basePath: String): Seq[org.apache.hadoop.fs.FileStatus] = {
-    import org.apache.hadoop.fs.Path
+  private def listBase(spark: SparkSession, basePath: String): BaseListing = {
     val base = normalize(basePath)
     val p = new Path(base)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return Nil
-    def filesIn(dir: Path): Seq[org.apache.hadoop.fs.FileStatus] =
+    if (!fs.exists(p)) return BaseListing(Nil, "")
+    def filesIn(dir: Path): Seq[FileStatus] =
       if (!fs.exists(dir)) Nil
       else fs.listStatus(dir).filter { st =>
         val n = st.getPath.getName
         st.isFile && !n.startsWith("_") && !n.startsWith(".")
       }.toSeq
-    if (graft.table.SegmentedTable.exists(base))
-      graft.table.SegmentedTable.open(spark, base).liveSegmentPaths
-        .flatMap(seg => filesIn(new Path(seg.toString)))
-    else filesIn(p)
+    if (SegmentedTable.exists(base)) {
+      val (live, dirs) = SegmentedTable.open(spark, base).liveSegmentSnapshot
+      BaseListing(dirs.flatMap(filesIn), stampOf(live))
+    } else BaseListing(filesIn(p), "")
   }
 
   /** Listing entry = "base-relative-path:length:mtime" — the unit the
@@ -382,10 +456,6 @@ object AggTables {
     s"$rel:${st.getLen}:${st.getModificationTime}"
   }
 
-  /** Data-file listing as sorted entries (see [[entryOf]]). */
-  private def listEntries(spark: SparkSession, basePath: String): Seq[String] =
-    listFiles(spark, basePath).map(entryOf(_, normalize(basePath))).sorted
-
   private def digest(entries: Seq[String]): String =
     if (entries.isEmpty) "missing"
     else java.security.MessageDigest.getInstance("MD5")
@@ -401,6 +471,20 @@ object AggTables {
   * a subset of a registered MV's dims and whose aggregates are
   * derivable from its measures → same Aggregate over the (tiny) MV.
   * Injected with `injectOptimizerRule(AggTableRewrite(_))`.
+  *
+  * The optimizer calls the rule for every plan holding an aggregate,
+  * several times per query, so it decides cheapest-first and stops at
+  * the first no:
+  *  1. derivability, from each MV's catalog entry alone — an aggregate
+  *     no registered MV can derive touches no file;
+  *  2. the scan reads the MV's base ([[baseCandidates]]), and a
+  *     segment scan reads exactly its table's current live set;
+  *  3. an ungrouped aggregate the catalog stats fold in full is left to
+  *     that fold ([[StatsAggFromCatalog.foldsInFull]]);
+  *  4. freshness ([[AggTables.isFresh]]) — for a segmented base the
+  *     status read of step 2, no listing;
+  *  5. the rollup relation, read with the stored schema: one directory
+  *     listing and no Spark job.
   */
 object AggTableRewrite {
   private[mv] val Marker = "spark.graft.rule.aggTableRewrite"
@@ -429,56 +513,66 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     // bail before ANY catalog I/O: registered() lists + parses every
-    // MV meta file, and the optimizer invokes this rule for every
-    // query (more than once in a fixed-point batch) — a plan with no
-    // Aggregate can never rewrite
+    // MV meta file — a plan with no Aggregate can never rewrite
     if (!plan.exists(_.isInstanceOf[Aggregate])) return plan
     val mvs = AggTables.registered(spark)
     if (mvs.isEmpty) return plan
-    // the BASE-LISTING fingerprint is cached per base path (one
-    // driver listing per distinct base per query plan); the mvPath
-    // existence probe and the fingerprint comparison are evaluated
-    // PER MV (ADVICE r6: a verdict cached per base path would let a
-    // stale or mid-swap MV inherit a fresh sibling's verdict). The
-    // existence probe makes a refresh's swap window (or a crashed
-    // refresh) fail-soft: queries fall back to the base scan instead
-    // of planning against a missing rollup.
-    val baseFp = scala.collection.mutable.Map.empty[String, String]
-    def isFresh(mv: AggTableMeta): Boolean =
-      graft.table.TableIO.exists(
-        new org.apache.hadoop.fs.Path(mv.mvPath)) &&
-        baseFp.getOrElseUpdate(mv.basePath,
-          AggTables.fingerprint(spark, mv.basePath)) == mv.fingerprint
     plan.transformUp {
-      case agg @ Aggregate(grouping, aggExprs, child, _) =>
-        baseCandidates(child).flatMap { case (base, segmented) =>
-          // try EVERY fresh MV on this base, first servable wins — a
-          // base can carry several rollups (different dims) and the
-          // listing-order-first one failing to serve must not mask a
-          // sibling that matches exactly
-          mvs.filter(_.basePath == base).filter(isFresh)
-            .filter(_ => segmented.forall(scanIsCurrentLive))
-            .flatMap(mv => rewrite(agg, mv))
-            .headOption
-        }.headOption.getOrElse(agg)
+      case agg: Aggregate =>
+        val derivable = mvs.filter(mv => mv.schema.nonEmpty &&
+          derive(agg, mv, DataTypeUtils.toAttributes(AggTables.schemaOf(mv))).isDefined)
+        if (derivable.isEmpty) agg
+        else baseCandidates(agg.child).iterator.flatMap { case (base, scan) =>
+          // a segmented base's rollup serves segment scans only (a
+          // plain read of the table root also sees retired segments)
+          serve(agg, derivable.filter(m =>
+            m.basePath == base && m.liveStamp.nonEmpty == scan.isDefined), scan)
+        }.nextOption().getOrElse(agg)
     }
+  }
+
+  /** `agg` over the first of `mvs` (derivable, on the scan's base) that
+    * is fresh — trying EVERY one, since a base can carry several
+    * rollups and the listing-order-first one failing to serve must not
+    * mask a sibling that matches exactly. Freshness is checked per MV:
+    * a verdict shared per base would let a stale MV inherit a fresh
+    * sibling's.
+    */
+  private def serve(agg: Aggregate, mvs: Seq[AggTableMeta],
+                    scan: Option[SegmentScan]): Option[LogicalPlan] = {
+    if (mvs.isEmpty) return None
+    // one status read serves the live-set check, the fold check and
+    // every stamp comparison
+    lazy val live = scan.map(_.table.liveSegmentSnapshot._1)
+    val servable = scan.forall { s =>
+      val ids = live.get.map(_.id)
+      ids.nonEmpty && s.ids.size == ids.size && s.ids.toSet == ids.toSet &&
+        !(agg.groupingExpressions.isEmpty &&
+          StatsAggFromCatalog.foldsInFull(live.get, agg.aggregateExpressions))
+    }
+    if (!servable) None
+    else mvs.iterator.filter(AggTables.isFreshAgainst(spark, _, live))
+      .flatMap(build(agg, _)).nextOption()
   }
 
   /** child must be a bare scan (optionally behind an attribute-only
     * Project) with no Filter (a residual filter on non-dim columns
-    * would make the rollup wrong). Two admissible base candidates,
-    * tried in order:
+    * would make the rollup wrong). Admissible base candidates:
     *  - exactly one parquet location → base = that path;
     *  - a segment scan of one graft table
     *    ([[graft.table.SegmentedTable.scanOf]], possibly of a single
-    *    segment) → base = the table root; [[scanIsCurrentLive]] then
-    *    verifies the scan reads exactly the table's CURRENT live
-    *    segments, so a time-travel read or a reader's stale snapshot
-    *    is never rewritten.
-    * File-filtered scans (glob/mtime/recursive options) are neither:
-    * they read a subset of the base's files and the full rollup would
-    * overcount. Returns (candidate base, the segment scan to
-    * live-check, if any).
+    *    segment) → base = the table root; [[serve]] then requires the
+    *    scan to read exactly the table's CURRENT live segments, so a
+    *    time-travel read or a reader's stale snapshot is never
+    *    rewritten;
+    *  - a catalog relation (`graft.default.t`, before V2 scan
+    *    pushdown) → its table's live scan
+    *    ([[graft.sql.GraftV2Table.foldSnapshot]]), which is None for a
+    *    time-travel read and for a table with declared defaults.
+    * File-filtered scans (glob/mtime/recursive options) are none of
+    * these: they read a subset of the base's files and the full rollup
+    * would overcount. Returns (candidate base, the segment scan, if
+    * any).
     */
   private def baseCandidates(p: LogicalPlan): Seq[(String, Option[SegmentScan])] = p match {
     case l: LogicalRelation => l.relation match {
@@ -487,8 +581,13 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
           case Seq(rp) => Seq((AggTables.normalize(rp.toString), None))
           case _ => Nil
         }
-        exact ++ graft.table.SegmentedTable.scanOf(spark, h)
+        exact ++ SegmentedTable.scanOf(spark, h)
           .map(s => (AggTables.normalize(s.root.toString), Some(s)))
+      case _ => Nil
+    }
+    case r: DataSourceV2Relation => r.table match {
+      case t: graft.sql.GraftV2Table =>
+        t.foldSnapshot.map(s => (AggTables.normalize(s.root.toString), Some(s))).toSeq
       case _ => Nil
     }
     case Project(exprs, child) if exprs.forall(_.isInstanceOf[Attribute]) =>
@@ -496,30 +595,33 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     case _ => Nil
   }
 
-  /** A segment scan is rewritable only when it reads exactly the
-    * table's current live segment set.
+  /** `agg` over `mv`'s rollup. Fail-SOFT on the swap window: a
+    * refresh can retire mvPath between the freshness check and this
+    * listing, and the query then keeps its base scan; the next plan
+    * re-checks.
     */
-  private def scanIsCurrentLive(scan: SegmentScan): Boolean = {
-    val live = scan.table.liveScan.ids.toSet
-    live.nonEmpty && scan.ids.toSet == live
+  private def build(agg: Aggregate, mv: AggTableMeta): Option[LogicalPlan] = {
+    val rollup =
+      try spark.read.schema(AggTables.schemaOf(mv)).parquet(mv.mvPath)
+        .queryExecution.analyzed
+      catch { case scala.util.control.NonFatal(_) => return None }
+    derive(agg, mv, rollup.output).map { case (g, a) => Aggregate(g, a, rollup) }
   }
 
-  private def rewrite(agg: Aggregate, mv: AggTableMeta): Option[LogicalPlan] = {
+  /** The grouping and output expressions of `agg` re-derived over the
+    * rollup columns `out`; None when `mv` cannot serve `agg`. Pure: the
+    * rule first calls it with the stored schema's attributes to decide,
+    * then with the built relation's.
+    */
+  private def derive(agg: Aggregate, mv: AggTableMeta, out: Seq[Attribute])
+      : Option[(Seq[Expression], Seq[NamedExpression])] = {
+    val mvAttr: Map[String, Attribute] = out.map(a => a.name -> a).toMap
     // grouping must be plain columns, all present in the MV dims
     val groupNames = agg.groupingExpressions.map {
       case a: Attribute => a.name
       case _ => return None
     }
-    if (!groupNames.forall(mv.groupCols.contains)) return None
-
-    // fail-SOFT on the swap window: isFresh's existence probe and this
-    // read are not atomic — a refresh's two-rename swap can empty
-    // mvPath in between. Falling back to the base scan keeps the query
-    // alive; the next plan re-probes.
-    val mvPlan =
-      try spark.read.parquet(mv.mvPath).queryExecution.analyzed
-      catch { case scala.util.control.NonFatal(_) => return None }
-    val mvAttr: Map[String, Attribute] = mvPlan.output.map(a => a.name -> a).toMap
+    if (!groupNames.forall(n => mv.groupCols.contains(n) && mvAttr.contains(n))) return None
 
     // map each output NamedExpression of the original aggregate
     val newGrouping = groupNames.map(mvAttr)
@@ -529,31 +631,33 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       case al @ Alias(a: Attribute, name) if groupNames.contains(a.name) =>
         Alias(mvAttr(a.name), name)(exprId = al.exprId)
       case al @ Alias(AggregateExpression(fn, Complete, false, None, _), name) =>
+        def measure(func: String, c: String): Option[MeasureMeta] =
+          mv.measures.find(m => m.func == func && m.baseCol == c &&
+            mvAttr.contains(m.mvCol))
+        // COUNT(col) and AVG(col) need the non-null count the rollup
+        // materializes beside every sum measure
+        def counted(c: String): Option[MeasureMeta] =
+          measure("sum", c).filter(m => m.cntCol.nonEmpty && mvAttr.contains(m.cntCol))
         val repl: Option[Expression] = fn match {
           case Sum(a: Attribute, _) =>
-            mv.measures.find(m => m.func == "sum" && m.baseCol == a.name)
-              .map(m => sumOf(mvAttr(m.mvCol)))
+            measure("sum", a.name).map(m => sumOf(mvAttr(m.mvCol)))
           case Min(a: Attribute) =>
-            mv.measures.find(m => m.func == "min" && m.baseCol == a.name)
+            measure("min", a.name)
               .map(m => AggregateExpression(Min(mvAttr(m.mvCol)), Complete, isDistinct = false))
           case Max(a: Attribute) =>
-            mv.measures.find(m => m.func == "max" && m.baseCol == a.name)
+            measure("max", a.name)
               .map(m => AggregateExpression(Max(mvAttr(m.mvCol)), Complete, isDistinct = false))
           case Count(Seq(Literal(1, _))) =>
-            Some(countOf(mvAttr(mv.countCol)))
-          // COUNT(col) = SUM of the per-group non-null counts the
-          // rollup materializes beside every sum measure
+            mvAttr.get(mv.countCol).map(countOf)
+          // COUNT(col) = SUM of the per-group non-null counts
           case Count(Seq(a: Attribute)) =>
-            mv.measures.find(m => m.func == "sum" && m.baseCol == a.name &&
-                m.cntCol.nonEmpty && mvAttr.contains(m.cntCol))
-              .map(m => countOf(mvAttr(m.cntCol)))
+            counted(a.name).map(m => countOf(mvAttr(m.cntCol)))
           // AVG(c) = SUM(sum_c) / SUM(cnt_c) — divides by the
           // non-null count of c, matching AVG's null semantics
           case Average(a: Attribute, _)
               if Seq("double", "long", "integer", "short", "byte")
                 .contains(a.dataType.typeName) =>
-            mv.measures.find(m => m.func == "sum" && m.baseCol == a.name &&
-                m.cntCol.nonEmpty && mvAttr.contains(m.cntCol)).map { m =>
+            counted(a.name).map { m =>
               Divide(
                 Cast(sumOf(mvAttr(m.mvCol)), org.apache.spark.sql.types.DoubleType),
                 Cast(sumOf(mvAttr(m.cntCol)), org.apache.spark.sql.types.DoubleType))
@@ -575,7 +679,7 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         }
       case _ => return None
     }
-    Some(Aggregate(newGrouping, newAggExprs, mvPlan))
+    Some((newGrouping, newAggExprs))
   }
 
   /** SUM over a partial column (sum-of-sums / sum-of-counts). */

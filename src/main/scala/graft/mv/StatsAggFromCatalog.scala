@@ -251,75 +251,6 @@ object StatsAggFromCatalog {
     case _ => throw new IllegalArgumentException(dt.sql)
   }
 
-  /** Idempotently append the rule to a session's experimental
-    * optimizations — the runtime path for sessions built without
-    * [[graft.sql.GraftSqlExtensions]] (Verify/Bench). Synchronized on
-    * the session: the check-then-append on the shared
-    * extraOptimizations var must not interleave with the other
-    * runtime appenders under Verify's parallel dump.
-    */
-  def ensureRegistered(s: SparkSession): Unit = {
-    s.sessionState.optimizer
-    s.synchronized {
-      if (!java.lang.Boolean.parseBoolean(s.conf.get(Marker, "false")))
-        s.experimental.extraOptimizations =
-          s.experimental.extraOptimizations :+ StatsAggFromCatalog(s)
-    }
-  }
-}
-
-case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
-  spark.conf.set(StatsAggFromCatalog.Marker, "true")
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case agg @ Aggregate(Nil, aggExprs, child, _) if servableShapes(aggExprs) =>
-      extract(child, None) match {
-        case Some((cond, scan, rel)) =>
-          answer(scan, cond, aggExprs) match {
-            case Some(FullFold(values)) =>
-              // the V2 builder's own pushed-aggregate LocalScan serves
-              // full folds on the pre-pushdown path — don't steal the
-              // ones it CAN serve (catalog plan pins and the thrift
-              // stats surface rely on its LocalScan); shapes beyond
-              // its foldOne (decimal SUM, AVG, cast-wrapped) are the
-              // rule's to serve
-              if (rel.deferFullFold &&
-                  aggExprs.forall(e => shapeOf(e).exists(builderServable))) agg
-              else LocalRelation(agg.output.map(_.asInstanceOf[Attribute]),
-                Seq(InternalRow(values: _*)))
-            case Some(h: HybridFold) => hybridPlan(agg, cond.get, rel, h)
-            case None => agg
-          }
-        case _ => agg
-      }
-    // GROUPED fold for segment-aligned group keys: when every group
-    // column is CONSTANT within each segment (identity-partitioned
-    // loads — one load per key value), `GROUP BY k` COUNT/MIN/MAX
-    // folds per segment group from the same catalog stats. Segments
-    // that cannot fold (non-constant keys, or a filter straddling
-    // them) go HYBRID: fold the provable segments' groups from
-    // metadata, scan only the rest, re-group over the union.
-    case agg @ Aggregate(groups, aggExprs, child, _)
-        if groups.nonEmpty && groups.forall(_.isInstanceOf[AttributeReference]) &&
-          groupedShapes(groups, aggExprs) =>
-      extract(child, None) match {
-        case Some((cond, scan, rel)) =>
-          answerGrouped(scan, cond,
-            groups.map(_.asInstanceOf[AttributeReference]), aggExprs) match {
-            case Some(GroupedFull(rows)) =>
-              if (rel.deferFullFold && aggShapesOf(aggExprs,
-                  groups.map(_.asInstanceOf[AttributeReference].exprId))
-                    .forall(builderServable)) agg
-              else LocalRelation(agg.output.map(_.asInstanceOf[Attribute]), rows)
-            case Some(h: GroupedHybrid) =>
-              hybridGroupedPlan(agg,
-                groups.map(_.asInstanceOf[AttributeReference]), cond, rel, h)
-            case None => agg
-          }
-        case _ => agg
-      }
-  }
-
   // ---- shape recognition ----
 
   private sealed trait Shape
@@ -452,6 +383,208 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
       case Alias(a: AttributeReference, _) => gids.contains(a.exprId)
       case e => shapeOf(e).isDefined
     }
+  }
+
+  /** Fold every requested shape over `segs`; None = some shape is not
+    * servable from these segments' recorded stats.
+    */
+  private def foldValues(segs: Seq[SegmentMeta],
+                         exprs: Seq[NamedExpression]): Option[Array[Any]] = {
+    val values = exprs.map(e => foldShape(segs, shapeOf(e).get))
+    if (values.exists(_.isEmpty)) None else Some(values.map(_.get).toArray)
+  }
+
+  /** Evaluate a DeclarativeAggregate's OWN evaluate expression with
+    * its buffer attributes bound to folded literals — the fold then
+    * serves exactly what Spark's final aggregation step computes from
+    * the same buffer (overflow / eval-mode / decimal-divide semantics
+    * verbatim, on this and every future Spark). Bails on any eval
+    * error (e.g. an ANSI overflow the real scan should raise itself)
+    * and on an unbound buffer attribute (an unexpected buffer layout).
+    */
+  private def serveDeclarative(
+      fn: org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate,
+      bind: Map[String, Literal]): Option[Any] =
+    try {
+      val expr = fn.evaluateExpression.transform {
+        case a: AttributeReference if bind.contains(a.name) => bind(a.name)
+      }
+      if (expr.exists(_.isInstanceOf[AttributeReference])) None
+      else Some(expr.eval(InternalRow.empty))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  private def internalLong(v: Any): Long = v match {
+    case b: Byte => b.toLong
+    case s: Short => s.toLong
+    case i: Int => i.toLong
+    case l: Long => l
+    case other => throw new IllegalArgumentException(String.valueOf(other))
+  }
+
+  private def foldShape(segs: Seq[SegmentMeta], sh: Shaped): Option[Any] = {
+    val inner: Option[Any] = sh.shape match {
+      case CountStar => Some(StatsAggFromCatalog.foldCountStar(segs): Any)
+      case CountCol(c) =>
+        StatsAggFromCatalog.foldNonNullCount(segs, c).map(v => v: Any)
+      case MinCol(c, dt) =>
+        StatsAggFromCatalog.foldMinMax(segs, c, dt, isMin = true)
+      case MaxCol(c, dt) =>
+        StatsAggFromCatalog.foldMinMax(segs, c, dt, isMin = false)
+      case SumCol(c, mode) => StatsAggFromCatalog.foldSum(segs, c, mode)
+      case SumDecimalCol(c, fn) =>
+        StatsAggFromCatalog.foldSumDecimalExact(segs, c).flatMap {
+          case None =>
+            serveDeclarative(fn, Map(
+              "sum" -> Literal(null, fn.dataType),
+              "isEmpty" -> Literal(true)))
+          case Some(total) =>
+            val rt = fn.dataType.asInstanceOf[DecimalType]
+            val dec = Decimal(total.bigDecimal)
+            // a total the result type cannot hold means the scan's own
+            // buffer would have overflowed — its eval-mode contract
+            // (ANSI throw / LEGACY null) must come from the real scan
+            if (!dec.changePrecision(rt.precision, rt.scale)) None
+            else serveDeclarative(fn, Map(
+              "sum" -> Literal(dec, fn.dataType),
+              "isEmpty" -> Literal(false)))
+        }
+      case AvgCol(c, fn) =>
+        StatsAggFromCatalog.foldNonNullCount(segs, c).flatMap { n =>
+          if (n == 0L) Some(null) // AVG over zero non-null values: NULL
+          else fn.aggBufferAttributes.find(_.name == "sum") match {
+            case None => None
+            case Some(sa) => fn.child.dataType match {
+              case _: DecimalType =>
+                StatsAggFromCatalog.foldSumDecimalExact(segs, c).flatMap {
+                  case Some(total) =>
+                    val st = sa.dataType.asInstanceOf[DecimalType]
+                    val dec = Decimal(total.bigDecimal)
+                    if (!dec.changePrecision(st.precision, st.scale)) None
+                    else serveDeclarative(fn, Map(
+                      "sum" -> Literal(dec, sa.dataType),
+                      "count" -> Literal(n)))
+                  case None => None // n > 0 yet no sum: inconsistent, bail
+                }
+              case it if graft.table.SegmentedTable.isIntegral(it) &&
+                  sa.dataType == DoubleType =>
+                // the 2^53 exactness bound (see AvgCol): below it every
+                // long→double cast and every intermediate addition the
+                // scan performs is exact in any order, so one conversion
+                // of the exact total equals the scan's buffer
+                StatsAggFromCatalog.foldSumExact(segs, c).flatMap {
+                  case Some(total) =>
+                    val mn = StatsAggFromCatalog.foldMinMax(segs, c, it, isMin = true)
+                    val mx = StatsAggFromCatalog.foldMinMax(segs, c, it, isMin = false)
+                    (mn, mx) match {
+                      case (Some(a), Some(b)) if a != null && b != null =>
+                        val maxAbs = Seq(a, b).map(v => BigInt(internalLong(v)).abs).max
+                        if (maxAbs * BigInt(n) < BigInt(1L << 53))
+                          serveDeclarative(fn, Map(
+                            "sum" -> Literal(total.toDouble, DoubleType),
+                            "count" -> Literal(n)))
+                        else None
+                      case _ => None
+                    }
+                  case None => None
+                }
+              case _ => None // double child: FP order-dependence, never fold
+            }
+          }
+        }
+      case CountDistinctCol(c, dt) =>
+        StatsAggFromCatalog.groupSegments(segs, Seq(c -> dt)).map(groups =>
+          groups.count(_._1.head != null).toLong: Any)
+    }
+    (inner, sh.cast) match {
+      // the plan's own Cast node applied driver-side over the folded
+      // value (Literal of the aggregate's type) — eval-mode/timezone
+      // semantics are the query's; an ANSI cast failure bails
+      case (Some(v), Some(c)) =>
+        try Some(c.withNewChildren(Seq(Literal(v, c.child.dataType))).eval(null))
+        catch { case scala.util.control.NonFatal(_) => None }
+      case _ => inner
+    }
+  }
+
+  /** Whether an UNFILTERED ungrouped aggregate over the live
+    * segments `segs` folds in full from their catalog stats — through
+    * this rule on the V1 path, through the V2 builder's pushed
+    * aggregate on the catalog path. [[AggTableRewrite]] leaves such an
+    * aggregate to the fold: answering from metadata beats scanning a
+    * rollup.
+    */
+  private[mv] def foldsInFull(segs: Seq[SegmentMeta],
+                              exprs: Seq[NamedExpression]): Boolean =
+    servableShapes(exprs) && foldValues(segs, exprs).isDefined
+
+  /** Idempotently append the rule to a session's experimental
+    * optimizations — the runtime path for sessions built without
+    * [[graft.sql.GraftSqlExtensions]] (Verify/Bench). Synchronized on
+    * the session: the check-then-append on the shared
+    * extraOptimizations var must not interleave with the other
+    * runtime appenders under Verify's parallel dump.
+    */
+  def ensureRegistered(s: SparkSession): Unit = {
+    s.sessionState.optimizer
+    s.synchronized {
+      if (!java.lang.Boolean.parseBoolean(s.conf.get(Marker, "false")))
+        s.experimental.extraOptimizations =
+          s.experimental.extraOptimizations :+ StatsAggFromCatalog(s)
+    }
+  }
+}
+
+case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
+  import StatsAggFromCatalog._
+  spark.conf.set(StatsAggFromCatalog.Marker, "true")
+
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case agg @ Aggregate(Nil, aggExprs, child, _) if servableShapes(aggExprs) =>
+      extract(child, None) match {
+        case Some((cond, scan, rel)) =>
+          answer(scan, cond, aggExprs) match {
+            case Some(FullFold(values)) =>
+              // the V2 builder's own pushed-aggregate LocalScan serves
+              // full folds on the pre-pushdown path — don't steal the
+              // ones it CAN serve (catalog plan pins and the thrift
+              // stats surface rely on its LocalScan); shapes beyond
+              // its foldOne (decimal SUM, AVG, cast-wrapped) are the
+              // rule's to serve
+              if (rel.deferFullFold &&
+                  aggExprs.forall(e => shapeOf(e).exists(builderServable))) agg
+              else LocalRelation(agg.output.map(_.asInstanceOf[Attribute]),
+                Seq(InternalRow(values: _*)))
+            case Some(h: HybridFold) => hybridPlan(agg, cond.get, rel, h)
+            case None => agg
+          }
+        case _ => agg
+      }
+    // GROUPED fold for segment-aligned group keys: when every group
+    // column is CONSTANT within each segment (identity-partitioned
+    // loads — one load per key value), `GROUP BY k` COUNT/MIN/MAX
+    // folds per segment group from the same catalog stats. Segments
+    // that cannot fold (non-constant keys, or a filter straddling
+    // them) go HYBRID: fold the provable segments' groups from
+    // metadata, scan only the rest, re-group over the union.
+    case agg @ Aggregate(groups, aggExprs, child, _)
+        if groups.nonEmpty && groups.forall(_.isInstanceOf[AttributeReference]) &&
+          groupedShapes(groups, aggExprs) =>
+      extract(child, None) match {
+        case Some((cond, scan, rel)) =>
+          answerGrouped(scan, cond,
+            groups.map(_.asInstanceOf[AttributeReference]), aggExprs) match {
+            case Some(GroupedFull(rows)) =>
+              if (rel.deferFullFold && aggShapesOf(aggExprs,
+                  groups.map(_.asInstanceOf[AttributeReference].exprId))
+                    .forall(builderServable)) agg
+              else LocalRelation(agg.output.map(_.asInstanceOf[Attribute]), rows)
+            case Some(h: GroupedHybrid) =>
+              hybridGroupedPlan(agg,
+                groups.map(_.asInstanceOf[AttributeReference]), cond, rel, h)
+            case None => agg
+          }
+        case _ => agg
+      }
   }
 
   /** The scan leaf a fold replaces. Each variant knows how to rebuild
@@ -593,15 +726,6 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
     else Some(scanned)
   }
 
-  /** Fold every requested shape over `segs`; None = some shape is not
-    * servable from these segments' recorded stats.
-    */
-  private def foldValues(segs: Seq[SegmentMeta],
-                         exprs: Seq[NamedExpression]): Option[Array[Any]] = {
-    val values = exprs.map(e => foldShape(segs, shapeOf(e).get))
-    if (values.exists(_.isEmpty)) None else Some(values.map(_.get).toArray)
-  }
-
   /** Unfiltered: fold over the whole scanned set. Filtered: prune to
     * the survivors, then — all survivors proven all-in → [[FullFold]];
     * a MIX of proven and straddling survivors → [[HybridFold]] (fold
@@ -722,118 +846,6 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
       case Alias(a: AttributeReference, _) if gid.contains(a.exprId) => None
       case e => shapeOf(e)
     }
-
-  /** Evaluate a DeclarativeAggregate's OWN evaluate expression with
-    * its buffer attributes bound to folded literals — the fold then
-    * serves exactly what Spark's final aggregation step computes from
-    * the same buffer (overflow / eval-mode / decimal-divide semantics
-    * verbatim, on this and every future Spark). Bails on any eval
-    * error (e.g. an ANSI overflow the real scan should raise itself)
-    * and on an unbound buffer attribute (an unexpected buffer layout).
-    */
-  private def serveDeclarative(
-      fn: org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate,
-      bind: Map[String, Literal]): Option[Any] =
-    try {
-      val expr = fn.evaluateExpression.transform {
-        case a: AttributeReference if bind.contains(a.name) => bind(a.name)
-      }
-      if (expr.exists(_.isInstanceOf[AttributeReference])) None
-      else Some(expr.eval(InternalRow.empty))
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  private def internalLong(v: Any): Long = v match {
-    case b: Byte => b.toLong
-    case s: Short => s.toLong
-    case i: Int => i.toLong
-    case l: Long => l
-    case other => throw new IllegalArgumentException(String.valueOf(other))
-  }
-
-  private def foldShape(segs: Seq[SegmentMeta], sh: Shaped): Option[Any] = {
-    val inner: Option[Any] = sh.shape match {
-      case CountStar => Some(StatsAggFromCatalog.foldCountStar(segs): Any)
-      case CountCol(c) =>
-        StatsAggFromCatalog.foldNonNullCount(segs, c).map(v => v: Any)
-      case MinCol(c, dt) =>
-        StatsAggFromCatalog.foldMinMax(segs, c, dt, isMin = true)
-      case MaxCol(c, dt) =>
-        StatsAggFromCatalog.foldMinMax(segs, c, dt, isMin = false)
-      case SumCol(c, mode) => StatsAggFromCatalog.foldSum(segs, c, mode)
-      case SumDecimalCol(c, fn) =>
-        StatsAggFromCatalog.foldSumDecimalExact(segs, c).flatMap {
-          case None =>
-            serveDeclarative(fn, Map(
-              "sum" -> Literal(null, fn.dataType),
-              "isEmpty" -> Literal(true)))
-          case Some(total) =>
-            val rt = fn.dataType.asInstanceOf[DecimalType]
-            val dec = Decimal(total.bigDecimal)
-            // a total the result type cannot hold means the scan's own
-            // buffer would have overflowed — its eval-mode contract
-            // (ANSI throw / LEGACY null) must come from the real scan
-            if (!dec.changePrecision(rt.precision, rt.scale)) None
-            else serveDeclarative(fn, Map(
-              "sum" -> Literal(dec, fn.dataType),
-              "isEmpty" -> Literal(false)))
-        }
-      case AvgCol(c, fn) =>
-        StatsAggFromCatalog.foldNonNullCount(segs, c).flatMap { n =>
-          if (n == 0L) Some(null) // AVG over zero non-null values: NULL
-          else fn.aggBufferAttributes.find(_.name == "sum") match {
-            case None => None
-            case Some(sa) => fn.child.dataType match {
-              case _: DecimalType =>
-                StatsAggFromCatalog.foldSumDecimalExact(segs, c).flatMap {
-                  case Some(total) =>
-                    val st = sa.dataType.asInstanceOf[DecimalType]
-                    val dec = Decimal(total.bigDecimal)
-                    if (!dec.changePrecision(st.precision, st.scale)) None
-                    else serveDeclarative(fn, Map(
-                      "sum" -> Literal(dec, sa.dataType),
-                      "count" -> Literal(n)))
-                  case None => None // n > 0 yet no sum: inconsistent, bail
-                }
-              case it if graft.table.SegmentedTable.isIntegral(it) &&
-                  sa.dataType == DoubleType =>
-                // the 2^53 exactness bound (see AvgCol): below it every
-                // long→double cast and every intermediate addition the
-                // scan performs is exact in any order, so one conversion
-                // of the exact total equals the scan's buffer
-                StatsAggFromCatalog.foldSumExact(segs, c).flatMap {
-                  case Some(total) =>
-                    val mn = StatsAggFromCatalog.foldMinMax(segs, c, it, isMin = true)
-                    val mx = StatsAggFromCatalog.foldMinMax(segs, c, it, isMin = false)
-                    (mn, mx) match {
-                      case (Some(a), Some(b)) if a != null && b != null =>
-                        val maxAbs = Seq(a, b).map(v => BigInt(internalLong(v)).abs).max
-                        if (maxAbs * BigInt(n) < BigInt(1L << 53))
-                          serveDeclarative(fn, Map(
-                            "sum" -> Literal(total.toDouble, DoubleType),
-                            "count" -> Literal(n)))
-                        else None
-                      case _ => None
-                    }
-                  case None => None
-                }
-              case _ => None // double child: FP order-dependence, never fold
-            }
-          }
-        }
-      case CountDistinctCol(c, dt) =>
-        StatsAggFromCatalog.groupSegments(segs, Seq(c -> dt)).map(groups =>
-          groups.count(_._1.head != null).toLong: Any)
-    }
-    (inner, sh.cast) match {
-      // the plan's own Cast node applied driver-side over the folded
-      // value (Literal of the aggregate's type) — eval-mode/timezone
-      // semantics are the query's; an ANSI cast failure bails
-      case (Some(v), Some(c)) =>
-        try Some(c.withNewChildren(Seq(Literal(v, c.child.dataType))).eval(null))
-        catch { case scala.util.control.NonFatal(_) => None }
-      case _ => inner
-    }
-  }
 
   /** GROUP BY fold. A segment FOLDS when it is fully qualified by the
     * filter (all rows match — or no filter) AND every group column is

@@ -2282,8 +2282,9 @@ case class CreateGraftAggTableCommand(name: String, basePath: String,
   }
 }
 
-/** REFRESH rebuilds the rollup from current base data and re-stamps the
-  * staleness fingerprint, re-enabling the rewrite after base appends.
+/** REFRESH brings the rollup up to the current base data and re-stamps
+  * its freshness (see [[graft.mv.AggTables.isFresh]]), re-enabling the
+  * rewrite after base appends.
   */
 case class RefreshGraftAggTableCommand(name: String) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
@@ -2309,7 +2310,7 @@ case class ShowGraftAggTablesCommand() extends LeafRunnableCommand {
     graft.mv.AggTables.registered(spark).sortBy(_.name).map { m =>
       Row(m.name, m.basePath, m.groupCols.mkString(","),
         m.measures.map(x => s"${x.func}(${x.baseCol})").mkString(","),
-        graft.mv.AggTables.fingerprint(spark, m.basePath) == m.fingerprint)
+        graft.mv.AggTables.isFresh(spark, m))
     }
 }
 

@@ -306,25 +306,34 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
   private def buildBlooms(dir: Path, segId: Int, rows: Long): Unit =
     writeBlooms(segId, computeBlooms(dir, rows))
 
-  /** Lazily-loaded per-(segment, column) blooms; None = no sidecar
-    * (column not indexed, or written by an older catalog) = never
-    * prune.
+  /** The qualified `_meta` dir, computed once per instance: the prefix
+    * of this table's keys in the process-wide bloom cache.
     */
-  private val bloomCache =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String),
-      Option[org.apache.spark.util.sketch.BloomFilter]]()
+  private lazy val qualifiedMetaDir: Path = new Path(TableIO.qualified(metaDir))
 
-  private def bloomOf(segId: Int, column: String)
-      : Option[org.apache.spark.util.sketch.BloomFilter] =
-    bloomCache.computeIfAbsent((segId, column), { _ =>
-      val f = bloomFile(segId, column)
-      if (!TableIO.exists(f)) None
-      else {
-        val is = TableIO.open(f)
-        try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(is))
-        finally is.close()
-      }
-    })
+  /** One segment's bloom for `column`, read once per process (see
+    * [[SegmentedTable.bloomCache]]); None = no sidecar (column not
+    * indexed, or written by an older catalog) = never prune.
+    */
+  private def bloomOf(seg: SegmentMeta, column: String)
+      : Option[org.apache.spark.util.sketch.BloomFilter] = {
+    val f = bloomFile(seg.id, column)
+    val key = (new Path(qualifiedMetaDir, f.getName).toString, seg.createdAt)
+    val cached = bloomCache.get(key)
+    if (cached != null) cached
+    else {
+      val bloom =
+        if (!TableIO.exists(f)) None
+        else {
+          val is = TableIO.open(f)
+          try Some(org.apache.spark.util.sketch.BloomFilter.readFrom(is))
+          finally is.close()
+        }
+      if (bloomCache.size >= BloomCacheEntries) bloomCache.clear()
+      bloomCache.put(key, bloom)
+      bloom
+    }
+  }
 
   /** Bloom verdict for `column = v` on one segment: false ONLY when an
     * index exists and proves absence. The literal must carry the
@@ -335,7 +344,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
   private def bloomMayContain(seg: SegmentMeta, column: String, v: Any,
                               t: DataType): Boolean =
     if (v == null || !bloomColumns.contains(column)) true
-    else bloomOf(seg.id, column) match {
+    else bloomOf(seg, column) match {
       case Some(bf) =>
         val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(
           Seq(Literal.create(v, t))).eval(null).asInstanceOf[Long]
@@ -571,7 +580,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     * O(delta + |MV|)). Opt-in via the `refresh_on_commit` table
     * property; fires AFTER the commit, outside any lock. A refresh
     * failure only leaves the MV stale, which the rewrite's
-    * fingerprint probe already treats as "serve from base"
+    * freshness check already treats as "serve from base"
     * (fail-safe) — so data commits never fail on MV maintenance.
     * The modes of the last refresh are recorded for observability.
     */
@@ -2390,6 +2399,19 @@ object SegmentedTable {
     if (parent.getName == "_meta") new Path(parent, "manifests")
     else new Path(parent.getParent, "manifests")
   }
+
+  /** Bloom sidecars read so far, process-wide: every optimizer rule
+    * invocation opens its own [[SegmentedTable]], so a per-instance
+    * cache would re-read every sidecar on every pruning pass. Keyed by
+    * the qualified sidecar path plus the segment's `createdAt`: ids
+    * restart on a table recreated at the same root, and a sidecar is
+    * written before the status commit that publishes its segment, so a
+    * published (id, createdAt) pair names one sidecar content for
+    * good. Cleared on overflow, like [[manifestCache]].
+    */
+  private val bloomCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long), Option[org.apache.spark.util.sketch.BloomFilter]]()
+  private val BloomCacheEntries = 256
 
   /** Manifest pages are immutable once written, so the cache never
     * invalidates — only bounds memory (a live table references one or

@@ -398,4 +398,192 @@ class AggTableSpec extends AnyFunSuite {
       s"scanned: ${scannedPaths(qOld)}")
     AggTables.drop(spark, "ord_auto")
   }
+
+  // ---- planning cost and staleness of the rollup rewrite on both
+  // read surfaces: SegmentedTable.read() and graft.default.<t> ----
+
+  private def rewritten(df: org.apache.spark.sql.DataFrame, mv: String): Boolean =
+    scannedPaths(df).exists(_.contains(mv))
+
+  /** Spark jobs started while `f` runs. Listener events arrive in job
+    * order, so a marker job run afterwards bounds the count.
+    */
+  private def jobsDuring(f: => Unit): Int = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.spec.marker") != null))
+          markerSeen.countDown()
+        else if (markerSeen.getCount > 0) started.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      f
+      sc.setLocalProperty("graft.spec.marker", "1")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty("graft.spec.marker", null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** `f`'s answer computed with no rollup registered. */
+  private def withoutMvs[T](f: => T): T = {
+    spark.conf.set("spark.graft.mv.store", "/nonexistent_mv_dir")
+    try f finally spark.conf.set("spark.graft.mv.store", TestSpark.mvStore)
+  }
+
+  private def sorted(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.Row] =
+    df.collect().toSeq.sortBy(_.toString)
+
+  /** A catalog table over orders with a rollup by o_orderstatus. */
+  private def orders(name: String, mv: String): String = {
+    spark.sql(s"DROP TABLE IF EXISTS graft.default.$name")
+    spark.sql(s"CREATE TABLE graft.default.$name " +
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) USING graft")
+    insert(name, "o_orderkey % 4 = 0")
+    insert(name, "o_orderkey % 4 = 1")
+    val root = graft.sql.GraftCatalog.open(spark, name).root.toString
+    if (AggTables.registered(spark).exists(_.name == mv)) AggTables.drop(spark, mv)
+    AggTables.create(spark, mv, root, Seq("o_orderstatus"), Seq("sum" -> "o_orderkey"))
+    root
+  }
+
+  private def insert(name: String, where: String): Unit =
+    spark.sql(s"INSERT INTO graft.default.$name " +
+      "SELECT o_orderkey, o_orderstatus, o_totalprice " +
+      s"FROM parquet.`${TestSpark.sf}/orders.parquet` WHERE $where")
+
+  private def rollupSql(name: String) = spark.sql(
+    s"SELECT o_orderstatus, sum(o_orderkey) s, count(*) c FROM graft.default.$name " +
+      "GROUP BY o_orderstatus")
+
+  test("planning runs no Spark job: rollup-served, catalog-folded and non-derivable aggregates on both surfaces") {
+    import org.apache.spark.sql.DataFrame
+    orders("plan_jobs", "plan_jobs_mv")
+    val v1: () => DataFrame = () => graft.sql.GraftCatalog.open(spark, "plan_jobs").read()
+    val v2: () => DataFrame = () => spark.table("graft.default.plan_jobs")
+    val cases: Seq[(String, DataFrame => DataFrame, Boolean)] = Seq(
+      ("rollup", _.groupBy(col("o_orderstatus"))
+        .agg(sum(col("o_orderkey")).as("s"), count(lit(1)).as("c")), true),
+      // the rollup could serve count(*) too; the catalog fold wins
+      ("fold", _.agg(count(lit(1)).as("c")), false),
+      ("non-derivable", _.groupBy(col("o_orderstatus"))
+        .agg(sum(col("o_totalprice")).as("p")), false))
+    for ((surface, read) <- Seq("read()" -> v1, "graft.default" -> v2);
+         (what, q, served) <- cases) {
+      val df = q(read())
+      df.queryExecution.analyzed
+      assert(jobsDuring(df.queryExecution.optimizedPlan) == 0,
+        s"$what on $surface ran a job while planning")
+      assert(rewritten(df, "plan_jobs_mv") == served,
+        s"$what on $surface: ${df.queryExecution.optimizedPlan}")
+      assert(sorted(df) == withoutMvs(sorted(q(read()))), s"$what on $surface")
+    }
+    AggTables.drop(spark, "plan_jobs_mv")
+    spark.sql("DROP TABLE graft.default.plan_jobs")
+  }
+
+  test("catalog surface: a stale rollup declines until REFRESH, time travel never rewrites") {
+    orders("v2_stale", "v2_stale_mv")
+    assert(rewritten(rollupSql("v2_stale"), "v2_stale_mv"))
+    val built = graft.sql.GraftCatalog.open(spark, "v2_stale").currentVersion
+    insert("v2_stale", "o_orderkey % 4 = 2")
+    val afterInsert = rollupSql("v2_stale")
+    assert(!rewritten(afterInsert, "v2_stale_mv"))
+    val want = withoutMvs(sorted(rollupSql("v2_stale")))
+    assert(sorted(afterInsert) == want)
+
+    spark.sql("REFRESH GRAFT AGGREGATE TABLE v2_stale_mv")
+    val afterRefresh = rollupSql("v2_stale")
+    assert(rewritten(afterRefresh, "v2_stale_mv"))
+    assert(sorted(afterRefresh) == want)
+
+    // the snapshot the rollup was first built at, and the current one
+    for (v <- Seq(built, graft.sql.GraftCatalog.open(spark, "v2_stale").currentVersion)) {
+      val old = spark.sql(
+        s"SELECT o_orderstatus, sum(o_orderkey) s, count(*) c FROM graft.default.v2_stale " +
+          s"VERSION AS OF $v GROUP BY o_orderstatus")
+      assert(!rewritten(old, "v2_stale_mv"), s"VERSION AS OF $v")
+    }
+    AggTables.drop(spark, "v2_stale_mv")
+    spark.sql("DROP TABLE graft.default.v2_stale")
+  }
+
+  test("catalog surface: a table recreated at the same root never uses the old rollup") {
+    val root = orders("v2_recreate", "v2_recreate_mv")
+    val before = graft.sql.GraftCatalog.open(spark, "v2_recreate")
+    val (version, ids) = (before.currentVersion, before.liveScan.ids)
+    assert(rewritten(rollupSql("v2_recreate"), "v2_recreate_mv"))
+
+    spark.sql("DROP TABLE graft.default.v2_recreate")
+    spark.sql("CREATE TABLE graft.default.v2_recreate " +
+      "(o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE) USING graft")
+    val after = graft.sql.GraftCatalog.open(spark, "v2_recreate")
+    assert(after.root.toString == root)
+    // load other rows until the commit version and the segment ids
+    // are back where the rollup was built
+    Iterator.from(0).takeWhile(_ => after.currentVersion < version)
+      .foreach(i => insert("v2_recreate", s"o_orderkey % 8 = ${i % 8} AND o_orderkey < 200"))
+    assert(after.currentVersion == version && after.liveScan.ids == ids)
+
+    val q = rollupSql("v2_recreate")
+    assert(!rewritten(q, "v2_recreate_mv"))
+    assert(sorted(q) == withoutMvs(sorted(rollupSql("v2_recreate"))))
+    AggTables.drop(spark, "v2_recreate_mv")
+    spark.sql("DROP TABLE graft.default.v2_recreate")
+  }
+
+  test("a grouped aggregate a rollup serves is not pre-empted by a partial catalog fold") {
+    // two segments constant in o_orderstatus and one mixed: the grouped
+    // stats fold could answer the first two from the catalog and scan
+    // the third, but the rollup answers without any base scan
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_mvhybrid").resolve("t").toString
+    val o = spark.read.parquet(s"${TestSpark.sf}/orders.parquet")
+      .select("o_orderkey", "o_orderstatus")
+    val t = graft.table.SegmentedTable.create(spark, root, o.schema)
+    val even = col("o_orderkey") % 2 === 0
+    t.load(o.filter(even && col("o_orderstatus") === "F"))
+    t.load(o.filter(even && col("o_orderstatus") === "O"))
+    t.load(o.filter(!even || !col("o_orderstatus").isin("F", "O")))
+    AggTables.create(spark, "hybrid_mv", root, Seq("o_orderstatus"), Seq("sum" -> "o_orderkey"))
+    def q() = t.read().groupBy(col("o_orderstatus")).agg(count(lit(1)).as("c"))
+    val paths = scannedPaths(q())
+    assert(paths.exists(_.contains("hybrid_mv")) && !paths.exists(_.contains("segment_")),
+      s"scanned: $paths")
+    assert(sorted(q()) == withoutMvs(sorted(q())))
+    // without the rollup, the same query takes the partial fold
+    assert(withoutMvs(scannedPaths(q())).count(_.contains("segment_")) == 1)
+    AggTables.drop(spark, "hybrid_mv")
+  }
+
+  test("a catalog entry without a stored schema and stamp declines until one REFRESH") {
+    orders("v2_legacy", "v2_legacy_mv")
+    // rewrite the entry as it was stored before the two fields existed
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.{compact, parse, render}
+    val file = new org.apache.hadoop.fs.Path(AggTables.catalogDir(spark), "v2_legacy_mv.json")
+    val legacy = parse(graft.table.TableIO.readString(file)).removeField {
+      case (k, _) => k == "schema" || k == "liveStamp"
+    }
+    graft.table.TableIO.writeStringAtomic(file, compact(render(legacy)))
+    val meta = AggTables.registered(spark).find(_.name == "v2_legacy_mv").get
+    assert(meta.schema.isEmpty && meta.liveStamp.isEmpty)
+    assert(!AggTables.isFresh(spark, meta))
+
+    val declined = rollupSql("v2_legacy")
+    assert(!rewritten(declined, "v2_legacy_mv"))
+    val want = withoutMvs(sorted(rollupSql("v2_legacy")))
+    assert(sorted(declined) == want)
+
+    spark.sql("REFRESH GRAFT AGGREGATE TABLE v2_legacy_mv")
+    val served = rollupSql("v2_legacy")
+    assert(rewritten(served, "v2_legacy_mv"))
+    assert(sorted(served) == want)
+    AggTables.drop(spark, "v2_legacy_mv")
+    spark.sql("DROP TABLE graft.default.v2_legacy")
+  }
 }

@@ -339,6 +339,32 @@ class SegmentedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       relation(spark.read.option("modifiedBefore", "2999-01-01T00:00:00"))).isEmpty)
   }
 
+  test("bloom sidecars are read once per process, not once per pruning pass") {
+    FaultFileSystem.register(spark)
+    // ids interleaved across four segments: every segment's min/max
+    // spans the key, so only the blooms can prune
+    val base = Files.createTempDirectory(Paths.get(FaultFileSystem.localRoot), "bloomcache")
+    val t = SegmentedTable.create(spark, base.resolve("t").toString,
+      spark.range(0).schema, Map("bloom_columns" -> "id"))
+    (0 until 4).foreach(i => t.load(spark.range(0, 4000).where(col("id") % 4 === i).toDF()))
+    val remote = t.liveSegmentPaths.map(p => FaultFileSystem.pathOf(p.toString))
+    def plan() = {
+      val df = spark.read.parquet(remote: _*).where(col("id") === 5L)
+      df.queryExecution.optimizedPlan
+      df
+    }
+    val ((first, second), calls) = FaultFileSystem.recording((plan(), plan()))
+    val opens = calls.collect { case ("open", p) if p.getName.startsWith("bloom_") => p.toString }
+    assert(opens.distinct.size == 4, s"every sidecar read once: $opens")
+    assert(opens.size == opens.distinct.size, s"a sidecar re-read: $opens")
+    // the blooms did prune (a false positive may keep a second
+    // segment), and the rows are plain Spark's
+    Seq(first, second).foreach { df =>
+      assert(relationsOf(df).flatMap(_.location.rootPaths).size < remote.size)
+      assert(ids(df) == Seq(5L))
+    }
+  }
+
   test("date-column stats prune segments") {
     val root = freshRoot("dateprune")
     val withDate = li.withColumn("ship_date", to_date(col("l_shipdate")))
