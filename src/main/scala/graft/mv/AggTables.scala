@@ -475,6 +475,8 @@ object AggTables {
   * The optimizer calls the rule for every plan holding an aggregate,
   * several times per query, so it decides cheapest-first and stops at
   * the first no:
+  *  0. shape: an aggregate straight over a scan (`bareScan`), with no
+  *     I/O — only then is the MV catalog listed;
   *  1. derivability, from each MV's catalog entry alone — an aggregate
   *     no registered MV can derive touches no file;
   *  2. the scan reads the MV's base ([[baseCandidates]]), and a
@@ -513,8 +515,11 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     // bail before ANY catalog I/O: registered() lists + parses every
-    // MV meta file — a plan with no Aggregate can never rewrite
-    if (!plan.exists(_.isInstanceOf[Aggregate])) return plan
+    // MV meta file — only an Aggregate straight over a scan can rewrite
+    if (!plan.exists {
+        case agg: Aggregate => bareScan(agg.child).isDefined
+        case _ => false
+      }) return plan
     val mvs = AggTables.registered(spark)
     if (mvs.isEmpty) return plan
     plan.transformUp {
@@ -522,7 +527,7 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         val derivable = mvs.filter(mv => mv.schema.nonEmpty &&
           derive(agg, mv, DataTypeUtils.toAttributes(AggTables.schemaOf(mv))).isDefined)
         if (derivable.isEmpty) agg
-        else baseCandidates(agg.child).iterator.flatMap { case (base, scan) =>
+        else bareScan(agg.child).toSeq.flatMap(baseCandidates).iterator.flatMap { case (base, scan) =>
           // a segmented base's rollup serves segment scans only (a
           // plain read of the table root also sees retired segments)
           serve(agg, derivable.filter(m =>
@@ -555,9 +560,19 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
       .flatMap(build(agg, _)).nextOption()
   }
 
-  /** child must be a bare scan (optionally behind an attribute-only
-    * Project) with no Filter (a residual filter on non-dim columns
-    * would make the rollup wrong). Admissible base candidates:
+  /** The scan under `p`'s attribute-only Projects, when that is all `p`
+    * is: the only child an aggregate a rollup serves may have (a
+    * residual Filter on non-dim columns would make the rollup wrong).
+    * A shape test, with no I/O.
+    */
+  private def bareScan(p: LogicalPlan): Option[LogicalPlan] = p match {
+    case _: LogicalRelation | _: DataSourceV2Relation => Some(p)
+    case Project(exprs, child) if exprs.forall(_.isInstanceOf[Attribute]) =>
+      bareScan(child)
+    case _ => None
+  }
+
+  /** The bases a bare scan ([[bareScan]]) reads. Admissible candidates:
     *  - exactly one parquet location → base = that path;
     *  - a segment scan of one graft table
     *    ([[graft.table.SegmentedTable.scanOf]], possibly of a single
@@ -590,8 +605,6 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
         t.foldSnapshot.map(s => (AggTables.normalize(s.root.toString), Some(s))).toSeq
       case _ => Nil
     }
-    case Project(exprs, child) if exprs.forall(_.isInstanceOf[Attribute]) =>
-      baseCandidates(child)
     case _ => Nil
   }
 

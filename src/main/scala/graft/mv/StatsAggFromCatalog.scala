@@ -531,6 +531,9 @@ object StatsAggFromCatalog {
         s.experimental.extraOptimizations =
           s.experimental.extraOptimizations :+ StatsAggFromCatalog(s)
     }
+    // the V2 catalog's folded aggregates plan with no Spark job
+    org.apache.spark.sql.graftbridge.GraftV2ScanSupport
+      .GraftFoldScanStrategy.ensureRegistered(s)
   }
 }
 
@@ -588,16 +591,17 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
   }
 
   /** The scan leaf a fold replaces. Each variant knows how to rebuild
-    * itself over ONLY the straddler segment dirs with attribute
-    * references kept resolved — the V1 rule-path relation copies
-    * itself (same output attrs), the V2 catalog shapes re-surface as
-    * a V1 parquet LogicalRelation CARRYING the V2 node's own output
+    * itself over ONLY the straddler segments, through a snapshot file
+    * index narrowed to them, with attribute references kept resolved —
+    * the V1 rule-path relation copies itself with the narrowed index
+    * (same output attrs), the V2 catalog shapes re-surface as a V1
+    * parquet LogicalRelation CARRYING the V2 node's own output
     * attributes over a schema pruned to them (FileSourceStrategy then
     * plans it like any filtered parquet scan: pushdown + pruning at
     * physical planning).
     */
   private sealed trait FoldableScan {
-    def mkStraddler(paths: Seq[String], tableSchema: StructType): LogicalPlan
+    def mkStraddler(t: SegmentedTable, segs: Seq[SegmentMeta]): LogicalPlan
     /** FULL folds defer to the V2 builder's pushed-aggregate LocalScan
       * on the PRE-pushdown interception (extension sessions): the rule
       * runs before V2ScanRelationPushDown there, and stealing the full
@@ -607,23 +611,22 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
       */
     def deferFullFold: Boolean
   }
-  private case class V1Leaf(l: LogicalRelation) extends FoldableScan {
-    def mkStraddler(paths: Seq[String], tableSchema: StructType): LogicalPlan =
-      l.copy(relation = org.apache.spark.sql.graftbridge.ColumnExpr
-        .parquetRelation(spark, paths, tableSchema))
+  private case class V1Leaf(l: LogicalRelation, h: HadoopFsRelation)
+      extends FoldableScan {
+    def mkStraddler(t: SegmentedTable, segs: Seq[SegmentMeta]): LogicalPlan =
+      l.copy(relation = h.copy(location = t.snapshotIndex(segs))(h.sparkSession))
     def deferFullFold: Boolean = false
   }
   private case class V2Leaf(output: Seq[AttributeReference],
                             deferFullFold: Boolean) extends FoldableScan {
-    def mkStraddler(paths: Seq[String], tableSchema: StructType): LogicalPlan = {
+    def mkStraddler(t: SegmentedTable, segs: Seq[SegmentMeta]): LogicalPlan = {
       // schema pruned to the V2 node's (possibly column-pruned) output,
       // in output order, so LogicalRelation's attr↔schema contract holds
       val pruned = StructType(output.map(a =>
-        tableSchema.fields.find(_.name == a.name)
+        t.schema.fields.find(_.name == a.name)
           .getOrElse(StructField(a.name, a.dataType, a.nullable))))
-      new LogicalRelation(org.apache.spark.sql.graftbridge.ColumnExpr
-        .parquetRelation(spark, paths, pruned), output.toIndexedSeq, None,
-        false, None)
+      new LogicalRelation(t.snapshotIndex(segs).relation(pruned),
+        output.toIndexedSeq, None, false, None)
     }
   }
 
@@ -632,30 +635,32 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
     * filter chains). Returns the filter condition (if any), the
     * [[SegmentScan]] the leaf reads, and the [[FoldableScan]] leaf
     * (the hybrid fold rebuilds it over the straddler segments so
-    * downstream attribute references stay valid). Three leaf shapes:
-    *  - V1 `LogicalRelation(HadoopFsRelation)` that
-    *    [[SegmentedTable.scanOf]] recognizes — the rule path
-    *    (DataFrame reads, `format("graft")`, temp views);
+    * downstream attribute references stay valid). Every graft-built
+    * read scans through a [[graft.table.GraftSnapshotFileIndex]], so
+    * each leaf shape hands over its table and segment ids without a
+    * status probe; [[SegmentedTable.scanOf]] decides the first two:
+    *  - V1 `LogicalRelation(HadoopFsRelation)` — the rule path
+    *    (`SegmentedTable.read()`, `format("graft")`, temp views, and
+    *    raw reads of segment dirs, recognized by their paths);
     *  - post-pushdown `DataSourceV2ScanRelation(ParquetScan)` — plain
     *    sessions register via extraOptimizations, which run AFTER V2
     *    scan pushdown, so a catalog read the builder could not fold
     *    (one straddler disables its all-or-nothing pushed aggregate)
-    *    arrives here with the Filter kept and the survivor dirs as the
-    *    scan's root paths, recognized the same way;
+    *    arrives here with the Filter kept and the survivors' index;
     *  - pre-pushdown `DataSourceV2Relation(GraftV2Table)` — extension-
     *    injected rules run BEFORE V2 scan pushdown, so the same
     *    catalog read is intercepted at the relation itself, which
-    *    hands over its table and live segment ids directly (full
-    *    folds defer to the builder).
-    * The recognizer refuses scans with file-level read options (glob,
-    * mtime bounds, recursive lookup): they read a SUBSET of the
+    *    hands over its table's live scan (full folds defer to the
+    *    builder).
+    * The recognizer refuses path reads with file-level read options
+    * (glob, mtime bounds, recursive lookup): they read a SUBSET of the
     * segment dirs' files, and the catalog answer would silently drift.
     */
   private def extract(p: LogicalPlan, cond: Option[Expression])
       : Option[(Option[Expression], SegmentScan, FoldableScan)] = p match {
     case l: LogicalRelation => l.relation match {
       case h: HadoopFsRelation =>
-        SegmentedTable.scanOf(spark, h).map(s => (cond, s, V1Leaf(l)))
+        SegmentedTable.scanOf(spark, h).map(s => (cond, s, V1Leaf(l, h)))
       case _ => None
     }
     case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
@@ -671,7 +676,7 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
         case ps: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
             if ps.readPartitionSchema.isEmpty && ps.partitionFilters.isEmpty &&
               ps.pushedAggregate.isEmpty =>
-          SegmentedTable.scanOf(spark, ps.fileIndex.rootPaths,
+          SegmentedTable.scanOf(spark, ps.fileIndex,
             scala.jdk.CollectionConverters.SetHasAsScala(ps.options.keySet()).asScala)
             .map(s => (cond, s, V2Leaf(r.output, deferFullFold = false)))
         case _ => None
@@ -698,12 +703,12 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
     * metadata and a real scan must still cover the straddlers — the
     * 100 TB shape is "9,998 segments provably in/out + 2 boundary
     * segments", where all-or-nothing folding would full-scan every
-    * time a predicate misses a load boundary. `schema` is the table
-    * schema the straddler relation is rebuilt with.
+    * time a predicate misses a load boundary. The straddler relation
+    * is rebuilt over `straddlers` of `table`.
     */
   private case class HybridFold(provenValues: Array[Any],
-                                straddlerPaths: Seq[String],
-                                schema: StructType) extends FoldResult
+                                table: SegmentedTable,
+                                straddlers: Seq[SegmentMeta]) extends FoldResult
   private sealed trait FoldResult
 
   /** The catalog metas of a scan's segments, in scan order. Every
@@ -746,15 +751,14 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
         if (straddlers.isEmpty) foldValues(proven, exprs).map(FullFold(_))
         else if (proven.isEmpty ||
             !exprs.forall(e => combinable(shapeOf(e).get))) None
-        else foldValues(proven, exprs).map(v => HybridFold(v,
-          t.segmentPaths(straddlers.map(_.id)).map(_.toString), t.schema))
+        else foldValues(proven, exprs).map(v => HybridFold(v, t, straddlers))
     }
   }
 
   /** The hybrid plan: the proven partial answers as a one-row
     * LocalRelation, UNIONed with the SAME aggregate over a scan of
-    * ONLY the straddler segment dirs (relation copied with swapped
-    * paths so `cond` and the aggregate children stay resolved), then
+    * ONLY the straddler segments (relation copied over a narrowed
+    * index so `cond` and the aggregate children stay resolved), then
     * an outer combining aggregate — COUNTs sum, MIN/MAX fold — whose
     * aliases reuse the original exprIds so the rest of the plan is
     * untouched. Fully lazy: the straddler scan plans/prunes/executes
@@ -781,7 +785,7 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
         s"unreachable: non-combinable shape $shape in hybrid (guarded in answer)")
     }
     val local = LocalRelation(partialAttrs, Seq(InternalRow(h.provenValues: _*)))
-    val straddlerRel = rel.mkStraddler(h.straddlerPaths, h.schema)
+    val straddlerRel = rel.mkStraddler(h.table, h.straddlers)
     val innerExprs: Seq[NamedExpression] = exprs.zipWithIndex.map {
       case (Alias(ae, _), i) => Alias(ae, s"__scan$i")()
       case (e, _) => throw new IllegalStateException(e.toString) // servableShapes
@@ -832,8 +836,8 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
     * layout.
     */
   private case class GroupedHybrid(partialRows: Seq[Array[Any]],
-                                   scanPaths: Seq[String],
-                                   schema: StructType) extends GroupedFoldResult
+                                   table: SegmentedTable,
+                                   scanSet: Seq[SegmentMeta]) extends GroupedFoldResult
 
   /** The aggregate shapes of `exprs` (group references excluded), in
     * output order — the canonical partial-column order the grouped
@@ -854,7 +858,7 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
     * output order; zero qualified segments → zero rows, the grouped-
     * aggregate-of-empty contract). A MIX → [[GroupedHybrid]]: the
     * foldable segments' groups as canonical partial rows plus the
-    * paths a real (filtered, re-grouped) scan must still cover —
+    * segments a real (filtered, re-grouped) scan must still cover —
     * which also serves tables where only SOME loads are key-aligned.
     * Nothing foldable → bail.
     */
@@ -904,8 +908,7 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
         if (vals.exists(_.isEmpty)) return None
         (kv ++ vals.map(_.get)).toArray[Any]
       }
-      Some(GroupedHybrid(partials,
-        t.segmentPaths(scanSet.map(_.id)).map(_.toString), t.schema))
+      Some(GroupedHybrid(partials, t, scanSet))
     }
   }
 
@@ -945,7 +948,7 @@ case class StatsAggFromCatalog(spark: SparkSession) extends Rule[LogicalPlan] {
     }
     val local = LocalRelation(keyAttrs ++ partialAttrs,
       h.partialRows.map(v => InternalRow(v: _*)))
-    val scanRel = rel.mkStraddler(h.scanPaths, h.schema)
+    val scanRel = rel.mkStraddler(h.table, h.scanSet)
     val innerChild = cond.fold(scanRel: LogicalPlan)(LFilter(_, scanRel))
     val innerAggAliases: Seq[NamedExpression] =
       exprs.collect { case Alias(ae: AggregateExpression, _) => ae }

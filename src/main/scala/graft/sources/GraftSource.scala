@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode}
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
-import org.apache.spark.sql.graftbridge.ColumnExpr
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, RelationProvider, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
@@ -18,10 +17,11 @@ import graft.table.SegmentedTable
   * spark.read.format("graft").load("/store/t")
   * }}}
   *
-  * Reads resolve to Spark's own vectorized multi-path Parquet relation
-  * over the table's LIVE segments — filter/column pushdown, row-group
-  * skipping and codegen all apply exactly as for a raw parquet read;
-  * the only graft logic is which segment dirs participate. Writes run
+  * Reads resolve to Spark's own vectorized Parquet relation over the
+  * table's LIVE segments, their files named by the catalog
+  * ([[graft.table.GraftSnapshotFileIndex]]) — filter/column pushdown,
+  * row-group skipping and codegen all apply exactly as for a raw
+  * parquet read; the only graft logic is which files participate. Writes run
   * the segment-commit protocol with the standard SaveMode matrix.
   */
 class GraftSource extends RelationProvider with CreatableRelationProvider
@@ -55,9 +55,7 @@ class GraftSource extends RelationProvider with CreatableRelationProvider
           pruned.rdd
         }
       }
-    } else
-      ColumnExpr.parquetRelation(sqlContext.sparkSession,
-        t.liveSegmentPaths.map(_.toString), t.schema)
+    } else t.snapshotIndex(t.liveSegments).relation(t.schema)
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,

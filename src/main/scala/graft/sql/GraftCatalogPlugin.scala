@@ -374,12 +374,12 @@ class GraftCatalogPlugin extends TableCatalog with SupportsNamespaces {
 /** A graft table surfaced through the V2 catalog.
   *
   * READ — two paths, chosen per scan:
-  *  - no declared column defaults (the common case): delegate the
-  *    ScanBuilder to Spark's own [[ParquetTable]] over the CURRENT
-  *    live segment dirs — the full vectorized DSv2 parquet path,
-  *    filter/column pushdown included, identical plan shape to
-  *    `format("graft")` reads (loadTable runs at analysis, so every
-  *    query sees a fresh snapshot of the segment set);
+  *  - no declared column defaults (the common case): Spark's own
+  *    Parquet scan builder over a [[graft.table.GraftSnapshotFileIndex]]
+  *    of the CURRENT live segments — the full vectorized DSv2 parquet
+  *    path, filter/column pushdown included, with every file named by
+  *    the catalog (loadTable runs at analysis, so every query sees a
+  *    fresh snapshot of the segment set);
   *  - declared defaults present: a [[V1Scan]] over
   *    [[SegmentedTable.read]], which coalesces defaults — correct on
   *    evolved tables at the cost of the row-conversion boundary.
@@ -495,76 +495,52 @@ private[graft] class GraftV2Table(ident: Identifier, tablePath: String,
         }
       }
     } else {
-      // one snapshot feeds both the scan paths and (current-version
-      // reads only) the stats metas behind aggregate pushdown — a
+      // one snapshot feeds the scan's file index and (while its dirs
+      // are all on disk) the stats metas behind aggregate pushdown — a
       // pushed COUNT(*)/COUNT(col)/MIN/MAX with no filters folds from
-      // the segment catalog as a LocalScan, zero file I/O
-      val (metas, paths) = asOfVersion match {
-        case None =>
-          val (m, p) = t.liveSegmentSnapshot
-          (Some(m), p.map(_.toString))
-        case Some(v) =>
-          // time-travel reads fold too: the snapshot's per-segment
-          // stats are exact (dirs immutable, ids never reused) — but
-          // only while every dir is still on disk (a cleaned snapshot
-          // must keep failing at scan, not silently answer from
-          // metadata)
-          val (m, p) = t.segmentSnapshotAt(v)
-          (m, p.map(_.toString))
+      // the segment catalog as a LocalScan, zero file I/O. Time-travel
+      // reads fold too: the snapshot's per-segment stats are exact
+      // (dirs immutable, ids never reused) — but only while every dir
+      // is still on disk (a cleaned snapshot must keep failing at
+      // scan, not silently answer from metadata)
+      val (metas, foldable) = asOfVersion match {
+        case None => (t.liveSegments, true)
+        case Some(v) => t.segmentSnapshotAt(v)
       }
-      // exact-filter trichotomy over the SAME snapshot the paths came
-      // from: every segment proven all-out (pruned) or all-in (every
-      // row matches, provenAllIn) ⇒ the pruned scan IS the filtered
-      // scan — the filter is dropped from the plan and a pushed
-      // COUNT/MIN/MAX folds from the survivors' stats (the filtered
-      // time-range aggregate answers from one catalog read through
-      // the BI-facing catalog surface). One straddler ⇒ None, plain
-      // pruning with the filter kept.
+      val statsMetas = if (foldable) Some(metas) else None
+      // exact-filter trichotomy over the SAME snapshot: every segment
+      // proven all-out (pruned) or all-in (every row matches,
+      // provenAllIn) ⇒ the pruned scan IS the filtered scan — the
+      // filter is dropped from the plan and a pushed COUNT/MIN/MAX
+      // folds from the survivors' stats (the filtered time-range
+      // aggregate answers from one catalog read through the BI-facing
+      // catalog surface). One straddler ⇒ None, plain pruning with
+      // the filter kept.
       val trich: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          Option[(Seq[graft.table.SegmentMeta], Seq[String])] =
-        metas match {
-          case Some(m) =>
-            val pathOf = m.map(_.id).zip(paths).toMap
-            filters => {
-              val cond = filters.reduce(
-                org.apache.spark.sql.catalyst.expressions.And)
-              val survivors = t.pruneAmong(m, cond)
-              if (t.provenAllIn(survivors, cond))
-                Some(survivors -> survivors.map(s => pathOf(s.id)))
-              else None
-            }
-          case None => _ => None
+          Option[Seq[graft.table.SegmentMeta]] =
+        if (!foldable) _ => None
+        else filters => {
+          val cond = filters.reduce(org.apache.spark.sql.catalyst.expressions.And)
+          val survivors = t.pruneAmong(metas, cond)
+          if (t.provenAllIn(survivors, cond)) Some(survivors) else None
         }
       // driver-side segment pruning from the pushed filters — the
       // catalog-read twin of the GraftSegmentPruning optimizer rule
-      // (min/max stats eliminate whole segment dirs before the scan
-      // plans; parquet row-group stats prune further inside it).
-      // Pruning runs among the CAPTURED snapshot metas, never a fresh
-      // live read: runtime (join-driven) filters arrive at EXECUTION
-      // time, and a compaction/DELETE committing between planning and
-      // the broadcast completing must not retire a planned segment
-      // from the prune answer (pruneAmong's snapshot invariant).
+      // (min/max stats eliminate whole segments before the scan plans;
+      // parquet row-group stats prune further inside it). Pruning runs
+      // among the CAPTURED snapshot metas, never a fresh live read:
+      // runtime (join-driven) filters arrive at EXECUTION time, and a
+      // compaction/DELETE committing between planning and the
+      // broadcast completing must not retire a planned segment from
+      // the prune answer (pruneAmong's snapshot invariant).
       val pruneFn: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          Seq[String] = metas match {
-        case Some(m) =>
-          val pathOf = m.map(_.id).zip(paths).toMap
-          filters =>
-            filters.reduceOption(
-              org.apache.spark.sql.catalyst.expressions.And)
-              .fold(paths)(c => t.pruneAmong(m, c).map(s => pathOf(s.id)))
-        case None =>
-          // version-pinned snapshot without stats metas: statusAt(v)
-          // is immutable, so the fresh read IS the snapshot
-          filters =>
-            filters.reduceOption(
-              org.apache.spark.sql.catalyst.expressions.And)
-              .fold(paths)(c =>
-                t.prunedSegmentPaths(c, asOfVersion).map(_.toString))
-      }
+          Seq[graft.table.SegmentMeta] = filters =>
+        filters.reduceOption(org.apache.spark.sql.catalyst.expressions.And)
+          .fold(metas)(t.pruneAmong(metas, _))
       org.apache.spark.sql.graftbridge.GraftV2ScanSupport
         .segmentPrunedParquetBuilder(spark, s"graft.${ident.name}",
-          t.schema, paths, pruneFn,
-          statsMetas = metas,
+          t.schema, t.snapshotIndex(metas), pruneFn,
+          statsMetas = statsMetas,
           trichotomy = trich)
     }
   }
@@ -685,9 +661,11 @@ private[sql] class GraftMvV2Table(ident: Identifier, mvPath: String)
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    org.apache.spark.sql.graftbridge.GraftV2ScanSupport
-      .segmentPrunedParquetBuilder(spark, s"graft.mv.${ident.name}",
-        schema(), Seq(mvPath), _ => Seq(mvPath))
+    org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable(
+      s"graft.mv.${ident.name}", spark, CaseInsensitiveStringMap.empty(),
+      Seq(mvPath), Some(schema()),
+      classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat])
+      .newScanBuilder(CaseInsensitiveStringMap.empty())
 }
 
 private[sql] object GraftMvV2Table {

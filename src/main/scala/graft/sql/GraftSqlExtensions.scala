@@ -79,6 +79,8 @@ class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
     e.injectOptimizerRule(s => graft.mv.StatsAggFromCatalog(s))
     e.injectOptimizerRule(s => graft.table.GraftSegmentPruning(s))
     e.injectPlannerStrategy(s => graft.plans.GraftSortedScanStrategy(s))
+    e.injectPlannerStrategy(s =>
+      org.apache.spark.sql.graftbridge.GraftV2ScanSupport.GraftFoldScanStrategy(s))
     GraftFunctions.register(e)
     e.injectTableFunction((FunctionIdentifier("graft_table"),
       GraftTableFunction.info, GraftTableFunction.builder))

@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.graftbridge.ColumnExpr
 
 /** Automatic driver-side segment pruning as an optimizer rule — the
   * query-plan twin of [[SegmentedTable.scan]], so that ANY filtered
@@ -17,18 +16,23 @@ import org.apache.spark.sql.graftbridge.ColumnExpr
   *
   * Shape: `Filter(cond, LogicalRelation(parquet))` whose relation
   * [[SegmentedTable.scanOf]] recognizes as a segment scan of one graft
-  * table, on any Hadoop scheme; a read with file-level filter options
-  * is not one, since rebuilding it over the survivors would drop the
-  * options. The relation is swapped for one over only the surviving
-  * segments (same schema, SAME output attributes, so the rest of the
-  * plan is untouched); the Filter stays for exact row semantics —
-  * min/max pruning is conservative, Parquet row-group stats prune
-  * further inside the scan.
+  * table: a [[GraftSnapshotFileIndex]] read by its type, a raw read of
+  * segment dirs by its paths (on any Hadoop scheme; a read with
+  * file-level filter options is not one). Pruning runs among the
+  * read's OWN catalog entries — the index's snapshot, or for a path
+  * read the current catalog's entries of its ids — so a plan captured
+  * before a concurrent compact/delete keeps its snapshot's rows. The
+  * relation's index is swapped for one narrowed to the survivors (same
+  * schema, SAME output attributes, so the rest of the plan is
+  * untouched); the Filter stays for exact row semantics — min/max
+  * pruning is conservative, Parquet row-group stats prune further
+  * inside the scan.
   *
-  * Cost: one status-file read per candidate (filter, graft-relation)
-  * pair per optimization pass — driver-side, kilobyte-scale, the same
-  * cost class as Spark's own file-index refresh. The rule converges:
-  * re-application computes the same survivor set and changes nothing.
+  * Cost: driver-side and catalog-only. An index-backed read is pruned
+  * from the entries it carries, with no file-system call, and the
+  * narrowed index names its files from the same entries; a path read
+  * costs one cached status read. The rule converges: re-application
+  * computes the same survivor set and changes nothing.
   */
 object GraftSegmentPruning {
   private[graft] val Marker = "spark.graft.rule.segmentPruning"
@@ -58,53 +62,30 @@ case class GraftSegmentPruning(spark: SparkSession) extends Rule[LogicalPlan] {
   spark.conf.set(GraftSegmentPruning.Marker, "true")
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case f @ Filter(cond, l: LogicalRelation) if !l.isStreaming =>
-      l.relation match {
-        case h: HadoopFsRelation =>
-          SegmentedTable.scanOf(spark, h) match {
-            case Some(scan) =>
-              val t = scan.table
-              // prune WITHIN the relation's snapshot: look up catalog
-              // stats for exactly the segment ids the relation already
-              // references (whatever their current status — COMPACTED/
-              // DELETED entries keep their stats until cleanFiles), so
-              // a plan captured before a concurrent compact/delete
-              // keeps returning its snapshot's rows. An id no longer
-              // in the catalog has no stats → kept, conservative.
-              val byId = t.status.segments.map(m => m.id -> m).toMap
-              val survivors = t.pruneAmong(scan.ids.flatMap(byId.get), cond)
-              val survivorIds = survivors.map(_.id).toSet
-              val keep = h.location.rootPaths.zip(scan.ids).filter {
-                case (_, id) => !byId.contains(id) || survivorIds.contains(id)
-              }
-              // exact-filter elision (the rule-path twin of the V2
-              // catalog's trichotomy): when every kept path is a
-              // catalog-known segment PROVEN all-in — every row
-              // satisfies the predicate, null semantics included —
-              // the pruned scan IS the filtered scan and the Filter
-              // disappears from the plan (no per-row predicate eval
-              // on a segment-aligned time-range scan, and downstream
-              // rules like the stats-aggregate fold see the scan
-              // directly). Conservative: one unknown id or one
-              // unproven survivor keeps the Filter.
-              val exact = keep.nonEmpty &&
-                keep.forall { case (_, id) => byId.contains(id) } &&
-                t.provenAllIn(survivors, cond)
-              if (keep.length == scan.ids.length) {
-                if (exact) l else f
-              } else if (keep.isEmpty)
-                // nothing can match: collapse to an empty relation with
-                // the SAME output attributes (Filter kept for safety)
-                Filter(cond, LocalRelation(l.output))
-              else {
-                val rel = ColumnExpr.parquetRelation(spark,
-                  keep.map(_._1.toString), t.schema)
-                val pruned = l.copy(relation = rel)
-                if (exact) pruned else Filter(cond, pruned)
-              }
-            case None => f
+    case f @ Filter(cond, l @ LogicalRelation(h: HadoopFsRelation, _, _, false, _)) =>
+      SegmentedTable.scanOf(spark, h).flatMap(s => s.metas.map(s.table -> _)) match {
+        case Some((t, metas)) =>
+          val survivors = t.pruneAmong(metas, cond)
+          // exact-filter elision (the rule-path twin of the V2
+          // catalog's trichotomy): when every survivor is PROVEN
+          // all-in — every row satisfies the predicate, null semantics
+          // included — the pruned scan IS the filtered scan and the
+          // Filter disappears from the plan (no per-row predicate eval
+          // on a segment-aligned time-range scan, and downstream rules
+          // like the stats-aggregate fold see the scan directly)
+          val exact = survivors.nonEmpty && t.provenAllIn(survivors, cond)
+          if (survivors.size == metas.size) {
+            if (exact) l else f
+          } else if (survivors.isEmpty)
+            // nothing can match: collapse to an empty relation with
+            // the SAME output attributes (Filter kept for safety)
+            Filter(cond, LocalRelation(l.output))
+          else {
+            val pruned = l.copy(relation =
+              h.copy(location = t.snapshotIndex(survivors))(h.sparkSession))
+            if (exact) pruned else Filter(cond, pruned)
           }
-        case _ => f
+        case None => f
       }
   }
 }

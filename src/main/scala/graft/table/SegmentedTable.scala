@@ -39,11 +39,25 @@ case class ColStats(min: String, max: String, kind: String,
   * (conservative: an old compacted segment replays as delete+insert
   * rather than silently vanishing from the feed).
   */
+/** files: the segment's data files as Spark's own listing of its
+  * directory selects them, recorded once when the segment is staged —
+  * what a read sees without listing the directory
+  * ([[GraftSnapshotFileIndex]]). None for entries written before the
+  * field existed: such a segment is listed when a read uses it.
+  * Some(Nil) is an empty segment.
+  */
 case class SegmentMeta(id: Int, status: String, rowCount: Long,
                        createdAt: Long, stats: Map[String, ColStats],
                        nullCounts: Map[String, Long] = Map.empty,
                        dataChange: Boolean = true,
-                       bytes: Long = -1L)
+                       bytes: Long = -1L,
+                       files: Option[Seq[DataFile]] = None)
+
+/** One data file of a segment: its path relative to the segment
+  * directory, its length and its modification time, as a listing
+  * reports them.
+  */
+case class DataFile(path: String, length: Long, mtime: Long)
 
 /** version: monotone commit counter (0 for catalogs written before the
   * field existed). Every commit also lands as `_meta/log/<version>
@@ -95,10 +109,14 @@ case class ManifestPage(segments: List[SegmentMeta])
   *    (replaces the driver BTree of CarbonInputFormat.getSplits:177);
   *    Parquet row-group stats prune below segment granularity for free.
   *
-  * Scale: the catalog holds one small JSON record per segment — at
-  * 100 TB with multi-GB segments that is a few thousand entries, read
-  * once per query on the driver; all data-plane work stays in Spark's
-  * vectorized Parquet scan over only the surviving segment dirs.
+  * Scale: the catalog holds one small JSON record per segment, its
+  * data files included — at 100 TB with multi-GB segments a few
+  * thousand entries, read once per query on the driver (and cached by
+  * content identity). A read names its files from that record through
+  * a [[GraftSnapshotFileIndex]]: no directory is listed and no data
+  * file is probed at plan time, pruning narrows the same index, and all
+  * data-plane work stays in Spark's vectorized Parquet scan over only
+  * the surviving segments' files.
   */
 class SegmentedTable private (val spark: SparkSession, val root: Path,
                               val schema: StructType,
@@ -309,7 +327,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
   /** The qualified `_meta` dir, computed once per instance: the prefix
     * of this table's keys in the process-wide bloom cache.
     */
-  private lazy val qualifiedMetaDir: Path = new Path(TableIO.qualified(metaDir))
+  private lazy val qualifiedMetaDir: Path = new Path(qualifiedRoot, "_meta")
 
   /** One segment's bloom for `column`, read once per process (see
     * [[SegmentedTable.bloomCache]]); None = no sidecar (column not
@@ -438,14 +456,9 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     touchStaging(tmp)
     val blooms = computeBlooms(tmp, rows)
     touchStaging(tmp)
-    StagedSegment(tmp, rows, stats, nulls, blooms, dirBytes(tmp))
+    val (bytes, files) = listSegment(tmp)
+    StagedSegment(tmp, rows, stats, nulls, blooms, bytes, files)
   }
-
-  /** On-disk size of a staged segment (drives size-tiered minor
-    * compaction). Metadata-only: one getContentSummary RPC on HDFS,
-    * a local walk elsewhere.
-    */
-  private def dirBytes(dir: Path): Long = TableIO.contentBytes(dir)
 
   /** Allocate the next id, rename the staged dir into place, commit.
     * Caller MUST hold the metadata lock; everything here is
@@ -466,9 +479,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
         if (s.status == SUCCESS) s.copy(status = DELETED) else s)
       else st.segments
     commitStatus(TableStatus(id + 1,
-      prior :+ SegmentMeta(id, SUCCESS, staged.rows,
-        System.currentTimeMillis(), staged.stats, staged.nulls,
-        bytes = staged.bytes)))
+      prior :+ staged.meta(id, System.currentTimeMillis())))
     id
   }
 
@@ -520,9 +531,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
         TableIO.rename(staged.tmp, segmentDir(id))
         writeBlooms(id, staged.blooms)
         commitStatusWith(TableStatus(id + 1,
-          st.segments :+ SegmentMeta(id, SUCCESS, staged.rows,
-            System.currentTimeMillis(), staged.stats, staged.nulls,
-            bytes = staged.bytes)),
+          st.segments :+ staged.meta(id, System.currentTimeMillis())),
           newEpochs = Some(st.sinkEpochs + (sinkId -> batchId)))
         Some(id)
       }
@@ -772,13 +781,10 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
 
   // ---- read path ----
 
-  private def liveSegments: Seq[SegmentMeta] =
+  private[graft] def liveSegments: Seq[SegmentMeta] =
     status.segments.filter(_.status == SUCCESS)
 
-  /** Current live segment directories — the surface
-    * [[graft.mv.AggTables]] lists for MV-over-segmented-table bases
-    * and `format("graft")` reads.
-    */
+  /** Current live segment directories. */
   private[graft] def liveSegmentPaths: Seq[Path] =
     liveSegments.map(s => segmentDir(s.id))
 
@@ -786,12 +792,20 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     * relation reads, and what [[graft.mv.AggTableRewrite]] requires a
     * segmented scan to equal before it rewrites.
     */
-  private[graft] def liveScan: SegmentScan =
-    new SegmentScan(root, liveSegments.map(_.id), this)
+  private[graft] def liveScan: SegmentScan = {
+    val live = liveSegments
+    new SegmentScan(root, live.map(_.id), this, Some(live))
+  }
 
-  /** The directories of segments `ids`, in order. */
-  private[graft] def segmentPaths(ids: Seq[Int]): Seq[Path] =
-    ids.map(segmentDir)
+  /** The root as its FileSystem qualifies it, computed once per
+    * instance: the root of every [[GraftSnapshotFileIndex]] over this
+    * table and the prefix of its keys in the bloom cache.
+    */
+  private[graft] lazy val qualifiedRoot: Path = new Path(TableIO.qualified(root))
+
+  /** The snapshot file index over segments `segs` of this table. */
+  private[graft] def snapshotIndex(segs: Seq[SegmentMeta]): GraftSnapshotFileIndex =
+    new GraftSnapshotFileIndex(this, segs)
 
   /** ONE status read → (metas, dirs) of the same snapshot — the V2
     * catalog scan builder needs the stats metas and the scan paths to
@@ -803,8 +817,9 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     (segs, segs.map(s => segmentDir(s.id)))
   }
 
-  /** Full-table read: union of live segment dirs in one multi-path
-    * Parquet scan (locality and split sizing handled by Spark).
+  /** Full-table read: the live segments' files in one Parquet scan
+    * (split sizing handled by Spark), named by the catalog through a
+    * [[GraftSnapshotFileIndex]], so building the frame lists nothing.
     * Declared column defaults are applied here, so an evolved table
     * answers correctly through every entry point — callers never need
     * to know defaults exist (see [[applyDefaults]]).
@@ -814,8 +829,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
   private def readSegments(segs: Seq[SegmentMeta]): DataFrame =
     if (segs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      spark.read.schema(schema).parquet(segs.map(s => segmentDir(s.id).toString): _*)
+    else spark.baseRelationToDataFrame(snapshotIndex(segs).relation(schema))
 
   /** Segment-pruned scan: driver-side min/max elimination on the
     * predicate's conjuncts, then the residual filter runs in the scan
@@ -1356,9 +1370,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
         writeBlooms(newId, staged.blooms)
         commitStatus(TableStatus(newId + 1,
           st.segments.map(s => if (live.exists(_.id == s.id)) s.copy(status = COMPACTED) else s) :+
-            SegmentMeta(newId, SUCCESS, staged.rows, System.currentTimeMillis(),
-              staged.stats, staged.nulls, dataChange = false,
-              bytes = staged.bytes)))
+            staged.meta(newId, System.currentTimeMillis()).copy(dataChange = false)))
         Some(newId)
       }
     }
@@ -1397,41 +1409,17 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     (logged ++ cur).distinct.sorted
   }
 
-  /** Live segment dirs of a PAST version — the V2 catalog's
-    * time-travel scan delegates the parquet paths from here.
-    */
-  private[graft] def liveSegmentPathsAt(version: Long): Seq[Path] =
-    statusAt(version).segments
-      .filter(_.status == SUCCESS).map(s => segmentDir(s.id))
-
-  /** (metas, dirs) of a PAST version's live set, or metas = None when
-    * any segment dir is gone (cleanFiles removed a retired dir): the
+  /** A PAST version's live set, and whether every one of its segment
+    * dirs is still on disk (cleanFiles removes retired dirs): the
     * snapshot's stats are exact — segment dirs are immutable and ids
     * never reused — so time-travel aggregates may fold from them, but
     * ONLY while the data is still on disk: a fold must never silently
     * outlive files whose scan would fail (the time-travel contract:
     * never serve history we cannot prove still exists).
     */
-  private[graft] def segmentSnapshotAt(version: Long)
-      : (Option[Seq[SegmentMeta]], Seq[Path]) = {
+  private[graft] def segmentSnapshotAt(version: Long): (Seq[SegmentMeta], Boolean) = {
     val segs = statusAt(version).segments.filter(_.status == SUCCESS)
-    val paths = segs.map(s => segmentDir(s.id))
-    val metas =
-      if (paths.forall(TableIO.exists)) Some(segs) else None
-    (metas, paths)
-  }
-
-  /** Segment paths surviving min/max pruning against a resolved
-    * predicate, within the live set or a past version's snapshot —
-    * the V2 catalog's scan builder prunes driver-side from the
-    * pushed filters through here (the query-plan twin of
-    * [[GraftSegmentPruning]] for catalog-resolved reads).
-    */
-  private[graft] def prunedSegmentPaths(cond: Expression,
-                                        version: Option[Long]): Seq[Path] = {
-    val base = version.fold(liveSegments)(v =>
-      statusAt(v).segments.filter(_.status == SUCCESS))
-    pruneAmong(base, cond).map(s => segmentDir(s.id))
+    (segs, segs.forall(s => TableIO.exists(segmentDir(s.id))))
   }
 
   /** The version that was CURRENT at `epochMillis` (TIMESTAMP AS OF):
@@ -1803,9 +1791,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
       clearOrphan(id)
       TableIO.rename(staged.tmp, segmentDir(id))
       writeBlooms(id, staged.blooms)
-      segs = segs :+ SegmentMeta(id, SUCCESS, staged.rows,
-        System.currentTimeMillis(), staged.stats, staged.nulls,
-        bytes = staged.bytes)
+      segs = segs :+ staged.meta(id, System.currentTimeMillis())
     }
     replacements.foreach {
       case (_, Some(staged)) => promote(staged)
@@ -2213,13 +2199,26 @@ object SegmentedTable {
   val DELETED = "DELETED"
   val COMPACTED = "COMPACTED"
 
-  /** A read of one graft table's segment directories: the table root,
-    * the segment ids the read names (in its path order, duplicates
-    * kept) and the table, opened on first use.
+  /** A read of one graft table's segments: the table root, the segment
+    * ids the read names (in its path order, duplicates kept) and the
+    * table, opened on first use. `snapshot` is the catalog entries the
+    * read was built from, when it carries them (an index-backed read,
+    * the live scan).
     */
   private[graft] final class SegmentScan(val root: Path, val ids: Seq[Int],
-                                         openTable: => SegmentedTable) {
+      openTable: => SegmentedTable, snapshot: Option[Seq[SegmentMeta]]) {
     lazy val table: SegmentedTable = openTable
+
+    /** The catalog entries of the segments read, in read order: the
+      * read's own snapshot when it carries one; for a read of segment
+      * paths, the current catalog's entries for its ids — None when a
+      * path names an id the catalog lacks, or names one twice.
+      */
+    lazy val metas: Option[Seq[SegmentMeta]] = snapshot.orElse {
+      val byId = table.status.segments.map(m => m.id -> m).toMap
+      if (ids.distinct.size == ids.size && ids.forall(byId.contains)) Some(ids.map(byId))
+      else None
+    }
   }
 
   /** A segment directory name as the table writes it (no leading zeros). */
@@ -2247,16 +2246,29 @@ object SegmentedTable {
     (if (parents.size == 1) parents
      else parents.map(p => new Path(TableIO.qualified(p))).distinct) match {
       case Seq(root) if exists(root.toString) =>
-        Some(new SegmentScan(root, ids, open(spark, root.toString)))
+        Some(new SegmentScan(root, ids, open(spark, root.toString), None))
       case _ => None
     }
   }
 
-  /** [[scanOf]] over a V1 file relation's root paths and read options. */
+  /** [[scanOf]] over a file read's index and read options. A read over
+    * a [[GraftSnapshotFileIndex]] is recognized by its type: root, ids
+    * and catalog entries come from the index, with no status probe.
+    * Other indexes go through the segment-path recognizer.
+    */
+  private[graft] def scanOf(spark: SparkSession,
+      location: org.apache.spark.sql.execution.datasources.FileIndex,
+      optionKeys: Iterable[String]): Option[SegmentScan] = location match {
+    case ix: GraftSnapshotFileIndex =>
+      Some(new SegmentScan(ix.root, ix.ids, ix.table, Some(ix.metas)))
+    case other => scanOf(spark, other.rootPaths, optionKeys)
+  }
+
+  /** [[scanOf]] over a V1 file relation. */
   private[graft] def scanOf(spark: SparkSession,
       h: org.apache.spark.sql.execution.datasources.HadoopFsRelation)
       : Option[SegmentScan] =
-    scanOf(spark, h.location.rootPaths, h.options.keySet)
+    scanOf(spark, h.location, h.options.keySet)
 
   /** Bound on concurrent per-segment staging jobs during broad COW
     * DML (delete/update/merge). The stage writes are independent
@@ -2330,7 +2342,33 @@ object SegmentedTable {
   private[graft] case class StagedSegment(tmp: Path, rows: Long,
       stats: Map[String, ColStats], nulls: Map[String, Long],
       blooms: Seq[(String, org.apache.spark.util.sketch.BloomFilter)],
-      bytes: Long = -1L)
+      bytes: Long, files: Seq[DataFile]) {
+    /** The catalog entry this segment commits as, under id `id`: the
+      * one constructor every commit path uses, so none can drop a field.
+      */
+    def meta(id: Int, createdAt: Long): SegmentMeta =
+      SegmentMeta(id, SUCCESS, rows, createdAt, stats, nulls,
+        bytes = bytes, files = Some(files))
+  }
+
+  /** One listing of a segment directory: the byte size of everything
+    * under it (what [[SegmentMeta.bytes]] records) and its data files,
+    * selected exactly as Spark's own file listing selects them (hidden
+    * and `_`-prefixed names skipped at every level), in path order.
+    */
+  private[table] def listSegment(dir: Path): (Long, Seq[DataFile]) = {
+    val fs = TableIO.fs(dir)
+    def walk(d: Path, prefix: String, visible: Boolean): Seq[(Long, Option[DataFile])] =
+      fs.listStatus(d).toSeq.flatMap { st =>
+        val name = st.getPath.getName
+        val data = visible && !ColumnExpr.hiddenByListing(name)
+        if (st.isDirectory) walk(st.getPath, s"$prefix$name/", data)
+        else Seq(st.getLen -> Option.when(data)(
+          DataFile(prefix + name, st.getLen, st.getModificationTime)))
+      }
+    val all = walk(dir, "", visible = true)
+    (all.map(_._1).sum, all.flatMap(_._2).sortBy(_.path))
+  }
 
   private[table] implicit val formats: Formats = DefaultFormats
 

@@ -97,11 +97,6 @@ object TableIO {
     if (!f.exists(dir)) Nil else f.listStatus(dir).toSeq
   }
 
-  /** Recursive byte size of a directory — one getContentSummary RPC
-    * on HDFS (namenode-side walk), a local walk elsewhere.
-    */
-  def contentBytes(dir: Path): Long = fs(dir).getContentSummary(dir).getLength
-
   def mtime(p: Path): Long = fs(p).getFileStatus(p).getModificationTime
 
   def setMTime(p: Path, ms: Long): Unit = fs(p).setTimes(p, ms, -1)

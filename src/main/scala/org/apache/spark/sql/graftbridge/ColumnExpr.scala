@@ -96,18 +96,25 @@ object ColumnExpr {
       schema, isStreaming = true)
   }
 
-  /** Resolve a multi-path parquet relation with a fixed schema (the
-    * DataSource factory is private[sql]) — gives a graft-table read
+  /** A Parquet relation over an already-built file index with a fixed
+    * schema, as `spark.read.schema(schema).parquet(...)` resolves one
+    * (data schema forced nullable, no partition columns, no options) —
     * the identical vectorized HadoopFsRelation a plain parquet read
-    * gets, pushdown included.
+    * gets, pushdown included, minus the path checks and the listing.
     */
-  def parquetRelation(spark: org.apache.spark.sql.SparkSession,
-                      paths: Seq[String],
-                      schema: org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.sources.BaseRelation =
-    org.apache.spark.sql.execution.datasources.DataSource(
-      sparkSession = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      className = "parquet",
-      paths = paths,
-      userSpecifiedSchema = Some(schema)).resolveRelation()
+  def indexRelation(spark: org.apache.spark.sql.SparkSession,
+                    index: org.apache.spark.sql.execution.datasources.FileIndex,
+                    schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.execution.datasources.HadoopFsRelation =
+    org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
+      new org.apache.spark.sql.types.StructType(), schema.asNullable, None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat(),
+      Map.empty)(spark)
+
+  /** Whether Spark's own file listing skips a file or directory of this
+    * name (hidden, `_`-prefixed, in-flight copies) — the rule
+    * `HadoopFSUtils` applies, which is `private[spark]`.
+    */
+  def hiddenByListing(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
 }

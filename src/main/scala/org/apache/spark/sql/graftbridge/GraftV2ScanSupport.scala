@@ -1,19 +1,20 @@
 package org.apache.spark.sql.graftbridge
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, InterpretedMutableProjection, Unevaluable}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.connector.expressions.{Expression => V2Expression, NamedReference}
 import org.apache.spark.sql.connector.expressions.aggregate.{AggregateFunc, Aggregation, Count, CountStar, Max, Min, Sum => V2Sum}
 import org.apache.spark.sql.connector.read.{Batch, LocalScan, Scan, ScanBuilder, Statistics => V2Statistics, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, SupportsReportStatistics}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan, SparkStrategy}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, FileScanBuilder}
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.table.SegmentMeta
+import graft.table.{GraftSnapshotFileIndex, SegmentMeta}
 
 /** Bridge for the V2 catalog's segment-pruned parquet reads: Spark's
   * file-source scan builders push CATALYST filter expressions through
@@ -25,18 +26,20 @@ import graft.table.SegmentMeta
   */
 object GraftV2ScanSupport {
 
-  /** A ScanBuilder over a graft table's segment dirs that, on filter
-    * pushdown, asks `prune` which paths survive the predicate's
-    * min/max stats and rebuilds the underlying parquet builder over
-    * only the survivors — then delegates filter, column and aggregate
-    * pushdown to it unchanged. Spark's push order (filters → sample →
-    * aggregates → … → columns) makes the rebuild safe: it happens in
-    * the first step, before any other state lands on the inner
-    * builder. `prune` failures fall back to the full path set —
-    * pruning is an optimization, never a correctness gate.
+  /** A ScanBuilder over a snapshot of a graft table — a Parquet scan
+    * builder over its [[GraftSnapshotFileIndex]], so the catalog names
+    * every file and planning lists nothing — that, on filter pushdown,
+    * asks `prune` which of the snapshot's segments survive the
+    * predicate's min/max stats and rebuilds the inner builder over the
+    * index narrowed to the survivors — then delegates filter, column
+    * and aggregate pushdown to it unchanged. Spark's push order
+    * (filters → sample → aggregates → … → columns) makes the rebuild
+    * safe: it happens in the first step, before any other state lands
+    * on the inner builder. `prune` failures fall back to the whole
+    * snapshot — pruning is an optimization, never a correctness gate.
     *
-    * `statsMetas` (when supplied: the SAME catalog snapshot the paths
-    * came from) additionally serves an UNFILTERED pushed aggregation
+    * `statsMetas` (when supplied: the index's own entries, when their
+    * stats may answer) additionally serves an UNFILTERED pushed aggregation
     * of COUNT(*)/COUNT(col)/MIN(col)/MAX(col) straight from the
     * segment stats as a [[LocalScan]] — `SELECT COUNT(*) FROM
     * cat.ns.t` then costs ONE catalog read instead of a footer read
@@ -45,7 +48,7 @@ object GraftV2ScanSupport {
     *
     * `trichotomy` (when supplied) extends the fold to FILTERED
     * aggregates: given the pushed conjuncts it must return
-    * `Some(allInSurvivors -> theirPaths)` ONLY when every snapshot
+    * `Some(allInSurvivors)` ONLY when every snapshot
     * segment is PROVEN all-out (no row matches — pruned from the
     * scan) or all-in (every row matches, null semantics included;
     * `SegmentedTable.provenAllIn`). Exactness has two payoffs: the
@@ -70,23 +73,29 @@ object GraftV2ScanSupport {
     */
   def segmentPrunedParquetBuilder(
       spark: SparkSession, name: String, schema: StructType,
-      allPaths: Seq[String],
-      prune: Seq[Expression] => Seq[String],
+      index: GraftSnapshotFileIndex,
+      prune: Seq[Expression] => Seq[SegmentMeta],
       statsMetas: Option[Seq[SegmentMeta]] = None,
-      trichotomy: Seq[Expression] => Option[(Seq[SegmentMeta], Seq[String])] =
-        _ => None): ScanBuilder =
+      trichotomy: Seq[Expression] => Option[Seq[SegmentMeta]] = _ => None)
+      : ScanBuilder =
     new ScanBuilder
       with SupportsPushDownCatalystFilters
       with SupportsPushDownRequiredColumns
       with SupportsPushDownAggregates {
 
-      private def mk(paths: Seq[String]): FileScanBuilder =
-        ParquetTable(name, spark, CaseInsensitiveStringMap.empty(),
-          paths, Some(schema), classOf[ParquetFileFormat])
-          .newScanBuilder(CaseInsensitiveStringMap.empty())
-          .asInstanceOf[FileScanBuilder]
+      // the schemas a ParquetTable over `schema` hands its builder
+      private val nullable = schema.asNullable
 
-      private var inner: FileScanBuilder = mk(allPaths)
+      private def mk(ix: GraftSnapshotFileIndex): FileScanBuilder =
+        ParquetScanBuilder(spark, ix, nullable, nullable,
+          CaseInsensitiveStringMap.empty())
+
+      // the snapshot restricted to `segs`, or the whole index when
+      // nothing was pruned away
+      private def narrowed(segs: Seq[SegmentMeta]): FileScanBuilder =
+        if (segs.size == index.metas.size) inner else mk(index.narrow(segs))
+
+      private var inner: FileScanBuilder = mk(index)
       // the segment set a pushed aggregate may fold over: the full
       // snapshot while unfiltered, the proven all-in survivors once an
       // exactly-provable filter lands, None once any other filter does
@@ -110,20 +119,19 @@ object GraftV2ScanSupport {
           try trichotomy(filters)
           catch { case scala.util.control.NonFatal(_) => None }
         proven match {
-          case Some((allIn, keptPaths)) =>
+          case Some(allIn) =>
             // every row of every kept segment provably satisfies the
             // conjuncts: the pruned scan IS the filtered scan, and the
             // stats fold may serve aggregates over the survivors
             foldMetas = Some(allIn)
-            if (keptPaths.toSet != allPaths.toSet) inner = mk(keptPaths)
+            inner = narrowed(allIn)
             inner.pushFilters(filters) // defense-in-depth; all rows match
             Nil // exact — no post-scan filter
           case None =>
             foldMetas = None
-            val kept =
+            inner = narrowed(
               try prune(filters)
-              catch { case scala.util.control.NonFatal(_) => allPaths }
-            if (kept.toSet != allPaths.toSet) inner = mk(kept)
+              catch { case scala.util.control.NonFatal(_) => index.metas })
             inner.pushFilters(filters)
         }
       }
@@ -277,13 +285,8 @@ object GraftV2ScanSupport {
       }
 
       override def build(): Scan = folded match {
-        case Some((aggSchema, rowValues)) => new LocalScan {
-          override def readSchema(): StructType = aggSchema
-          override def rows(): Array[InternalRow] =
-            rowValues.map(v => InternalRow(v: _*)).toArray
-          override def description(): String =
-            s"GraftStatsFoldScan($name, ${aggSchema.fieldNames.mkString(", ")})"
-        }
+        case Some((aggSchema, rowValues)) =>
+          new GraftStatsFoldScan(name, aggSchema, rowValues.map(v => InternalRow(v: _*)))
         case None =>
           val built = inner.build()
           // runtime (join-driven) segment pruning: the columns the
@@ -302,8 +305,9 @@ object GraftV2ScanSupport {
               segs.exists(s => s.stats.contains(n) || s.nullCounts.contains(n))))
           val scan: Scan =
             if (statCols.isEmpty) built
-            else new GraftRuntimePrunedScan(name, built, statCols, prune,
-              allPaths)
+            else new GraftRuntimePrunedScan(name, built, statCols,
+              exprs => prune(exprs).map(m => index.segmentDir(m.id).toString),
+              index.rootPaths.map(_.toString))
           // an untouched build is the relation-level stats probe (see
           // `untouched`): serve the catalog's EXACT totals when every
           // segment recorded its byte size; otherwise (old catalogs,
@@ -345,6 +349,55 @@ object GraftV2ScanSupport {
           }
       }
     }
+
+  /** A pushed aggregate answered from the catalog: its rows, ready. */
+  final class GraftStatsFoldScan(name: String, schema: StructType,
+                                 folded: Seq[InternalRow]) extends LocalScan {
+    override def readSchema(): StructType = schema
+    override def rows(): Array[InternalRow] = folded.toArray
+    override def description(): String =
+      s"GraftStatsFoldScan($name, ${schema.fieldNames.mkString(", ")})"
+  }
+
+  /** Plans the pushed-aggregate `Project` Spark keeps above a
+    * [[GraftStatsFoldScan]] as one [[LocalTableScanExec]] holding the
+    * projected rows — what `ConvertToLocalRelation` does for a
+    * `LocalRelation`, which runs before scan pushdown and so never sees
+    * this shape. `collect()` of a folded catalog aggregate then runs no
+    * Spark job.
+    */
+  case class GraftFoldScanStrategy(spark: SparkSession) extends SparkStrategy {
+    spark.conf.set(GraftFoldScanStrategy.Marker, "true")
+
+    override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+      case p @ Project(list, r: DataSourceV2ScanRelation)
+          if r.scan.isInstanceOf[GraftStatsFoldScan] && list.forall(e =>
+            e.deterministic && !e.exists(x =>
+              x.isInstanceOf[Unevaluable] && !x.isInstanceOf[AttributeReference])) =>
+        val projection = new InterpretedMutableProjection(list, r.output)
+        projection.initialize(0)
+        val rows = r.scan.asInstanceOf[GraftStatsFoldScan].rows().toSeq
+          .map(row => projection(row).copy())
+        LocalTableScanExec(p.output, rows, None) :: Nil
+      case _ => Nil
+    }
+  }
+
+  object GraftFoldScanStrategy {
+    private val Marker = "spark.graft.rule.foldScanStrategy"
+
+    /** Register the strategy in a session built without
+      * GraftSqlExtensions; no-op when it is already there.
+      */
+    def ensureRegistered(s: SparkSession): Unit = {
+      s.sessionState.planner
+      s.synchronized {
+        if (!java.lang.Boolean.parseBoolean(s.conf.get(Marker, "false")))
+          s.experimental.extraStrategies =
+            s.experimental.extraStrategies :+ GraftFoldScanStrategy(s)
+      }
+    }
+  }
 
   /** Test observability: scan name → (files before, files after) of
     * the LAST runtime-filtered partition planning. Driver-side only.

@@ -586,4 +586,47 @@ class AggTableSpec extends AnyFunSuite {
     AggTables.drop(spark, "v2_legacy_mv")
     spark.sql("DROP TABLE graft.default.v2_legacy")
   }
+
+  test("catalog surface: collect() of a folded aggregate runs no Spark job") {
+    orders("v2_fold", "v2_fold_mv")
+    val q = "SELECT count(*), min(o_orderkey), max(o_orderkey) FROM graft.default.v2_fold"
+    val df = spark.sql(q)
+    var got: Seq[org.apache.spark.sql.Row] = Nil
+    assert(jobsDuring { got = df.collect().toSeq } == 0,
+      df.queryExecution.executedPlan.toString)
+    // the rows the scan gives, read without the catalog
+    val dirs = graft.sql.GraftCatalog.open(spark, "v2_fold").liveSegmentPaths.map(_.toString)
+    val want = spark.read.parquet(dirs: _*)
+      .agg(count(lit(1)), min(col("o_orderkey")), max(col("o_orderkey"))).collect().toSeq
+    assert(got == want)
+    AggTables.drop(spark, "v2_fold_mv")
+    spark.sql("DROP TABLE graft.default.v2_fold")
+  }
+
+  test("a filtered aggregate over a table with a rollup plans without reading the MV store") {
+    graft.table.FaultFileSystem.register(spark)
+    val root = orders("mv_shape", "mv_shape_mv")
+    // the MV catalog served through faultfs:, so every read of it is seen
+    val local = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(graft.table.FaultFileSystem.localRoot), "mvstore")
+    java.nio.file.Files.copy(
+      java.nio.file.Paths.get(AggTables.catalogDir(spark), "mv_shape_mv.json"),
+      local.resolve("mv_shape_mv.json"))
+    val store = graft.table.FaultFileSystem.pathOf(local.toString)
+    val t = graft.table.SegmentedTable.open(spark, root)
+    def planned(df: org.apache.spark.sql.DataFrame) = graft.table.FaultFileSystem.recording {
+      df.queryExecution.optimizedPlan
+    }._2.filter(_._2.toString.startsWith(store))
+    spark.conf.set("spark.graft.mv.store", store)
+    try {
+      val filtered = t.read().where(col("o_orderkey") > 100)
+        .groupBy(col("o_orderstatus")).agg(sum(col("o_orderkey")).as("s"))
+      assert(planned(filtered).isEmpty)
+      val bare = t.read().groupBy(col("o_orderstatus")).agg(sum(col("o_orderkey")).as("s"))
+      assert(planned(bare).exists(_._1 == "listStatus"))
+      assert(rewritten(bare, "mv_shape_mv"))
+    } finally spark.conf.set("spark.graft.mv.store", TestSpark.mvStore)
+    AggTables.drop(spark, "mv_shape_mv")
+    spark.sql("DROP TABLE graft.default.mv_shape")
+  }
 }
