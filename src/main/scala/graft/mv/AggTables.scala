@@ -376,7 +376,7 @@ object AggTables {
     isFreshAgainst(spark, meta, {
       val base = normalize(meta.basePath)
       if (!SegmentedTable.exists(base)) None
-      else Some(SegmentedTable.open(spark, base).liveSegmentSnapshot._1)
+      else Some(SegmentedTable.open(spark, base).liveSegments)
     })
 
   /** [[isFresh]] given the base table's current live segments (None:
@@ -416,25 +416,25 @@ object AggTables {
   /** The base's data files — a single-file base (a bare .parquet
     * path) lists as itself, a directory base as its non-hidden files,
     * and a SEGMENTED-TABLE root as the data files of its current live
-    * segments, read from the table catalog (so retired/staging/index
-    * dirs never leak into the rollup or the fingerprint) together with
-    * the stamp of that same live set: ONE status read gives both.
+    * segments, named by the table catalog through the live snapshot's
+    * file index (so retired/staging/index dirs never leak into the
+    * rollup or the fingerprint, and no segment dir is listed) together
+    * with the stamp of that same live set: ONE status read gives both.
     */
   private def listBase(spark: SparkSession, basePath: String): BaseListing = {
     val base = normalize(basePath)
+    if (SegmentedTable.exists(base)) {
+      val t = SegmentedTable.open(spark, base)
+      val live = t.liveSegments
+      return BaseListing(t.snapshotIndex(live).allFiles(), stampOf(live))
+    }
     val p = new Path(base)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) return BaseListing(Nil, "")
-    def filesIn(dir: Path): Seq[FileStatus] =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.toSeq
-    if (SegmentedTable.exists(base)) {
-      val (live, dirs) = SegmentedTable.open(spark, base).liveSegmentSnapshot
-      BaseListing(dirs.flatMap(filesIn), stampOf(live))
-    } else BaseListing(filesIn(p), "")
+    if (!fs.exists(p)) BaseListing(Nil, "")
+    else BaseListing(fs.listStatus(p).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.toSeq, "")
   }
 
   /** Listing entry = "base-relative-path:length:mtime" — the unit the
@@ -548,7 +548,7 @@ case class AggTableRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     if (mvs.isEmpty) return None
     // one status read serves the live-set check, the fold check and
     // every stamp comparison
-    lazy val live = scan.map(_.table.liveSegmentSnapshot._1)
+    lazy val live = scan.map(_.table.liveSegments)
     val servable = scan.forall { s =>
       val ids = live.get.map(_.id)
       ids.nonEmpty && s.ids.size == ids.size && s.ids.toSet == ids.toSet &&

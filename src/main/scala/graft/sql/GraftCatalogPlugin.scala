@@ -495,19 +495,15 @@ private[graft] class GraftV2Table(ident: Identifier, tablePath: String,
         }
       }
     } else {
-      // one snapshot feeds the scan's file index and (while its dirs
-      // are all on disk) the stats metas behind aggregate pushdown — a
-      // pushed COUNT(*)/COUNT(col)/MIN/MAX with no filters folds from
-      // the segment catalog as a LocalScan, zero file I/O. Time-travel
-      // reads fold too: the snapshot's per-segment stats are exact
-      // (dirs immutable, ids never reused) — but only while every dir
-      // is still on disk (a cleaned snapshot must keep failing at
-      // scan, not silently answer from metadata)
-      val (metas, foldable) = asOfVersion match {
-        case None => (t.liveSegments, true)
-        case Some(v) => t.segmentSnapshotAt(v)
-      }
-      val statsMetas = if (foldable) Some(metas) else None
+      // one snapshot feeds the scan's file index and the stats metas
+      // behind aggregate pushdown — a pushed COUNT(*)/COUNT(col)/MIN/MAX
+      // with no filters folds from the segment catalog as a LocalScan,
+      // zero file I/O. Time-travel reads fold too: the snapshot's
+      // per-segment stats are exact (dirs immutable, ids never reused).
+      // A snapshot whose dirs cleanFiles removed fails here, at planning,
+      // exactly as readAsOf does — the index names files from the
+      // catalog, so nothing later would notice before execution
+      val metas = asOfVersion.fold(t.liveSegments)(t.segmentSnapshotAt)
       // exact-filter trichotomy over the SAME snapshot: every segment
       // proven all-out (pruned) or all-in (every row matches,
       // provenAllIn) ⇒ the pruned scan IS the filtered scan — the
@@ -517,13 +513,11 @@ private[graft] class GraftV2Table(ident: Identifier, tablePath: String,
       // catalog surface). One straddler ⇒ None, plain pruning with
       // the filter kept.
       val trich: Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-          Option[Seq[graft.table.SegmentMeta]] =
-        if (!foldable) _ => None
-        else filters => {
-          val cond = filters.reduce(org.apache.spark.sql.catalyst.expressions.And)
-          val survivors = t.pruneAmong(metas, cond)
-          if (t.provenAllIn(survivors, cond)) Some(survivors) else None
-        }
+          Option[Seq[graft.table.SegmentMeta]] = filters => {
+        val cond = filters.reduce(org.apache.spark.sql.catalyst.expressions.And)
+        val survivors = t.pruneAmong(metas, cond)
+        if (t.provenAllIn(survivors, cond)) Some(survivors) else None
+      }
       // driver-side segment pruning from the pushed filters — the
       // catalog-read twin of the GraftSegmentPruning optimizer rule
       // (min/max stats eliminate whole segments before the scan plans;
@@ -539,9 +533,7 @@ private[graft] class GraftV2Table(ident: Identifier, tablePath: String,
           .fold(metas)(t.pruneAmong(metas, _))
       org.apache.spark.sql.graftbridge.GraftV2ScanSupport
         .segmentPrunedParquetBuilder(spark, s"graft.${ident.name}",
-          t.schema, t.snapshotIndex(metas), pruneFn,
-          statsMetas = statsMetas,
-          trichotomy = trich)
+          t.schema, t.snapshotIndex(metas), pruneFn, trichotomy = trich)
     }
   }
 

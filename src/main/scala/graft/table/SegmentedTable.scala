@@ -43,7 +43,8 @@ case class ColStats(min: String, max: String, kind: String,
   * directory selects them, recorded once when the segment is staged —
   * what a read sees without listing the directory
   * ([[GraftSnapshotFileIndex]]). None for entries written before the
-  * field existed: such a segment is listed when a read uses it.
+  * field existed, and for retired (compacted, deleted) entries, whose
+  * commit drops the list: such a segment is listed when a read uses it.
   * Some(Nil) is an empty segment.
   */
 case class SegmentMeta(id: Int, status: String, rowCount: Long,
@@ -131,7 +132,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
 
   /** Segment count at or below which the catalog stays a plain inline
     * list (`manifest.fold.threshold` property). 2000 entries ≈ 2 MB of
-    * JSON ≈ 130 ms commits — interactive; beyond it the list folds
+    * JSON (a live entry's file list adds ~100 B per data file) ≈ 130 ms commits — interactive; beyond it the list folds
     * into an immutable manifest page and commits rewrite only the
     * tail (measured at 10^5 segments: 6.5 s whole-list vs ms tail).
     */
@@ -171,8 +172,13 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     // the threshold (every ordinary table). Prefix comparison is
     // reference-first per element: append/update paths reuse the
     // unchanged SegmentMeta objects, so the common case is n pointer
-    // compares, not n deep equalities. ----
-    val full = s.segments
+    // compares, not n deep equalities. A retired entry drops its file
+    // list here, so status and every later log entry carry files only
+    // for live segments: time travel reads the log entry of its own
+    // version, where the segment was still live, and a raw read of a
+    // retired dir lists it (see [[SegmentMeta.files]]). ----
+    val full = s.segments.map(seg =>
+      if (seg.status == SUCCESS || seg.files.isEmpty) seg else seg.copy(files = None))
     val threshold = manifestFoldThreshold
     val kept: Option[(String, Int)] = prevStatus.flatMap(_.manifest).flatMap { m =>
       val mSegs = manifestSegments(statusFile, m)
@@ -784,10 +790,6 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
   private[graft] def liveSegments: Seq[SegmentMeta] =
     status.segments.filter(_.status == SUCCESS)
 
-  /** Current live segment directories. */
-  private[graft] def liveSegmentPaths: Seq[Path] =
-    liveSegments.map(s => segmentDir(s.id))
-
   /** The current live set as a scan of this table — what a catalog
     * relation reads, and what [[graft.mv.AggTableRewrite]] requires a
     * segmented scan to equal before it rewrites.
@@ -806,16 +808,6 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
   /** The snapshot file index over segments `segs` of this table. */
   private[graft] def snapshotIndex(segs: Seq[SegmentMeta]): GraftSnapshotFileIndex =
     new GraftSnapshotFileIndex(this, segs)
-
-  /** ONE status read → (metas, dirs) of the same snapshot — the V2
-    * catalog scan builder needs the stats metas and the scan paths to
-    * describe the SAME segment set (two separate reads could straddle
-    * a commit and fold stats for a segment the scan doesn't read).
-    */
-  private[graft] def liveSegmentSnapshot: (Seq[SegmentMeta], Seq[Path]) = {
-    val segs = liveSegments
-    (segs, segs.map(s => segmentDir(s.id)))
-  }
 
   /** Full-table read: the live segments' files in one Parquet scan
     * (split sizing handled by Spark), named by the catalog through a
@@ -1409,17 +1401,20 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     (logged ++ cur).distinct.sorted
   }
 
-  /** A PAST version's live set, and whether every one of its segment
-    * dirs is still on disk (cleanFiles removes retired dirs): the
-    * snapshot's stats are exact — segment dirs are immutable and ids
-    * never reused — so time-travel aggregates may fold from them, but
-    * ONLY while the data is still on disk: a fold must never silently
-    * outlive files whose scan would fail (the time-travel contract:
-    * never serve history we cannot prove still exists).
+  /** A PAST version's live set, failing loudly when cleanFiles has
+    * removed any of its segment dirs: the snapshot's entries name its
+    * files without touching the file system, so this check is what
+    * keeps a time-travel read — a scan, or an aggregate folded from the
+    * snapshot's stats — from serving history we cannot prove still
+    * exists (a scan would otherwise fail only at execution, or, with
+    * `spark.sql.files.ignoreMissingFiles`, silently drop the rows).
     */
-  private[graft] def segmentSnapshotAt(version: Long): (Seq[SegmentMeta], Boolean) = {
-    val segs = statusAt(version).segments.filter(_.status == SUCCESS)
-    (segs, segs.forall(s => TableIO.exists(segmentDir(s.id))))
+  private[graft] def segmentSnapshotAt(version: Long): Seq[SegmentMeta] = {
+    val live = statusAt(version).segments.filter(_.status == SUCCESS)
+    val gone = live.filterNot(s => TableIO.isDirectory(segmentDir(s.id)))
+    require(gone.isEmpty,
+      s"version $version references segments removed by cleanFiles: ${gone.map(_.id).mkString(",")}")
+    live
   }
 
   /** The version that was CURRENT at `epochMillis` (TIMESTAMP AS OF):
@@ -1465,13 +1460,8 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     * segment of that snapshot has since been physically removed by
     * cleanFiles (retention bounds how far back travel reaches).
     */
-  def readAsOf(version: Long): DataFrame = {
-    val live = statusAt(version).segments.filter(_.status == SUCCESS)
-    val gone = live.filterNot(s => TableIO.isDirectory(segmentDir(s.id)))
-    require(gone.isEmpty,
-      s"version $version references segments removed by cleanFiles: ${gone.map(_.id).mkString(",")}")
-    applyDefaults(readSegments(live))
-  }
+  def readAsOf(version: Long): DataFrame =
+    applyDefaults(readSegments(segmentSnapshotAt(version)))
 
   /** Change-data feed between two catalog versions (CDC): every row
     * added or removed in `(fromVersion, toVersion]`, tagged with
@@ -1597,8 +1587,11 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
       // compaction outputs as invisible, silently hiding a rollback
       // that changed the table's contents. Earlier log snapshots are
       // immutable, so the original compaction commit stays invisible.
+      // Revivals take the snapshot's own entry, which still names the
+      // segment's files (a retired entry dropped them).
+      val byId = target.map(s => s.id -> s).toMap
       val updated = st.segments.map { s =>
-        if (targetIds.contains(s.id)) s.copy(status = SUCCESS, dataChange = true)
+        if (targetIds.contains(s.id)) byId(s.id).copy(dataChange = true)
         else if (s.status == SUCCESS) s.copy(status = DELETED)
         else s
       } ++ target.filterNot(s => known.contains(s.id))

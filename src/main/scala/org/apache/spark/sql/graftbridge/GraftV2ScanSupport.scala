@@ -38,8 +38,7 @@ object GraftV2ScanSupport {
     * on the inner builder. `prune` failures fall back to the whole
     * snapshot — pruning is an optimization, never a correctness gate.
     *
-    * `statsMetas` (when supplied: the index's own entries, when their
-    * stats may answer) additionally serves an UNFILTERED pushed aggregation
+    * The index's own entries additionally serve an UNFILTERED pushed aggregation
     * of COUNT(*)/COUNT(col)/MIN(col)/MAX(col) straight from the
     * segment stats as a [[LocalScan]] — `SELECT COUNT(*) FROM
     * cat.ns.t` then costs ONE catalog read instead of a footer read
@@ -75,7 +74,6 @@ object GraftV2ScanSupport {
       spark: SparkSession, name: String, schema: StructType,
       index: GraftSnapshotFileIndex,
       prune: Seq[Expression] => Seq[SegmentMeta],
-      statsMetas: Option[Seq[SegmentMeta]] = None,
       trichotomy: Seq[Expression] => Option[Seq[SegmentMeta]] = _ => None)
       : ScanBuilder =
     new ScanBuilder
@@ -99,7 +97,7 @@ object GraftV2ScanSupport {
       // the segment set a pushed aggregate may fold over: the full
       // snapshot while unfiltered, the proven all-in survivors once an
       // exactly-provable filter lands, None once any other filter does
-      private var foldMetas: Option[Seq[SegmentMeta]] = statsMetas
+      private var foldMetas: Option[Seq[SegmentMeta]] = Some(index.metas)
       private var folded: Option[(StructType, Seq[Array[Any]])] = None
       // false once ANY pushdown call lands. Spark builds every
       // EXECUTED scan through the pushdown rule (which always calls
@@ -300,9 +298,9 @@ object GraftV2ScanSupport {
           // against the scan relation's output and fails on a column
           // pruning removed
           val readCols = built.readSchema().fieldNames.toSet
-          val statCols: Array[String] = statsMetas.fold(Array.empty[String])(
-            segs => schema.fieldNames.filter(n => readCols.contains(n) &&
-              segs.exists(s => s.stats.contains(n) || s.nullCounts.contains(n))))
+          val statCols: Array[String] = schema.fieldNames.filter(n =>
+            readCols.contains(n) &&
+              index.metas.exists(s => s.stats.contains(n) || s.nullCounts.contains(n)))
           val scan: Scan =
             if (statCols.isEmpty) built
             else new GraftRuntimePrunedScan(name, built, statCols,
@@ -314,38 +312,36 @@ object GraftV2ScanSupport {
           // bytes = -1) fall through to the file-size heuristic. The
           // thin stats shell still forwards execution methods in case
           // anyone runs it — semantics identical either way.
-          statsMetas match {
-            case Some(segs) if untouched && segs.forall(_.bytes >= 0L) =>
-              new Scan with SupportsReportStatistics {
-                override def readSchema(): StructType = scan.readSchema()
-                override def toBatch: Batch = scan.toBatch
-                override def description(): String = scan.description()
-                // forward the full Scan surface, not just the methods
-                // the stats probe is known to exercise — if a future
-                // Spark path ever EXECUTES a never-pushed-down scan,
-                // behavior must stay identical to the inner scan
-                override def toMicroBatchStream(checkpointLocation: String)
-                    : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-                  scan.toMicroBatchStream(checkpointLocation)
-                override def toContinuousStream(checkpointLocation: String)
-                    : org.apache.spark.sql.connector.read.streaming.ContinuousStream =
-                  scan.toContinuousStream(checkpointLocation)
-                override def supportedCustomMetrics()
-                    : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-                  scan.supportedCustomMetrics()
-                override def reportDriverMetrics()
-                    : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-                  scan.reportDriverMetrics()
-                override def columnarSupportMode(): Scan.ColumnarSupportMode =
-                  scan.columnarSupportMode()
-                override def estimateStatistics(): V2Statistics = new V2Statistics {
-                  override def sizeInBytes(): java.util.OptionalLong =
-                    java.util.OptionalLong.of(math.max(1L, segs.map(_.bytes).sum))
-                  override def numRows(): java.util.OptionalLong =
-                    java.util.OptionalLong.of(segs.map(_.rowCount).sum)
-                }
-              }
-            case _ => scan
+          val segs = index.metas
+          if (!untouched || !segs.forall(_.bytes >= 0L)) scan
+          else new Scan with SupportsReportStatistics {
+            override def readSchema(): StructType = scan.readSchema()
+            override def toBatch: Batch = scan.toBatch
+            override def description(): String = scan.description()
+            // forward the full Scan surface, not just the methods
+            // the stats probe is known to exercise — if a future
+            // Spark path ever EXECUTES a never-pushed-down scan,
+            // behavior must stay identical to the inner scan
+            override def toMicroBatchStream(checkpointLocation: String)
+                : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+              scan.toMicroBatchStream(checkpointLocation)
+            override def toContinuousStream(checkpointLocation: String)
+                : org.apache.spark.sql.connector.read.streaming.ContinuousStream =
+              scan.toContinuousStream(checkpointLocation)
+            override def supportedCustomMetrics()
+                : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+              scan.supportedCustomMetrics()
+            override def reportDriverMetrics()
+                : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+              scan.reportDriverMetrics()
+            override def columnarSupportMode(): Scan.ColumnarSupportMode =
+              scan.columnarSupportMode()
+            override def estimateStatistics(): V2Statistics = new V2Statistics {
+              override def sizeInBytes(): java.util.OptionalLong =
+                java.util.OptionalLong.of(math.max(1L, segs.map(_.bytes).sum))
+              override def numRows(): java.util.OptionalLong =
+                java.util.OptionalLong.of(segs.map(_.rowCount).sum)
+            }
           }
       }
     }

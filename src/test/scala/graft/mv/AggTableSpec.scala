@@ -595,7 +595,7 @@ class AggTableSpec extends AnyFunSuite {
     assert(jobsDuring { got = df.collect().toSeq } == 0,
       df.queryExecution.executedPlan.toString)
     // the rows the scan gives, read without the catalog
-    val dirs = graft.sql.GraftCatalog.open(spark, "v2_fold").liveSegmentPaths.map(_.toString)
+    val dirs = graft.table.LiveDirs.of(graft.sql.GraftCatalog.open(spark, "v2_fold"))
     val want = spark.read.parquet(dirs: _*)
       .agg(count(lit(1)), min(col("o_orderkey")), max(col("o_orderkey"))).collect().toSeq
     assert(got == want)

@@ -639,6 +639,37 @@ class GraftSqlSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft.default.cat_tt")
   }
 
+  test("V2 catalog: VERSION AS OF a snapshot cleanFiles removed fails at planning") {
+    val sf = graft.TestSpark.sf
+    spark.sql("DROP TABLE IF EXISTS graft.default.cat_tt_clean")
+    spark.sql("CREATE TABLE graft.default.cat_tt_clean (k BIGINT, v STRING) USING graft")
+    spark.sql(s"INSERT INTO graft.default.cat_tt_clean " +
+      s"SELECT r_regionkey, r_name FROM parquet.`$sf/region.parquet`")
+    spark.sql(s"INSERT INTO graft.default.cat_tt_clean " +
+      s"SELECT r_regionkey + 100, r_name FROM parquet.`$sf/region.parquet`")
+    val store = spark.conf.get("spark.graft.store")
+    val t = graft.table.SegmentedTable.open(spark, s"$store/cat_tt_clean")
+    val v2 = t.currentVersion
+    try {
+      // two segments become one: the v2 snapshot's dirs are retired
+      spark.sql("COMPACT GRAFT TABLE cat_tt_clean")
+      spark.sql("CLEAN GRAFT FILES FOR cat_tt_clean")
+      assert(spark.table("graft.default.cat_tt_clean").count() == 10)
+      Seq("false", "true").foreach { ignore =>
+        spark.conf.set("spark.sql.files.ignoreMissingFiles", ignore)
+        try Seq(s"SELECT * FROM graft.default.cat_tt_clean VERSION AS OF $v2",
+                s"SELECT count(*) FROM graft.default.cat_tt_clean VERSION AS OF $v2")
+          .foreach { q =>
+            val e = intercept[Exception] { spark.sql(q).queryExecution.executedPlan }
+            assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+              .exists(c => String.valueOf(c.getMessage).contains("removed by cleanFiles")),
+              s"ignoreMissingFiles=$ignore, $q: $e")
+          }
+        finally spark.conf.unset("spark.sql.files.ignoreMissingFiles")
+      }
+    } finally spark.sql("DROP TABLE IF EXISTS graft.default.cat_tt_clean")
+  }
+
   test("V2 catalog: filtered reads segment-prune driver-side") {
     spark.sql("DROP TABLE IF EXISTS graft.default.cat_prune")
     spark.sql("CREATE TABLE graft.default.cat_prune (k BIGINT, v STRING) USING graft")

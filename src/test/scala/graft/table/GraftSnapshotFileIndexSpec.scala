@@ -49,7 +49,7 @@ class GraftSnapshotFileIndexSpec extends AnyFunSuite {
 
   test("_metadata, input_file_name, inputFiles and sizeInBytes equal a listing of the same dirs") {
     val t = fourSegments(Files.createTempDirectory("graft_ix_meta"))
-    val dirs = t.liveSegmentPaths.map(_.toString)
+    val dirs = LiveDirs.of(t)
     def described(df: DataFrame): DataFrame = df.select(col("id"),
       col("_metadata.file_path"), col("_metadata.file_name"),
       col("_metadata.file_size"), col("_metadata.file_modification_time"),
@@ -108,6 +108,40 @@ class GraftSnapshotFileIndexSpec extends AnyFunSuite {
     assert(current.size == 3000 && asOf.size == 4000)
   }
 
+  test("a commit that retires a segment drops its file list; restore revives it") {
+    val t = fourSegments(Files.createTempDirectory("graft_ix_retire"))
+    val before = t.currentVersion
+    val want = rows(t.read())
+    t.compact()
+    val (live, retired) = t.status.segments.partition(_.status == SegmentedTable.SUCCESS)
+    assert(retired.size == 4 && retired.forall(_.files.isEmpty), retired)
+    assert(live.size == 1 && live.forall(_.files.exists(_.nonEmpty)), live)
+    // the snapshot's own log entry still names the files it read
+    assert(t.statusAt(before).segments.forall(_.files.exists(_.nonEmpty)))
+    assert(rows(t.readAsOf(before)) == want)
+    t.restoreTo(before)
+    val revived = t.status.segments.filter(_.status == SegmentedTable.SUCCESS)
+    assert(revived.map(_.id).sorted == retired.map(_.id).sorted)
+    assert(revived.forall(_.files.exists(_.nonEmpty)), revived)
+    assert(rows(t.read()) == want)
+  }
+
+  test("a rollup's base listing of a segmented table lists no segment dir") {
+    FaultFileSystem.register(spark)
+    val t = fourSegments(
+      Files.createTempDirectory(Paths.get(FaultFileSystem.localRoot), "ix_mv_base"))
+    val remote = FaultFileSystem.pathOf(t.root.toString)
+    val (print, calls) = FaultFileSystem.recording {
+      graft.mv.AggTables.fingerprint(spark, remote)
+    }
+    val segDir = "/segment_\\d+$".r
+    val listings = calls.collect {
+      case ("listStatus", p) if segDir.findFirstIn(p.toString).isDefined => p }
+    assert(listings.isEmpty, s"segment dirs listed: $listings")
+    // the same files, lengths and mtimes as the local spelling names
+    assert(print == graft.mv.AggTables.fingerprint(spark, t.root.toString))
+  }
+
   test("planning a graft.default read over a time window keeps the V1 rule's segments") {
     spark.sql("DROP TABLE IF EXISTS graft.default.ix_window")
     spark.sql("CREATE TABLE graft.default.ix_window (id BIGINT, d DATE) USING graft")
@@ -151,7 +185,7 @@ class GraftSnapshotFileIndexSpec extends AnyFunSuite {
     assert(listings.isEmpty, s"segment dirs listed: $listings")
     assert(fileProbes.isEmpty, s"data files probed: $fileProbes")
     assert(relationsOf(df).flatMap(_.location.rootPaths).map(_.getName) == Seq("segment_2"))
-    assert(rows(df) == rows(spark.read.parquet(t.liveSegmentPaths.map(_.toString): _*)
+    assert(rows(df) == rows(spark.read.parquet(LiveDirs.of(t): _*)
       .where(col("id") === 2345L)))
   }
 }

@@ -247,7 +247,7 @@ class SegmentedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val base = Files.createTempDirectory(Paths.get(FaultFileSystem.localRoot), "four")
     val t = SegmentedTable.create(spark, base.resolve("t").toString, spark.range(0).schema)
     (0 until 4).foreach(i => t.load(spark.range(i * 1000L, (i + 1) * 1000L, 1, 3).toDF()))
-    t.liveSegmentPaths.map(_.toString)
+    LiveDirs.of(t)
   }
 
   private def relationsOf(df: org.apache.spark.sql.DataFrame)
@@ -347,7 +347,7 @@ class SegmentedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = SegmentedTable.create(spark, base.resolve("t").toString,
       spark.range(0).schema, Map("bloom_columns" -> "id"))
     (0 until 4).foreach(i => t.load(spark.range(0, 4000).where(col("id") % 4 === i).toDF()))
-    val remote = t.liveSegmentPaths.map(p => FaultFileSystem.pathOf(p.toString))
+    val remote = LiveDirs.of(t).map(FaultFileSystem.pathOf)
     def plan() = {
       val df = spark.read.parquet(remote: _*).where(col("id") === 5L)
       df.queryExecution.optimizedPlan
