@@ -2,7 +2,7 @@ package graft.table
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal}
 import org.apache.spark.sql.functions.{col, lit, max, min, sum}
 import org.apache.spark.sql.types._
@@ -302,23 +302,41 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     math.min(math.max(rows, 1L), math.max(cap, 1L))
   }
 
-  /** One extra pass per bloom column at load/compact time — the write
-    * path pays for the read path, as with every index. The distributed
-    * scan happens where the STAGED data lives (outside the lock); only
-    * the sidecar write needs the final segment id.
+  /** The bloom-indexed columns the schema holds, each with one filter
+    * per segment.
+    */
+  private def indexedBloomColumns: Seq[String] =
+    bloomColumns.filter(schema.fieldNames.contains)
+
+  /** One [[SegmentBloom]] aggregate per indexed column over
+    * xxhash64(column) — the hash the probe side computes — sized for a
+    * segment of `rows` rows; `value` gives the column in the frame
+    * aggregated.
+    */
+  private def bloomAggs(rows: Long, value: String => Column): Seq[Column] =
+    indexedBloomColumns.map(c => SegmentBloom.agg(
+      org.apache.spark.sql.functions.xxhash64(value(c)),
+      bloomExpectedItems(rows), 0.03).as(s"bloom_$c"))
+
+  private def bloomsOf(r: Row): Seq[(String, org.apache.spark.util.sketch.BloomFilter)] =
+    indexedBloomColumns.map(c => c -> SegmentBloom.read(r.getAs[Array[Byte]](s"bloom_$c")))
+
+  /** The bloom pass for a staged segment whose filters could not ride
+    * on its write — its row count, which sizes them, was not known
+    * before the write. One aggregation over the staged files builds
+    * every indexed column's filter. The distributed scan happens where
+    * the STAGED data lives (outside the lock); only the sidecar write
+    * needs the final segment id. An empty segment needs no sidecar (it
+    * is either discarded — empty stream batches — or prunes on
+    * rowCount).
     */
   private def computeBlooms(dir: Path, rows: Long)
-      : Seq[(String, org.apache.spark.util.sketch.BloomFilter)] =
-    // rows == 0: Spark's stat.bloomFilter NPEs on empty input, and an
-    // empty segment needs no sidecar anyway (it is either discarded —
-    // empty stream batches — or prunes on rowCount). Without the guard
-    // an empty micro-batch into a bloom-indexed table kills the stream.
-    if (rows == 0) Nil
-    else bloomColumns.filter(schema.fieldNames.contains).map { c =>
-      c -> spark.read.schema(schema).parquet(dir.toString)
-        .select(org.apache.spark.sql.functions.xxhash64(col(c)).as("h"))
-        .stat.bloomFilter("h", bloomExpectedItems(rows), 0.03)
-    }
+      : Seq[(String, org.apache.spark.util.sketch.BloomFilter)] = {
+    val aggs = bloomAggs(rows, col)
+    if (rows == 0 || aggs.isEmpty) Nil
+    else bloomsOf(spark.read.schema(schema).parquet(dir.toString)
+      .agg(aggs.head, aggs.tail: _*).collect()(0))
+  }
 
   private def writeBlooms(segId: Int,
       blooms: Seq[(String, org.apache.spark.util.sketch.BloomFilter)]): Unit =
@@ -326,9 +344,6 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
       val os = TableIO.createOverwrite(bloomFile(segId, c))
       try bf.writeTo(os) finally os.close()
     }
-
-  private def buildBlooms(dir: Path, segId: Int, rows: Long): Unit =
-    writeBlooms(segId, computeBlooms(dir, rows))
 
   /** The qualified `_meta` dir, computed once per instance: the prefix
     * of this table's keys in the process-wide bloom cache.
@@ -401,18 +416,10 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
 
   import SegmentedTable.StagedSegment
 
-  /** All of a segment write's heavy work — the distributed layout +
-    * parquet write, the stats pass, and the bloom passes — against a
-    * unique temp dir, with NO lock held. Not dot-prefixed: Spark's
-    * file listing skips hidden paths, which would break the stats
-    * read; queries never scan the table root wholesale, so the
-    * in-progress dir is invisible to them either way.
-    */
   /** Refresh a staging dir's mtime so [[sweepStaleStaging]]'s TTL
-    * measures time since the LAST completed phase, not since the
-    * parquet write finished — the stats and bloom passes run after the
-    * write stops touching the dir, and without the refresh a slow
-    * stage could look abandoned mid-flight.
+    * measures time since the LAST completed phase: the bloom pass runs
+    * after the write stops touching the dir, and without the refresh a
+    * slow stage could look abandoned mid-flight.
     */
   private def touchStaging(dir: Path): Unit =
     try TableIO.setMTime(dir, System.currentTimeMillis())
@@ -433,37 +440,66 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     // relation schemas nullable (asNullable), so the table's OWN
     // rewrite paths (compact/DML) hand back nested types whose only
     // difference is containsNull/nullable flags
-    val caseSensitive =
-      spark.conf.get("spark.sql.caseSensitive", "false").toBoolean
-    def key(n: String) = if (caseSensitive) n else n.toLowerCase(java.util.Locale.ROOT)
-    val declared = schema.fields.map(f => key(f.name) -> f.dataType).toMap
-    val unknown = df.schema.fieldNames.filterNot(n => declared.contains(key(n)))
+    val declared = schema.fields.map(f => columnKey(f.name) -> f.dataType).toMap
+    val unknown = df.schema.fieldNames.filterNot(n => declared.contains(columnKey(n)))
     require(unknown.isEmpty,
       s"schema mismatch writing to $root: column(s) ${unknown.mkString(", ")} " +
         "are not in the table schema and reads would silently drop them; " +
         "add them first (ALTER ... ADD COLUMN) or drop them from the input")
     val conflicts = df.schema.fields
-      .filter(f => declared.get(key(f.name))
+      .filter(f => declared.get(columnKey(f.name))
         .exists(d => !ColumnExpr.sameType(d, f.dataType)))
-      .map(f => s"${f.name} (table ${declared(key(f.name)).simpleString}, " +
+      .map(f => s"${f.name} (table ${declared(columnKey(f.name)).simpleString}, " +
         s"input ${f.dataType.simpleString})")
     require(conflicts.isEmpty,
       s"schema mismatch writing to $root: type conflict on " +
         s"${conflicts.mkString("; ")} — cast the input explicitly")
   }
 
-  private def stageSegment(df: DataFrame, prefix: String): StagedSegment = {
+  /** A column name as the session resolves it. */
+  private def columnKey(n: String): String =
+    if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean) n
+    else n.toLowerCase(java.util.Locale.ROOT)
+
+  /** All of a segment write's heavy work against a unique temp dir,
+    * with NO lock held: ONE distributed layout + Parquet write, which
+    * also observes the catalog stats of exactly the rows it writes
+    * (`Dataset.observe`). When the caller knows the segment's row count
+    * exactly (`rows`: a compaction's inputs, a rewrite's survivors),
+    * the bloom filters, which that count sizes, ride on the write too;
+    * otherwise, or when the write observed a different count, one bloom
+    * pass over the staged files builds them. Not dot-prefixed: Spark's
+    * file listing skips hidden paths, which would break that pass;
+    * queries never scan the table root wholesale, so the in-progress
+    * dir is invisible to them either way.
+    */
+  private def stageSegment(df: DataFrame, prefix: String,
+                           rows: Option[Long] = None): StagedSegment = {
     validateAgainstSchema(df)
     val tmp = new Path(root,
       s"${prefix}_${System.nanoTime()}_${SegmentedTable.stagingSeq.incrementAndGet()}")
-    applyLayout(df).write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    touchStaging(tmp)
-    val (rows, stats, nulls) = collectStats(tmp)
-    touchStaging(tmp)
-    val blooms = computeBlooms(tmp, rows)
-    touchStaging(tmp)
+    // a table column the input lacks is null in every row, as a read fills it
+    val present = df.schema.fieldNames.map(columnKey).toSet
+    def value(c: String): Column =
+      if (present(columnKey(c))) col(c) else lit(null).cast(schema(c).dataType)
+    val rideBlooms = rows.filter(_ > 0)
+    val metrics = statsAggs(value) ++ rideBlooms.toSeq.flatMap(bloomAggs(_, value))
+    val observed = org.apache.spark.sql.Observation()
+    applyLayout(df).observe(observed, metrics.head, metrics.tail: _*)
+      .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
+    val row = scala.concurrent.Await.result(observed.future,
+      scala.concurrent.duration.Duration(10, java.util.concurrent.TimeUnit.MINUTES))
+    val (n, stats, nulls) = statsOf(row)
+    val blooms =
+      if (n == 0) Nil
+      else if (rideBlooms.contains(n)) bloomsOf(row)
+      else {
+        val built = computeBlooms(tmp, n)
+        if (built.nonEmpty) touchStaging(tmp)
+        built
+      }
     val (bytes, files) = listSegment(tmp)
-    StagedSegment(tmp, rows, stats, nulls, blooms, bytes, files)
+    StagedSegment(tmp, n, stats, nulls, blooms, bytes, files)
   }
 
   /** Allocate the next id, rename the staged dir into place, commit.
@@ -744,27 +780,33 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     id
   }
 
-  /** One pass over the fresh segment computes per-column min/max for
-    * the catalog (cheap: projection of stat-eligible columns only).
+  /** The stat-eligible columns (min/max) and the summable ones with
+    * the type their exact sum accumulates in: integral and decimal
+    * columns (wide-decimal accumulation — immune to per-segment
+    * overflow and to eval-mode differences between stage time and
+    * query time).
     */
-  private def collectStats(dir: Path): (Long, Map[String, ColStats], Map[String, Long]) = {
-    val df = spark.read.schema(schema).parquet(dir.toString)
-    val eligible = schema.fields.filter(f => kindOf(f.dataType).isDefined)
-    // integral and decimal columns additionally record their EXACT sum
-    // (wide-decimal accumulation — immune to per-segment overflow and
-    // to eval-mode differences between stage time and query time)
-    val summable = schema.fields
-      .flatMap(f => SegmentedTable.sumStageType(f.dataType).map(f -> _))
-    val aggs = eligible.flatMap(f =>
-      Seq(min(col(f.name)).as(s"min_${f.name}"), max(col(f.name)).as(s"max_${f.name}"))) ++
-      summable.map { case (f, dt) =>
-        sum(col(f.name).cast(dt)).as(s"sum_${f.name}") } ++
-      schema.fields.map(f =>
-        org.apache.spark.sql.functions.count(col(f.name)).as(s"cnt_${f.name}")) :+
-      org.apache.spark.sql.functions.count(lit(1)).as("__rows")
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+  private lazy val statFields = schema.fields.toSeq.filter(f => kindOf(f.dataType).isDefined)
+  private lazy val sumFields =
+    schema.fields.toSeq.flatMap(f => SegmentedTable.sumStageType(f.dataType).map(f -> _))
+
+  /** A segment's catalog stats as named aggregates: min/max, exact sums,
+    * every column's non-null count and the row count; `value` gives a
+    * column in the frame aggregated.
+    */
+  private def statsAggs(value: String => Column): Seq[Column] = {
+    val F = org.apache.spark.sql.functions
+    statFields.flatMap(f =>
+      Seq(min(value(f.name)).as(s"min_${f.name}"), max(value(f.name)).as(s"max_${f.name}"))) ++
+      sumFields.map { case (f, dt) => sum(value(f.name).cast(dt)).as(s"sum_${f.name}") } ++
+      schema.fields.toSeq.map(f => F.count(value(f.name)).as(s"cnt_${f.name}")) :+
+      F.count(lit(1)).as("__rows")
+  }
+
+  /** (rows, stats, null counts) from a row of [[statsAggs]]. */
+  private def statsOf(row: Row): (Long, Map[String, ColStats], Map[String, Long]) = {
     val rows = row.getAs[Long]("__rows")
-    val sums = summable.flatMap { case (f, _) =>
+    val sums = sumFields.flatMap { case (f, _) =>
       Option(row.getAs[java.math.BigDecimal](s"sum_${f.name}")).map { v =>
         // integral sums keep their r19 integer-string format; decimal
         // sums carry the column's scale as a plain decimal string
@@ -772,7 +814,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
                    else v.toPlainString)
       }
     }.toMap
-    val stats = eligible.flatMap { f =>
+    val stats = statFields.flatMap { f =>
       val mn = row.getAs[Any](s"min_${f.name}")
       val mx = row.getAs[Any](s"max_${f.name}")
       if (mn == null || mx == null) None
@@ -1255,12 +1297,11 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
   /** Crash hygiene: a writer that died between staging and commit
     * leaves its temp dir behind (the price of writing outside the
     * lock). Sweep staging dirs untouched for longer than the TTL.
-    * [[stageSegment]] refreshes the dir's mtime between its phases
-    * (parquet write, stats pass, bloom passes), so the TTL bounds ONE
-    * phase plus the final lock wait (LeaseLock acquisition times out
-    * at 2 min) — default 1 h covers both; a table whose single bloom
-    * or stats pass runs longer should raise the `staging.ttl.ms`
-    * property.
+    * The write leaves the dir's mtime at its end and [[stageSegment]]
+    * refreshes it after a bloom pass, so the TTL bounds ONE phase plus
+    * the final lock wait (LeaseLock acquisition times out at 2 min) —
+    * default 1 h covers both; a table whose single write or bloom pass
+    * runs longer should raise the `staging.ttl.ms` property.
     */
   private def sweepStaleStaging(): Unit = {
     val ttl = properties.get("staging.ttl.ms").map(_.toLong).getOrElse(3600000L)
@@ -1347,7 +1388,8 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     // deleteSegments/deleteSegmentsBefore in the merge window aborts
     // the compaction instead of resurrecting the deleted rows
     // write + stats + blooms all staged outside the lock
-    val staged = stageSegment(readSegments(live), "compacting")
+    val staged = stageSegment(readSegments(live), "compacting",
+      rows = Some(live.map(_.rowCount).sum))
     withLock {
       val st = status
       val stillLive = live.forall(s =>
@@ -1712,7 +1754,8 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
       stagePar(affected) { case (seg, matched) =>
         if (matched == seg.rowCount) seg -> None
         else seg -> Some(stageSegment(
-          readSegments(Seq(seg)).filter(keep), s"rewriting_${seg.id}"))
+          readSegments(Seq(seg)).filter(keep), s"rewriting_${seg.id}",
+          rows = Some(seg.rowCount - matched)))
       }
     commitRewrites(affected.map(_._1), replacements, "DELETE")
     affected.map(_._2).sum
@@ -1741,7 +1784,8 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
           case None => col(f.name)
         }
       }: _*)
-      seg -> Some(stageSegment(rewritten, s"rewriting_${seg.id}"))
+      seg -> Some(stageSegment(rewritten, s"rewriting_${seg.id}",
+        rows = Some(seg.rowCount)))
     }
     commitRewrites(affected.map(_._1), replacements, "UPDATE")
     affected.map(_._2).sum
@@ -1847,7 +1891,8 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
       else {
         val survivors = readSegments(Seq(seg))
           .join(keys, keyCols, "left_anti")
-        seg -> Some(stageSegment(survivors, s"rewriting_${seg.id}"))
+        seg -> Some(stageSegment(survivors, s"rewriting_${seg.id}",
+          rows = Some(seg.rowCount - matched)))
       }
     }
     // incoming batch lands as one new segment in the same commit
@@ -2082,14 +2127,13 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
         try stagePar(affected) { seg =>
           val staged = stageSegment(
             survivorsAll.filter(col("__seg") === seg.id).drop("__seg"),
-            s"rewriting_${seg.id}")
+            s"rewriting_${seg.id}", rows = Some(seg.rowCount - segStats(seg.id)._2))
           if (staged.rows == 0L) { deleteRecursively(staged.tmp); seg -> None }
           else seg -> Some(staged)
         } finally survivorsAll.unpersist()
       // an update/delete-only MERGE never stages an insert segment —
       // without a WHEN NOT MATCHED clause the write job (plus its
-      // stats/bloom collection) would only produce an empty result to
-      // delete again
+      // bloom pass) would only produce an empty result to delete again
       val insStagedOpt =
         if (notMatched.isEmpty) None
         else {
@@ -2368,7 +2412,7 @@ object SegmentedTable {
   private def isIntegralType(t: DataType): Boolean =
     SegmentedTable.isIntegral(t)
 
-  private def kindOf(t: DataType): Option[String] = t match {
+  private[table] def kindOf(t: DataType): Option[String] = t match {
     case _: NumericType => Some("numeric")
     case StringType => Some("string")
     case TimestampType | TimestampNTZType => Some("timestamp")
@@ -2376,7 +2420,7 @@ object SegmentedTable {
     case _ => None
   }
 
-  private def fmt(v: Any): String = v match {
+  private[table] def fmt(v: Any): String = v match {
     case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
     case d: java.time.LocalDate => d.toEpochDay.toString
     case t: java.sql.Timestamp => (t.getTime * 1000L + t.getNanos / 1000 % 1000).toString

@@ -44,9 +44,32 @@ object TableIO {
     * before any session is built).
     */
   def hadoopConf: Configuration =
-    SparkSession.getActiveSession
-      .map(_.sessionState.newHadoopConf())
+    SparkSession.getActiveSession.map(sessionHadoopConf)
       .getOrElse(new Configuration())
+
+  /** (the session's SQL settings, the context's Hadoop configuration
+    * and its size, the copy built from them).
+    */
+  @volatile private var confCache: (Map[String, String], Configuration, Int, Configuration) = _
+
+  /** `newHadoopConf()` copies the whole Hadoop configuration (~180 µs)
+    * and a commit makes dozens of metadata calls, so one copy serves
+    * every call until the session's SQL settings change or a key is
+    * added to the context's Hadoop configuration — the two ways an
+    * `fs.*` setting reaches a session. The copy is shared: callers
+    * only read it.
+    */
+  private def sessionHadoopConf(spark: SparkSession): Configuration = {
+    val settings = spark.sessionState.conf.getAllConfs
+    val base = spark.sparkContext.hadoopConfiguration
+    val c = confCache
+    if (c != null && (c._2 eq base) && c._3 == base.size && c._1 == settings) c._4
+    else {
+      val built = spark.sessionState.newHadoopConf()
+      confCache = (settings, base, base.size, built)
+      built
+    }
+  }
 
   /** FileSystem instances are cached by Hadoop per (scheme, authority,
     * ugi) — a map lookup after the first call. Local paths (whether

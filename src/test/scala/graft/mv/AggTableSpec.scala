@@ -405,30 +405,6 @@ class AggTableSpec extends AnyFunSuite {
   private def rewritten(df: org.apache.spark.sql.DataFrame, mv: String): Boolean =
     scannedPaths(df).exists(_.contains(mv))
 
-  /** Spark jobs started while `f` runs. Listener events arrive in job
-    * order, so a marker job run afterwards bounds the count.
-    */
-  private def jobsDuring(f: => Unit): Int = {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.spec.marker") != null))
-          markerSeen.countDown()
-        else if (markerSeen.getCount > 0) started.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      f
-      sc.setLocalProperty("graft.spec.marker", "1")
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty("graft.spec.marker", null)
-      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
-      started.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** `f`'s answer computed with no rollup registered. */
   private def withoutMvs[T](f: => T): T = {
     spark.conf.set("spark.graft.mv.store", "/nonexistent_mv_dir")
@@ -476,7 +452,7 @@ class AggTableSpec extends AnyFunSuite {
          (what, q, served) <- cases) {
       val df = q(read())
       df.queryExecution.analyzed
-      assert(jobsDuring(df.queryExecution.optimizedPlan) == 0,
+      assert(graft.SparkJobs.count(spark)(df.queryExecution.optimizedPlan) == 0,
         s"$what on $surface ran a job while planning")
       assert(rewritten(df, "plan_jobs_mv") == served,
         s"$what on $surface: ${df.queryExecution.optimizedPlan}")
@@ -592,7 +568,7 @@ class AggTableSpec extends AnyFunSuite {
     val q = "SELECT count(*), min(o_orderkey), max(o_orderkey) FROM graft.default.v2_fold"
     val df = spark.sql(q)
     var got: Seq[org.apache.spark.sql.Row] = Nil
-    assert(jobsDuring { got = df.collect().toSeq } == 0,
+    assert(graft.SparkJobs.count(spark) { got = df.collect().toSeq } == 0,
       df.queryExecution.executedPlan.toString)
     // the rows the scan gives, read without the catalog
     val dirs = graft.table.LiveDirs.of(graft.sql.GraftCatalog.open(spark, "v2_fold"))
