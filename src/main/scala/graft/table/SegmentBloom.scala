@@ -24,6 +24,14 @@ import org.apache.spark.util.sketch.BloomFilter
   * its buffer to the driver: a task keeps the raw hashes while they
   * take less space than the filter, so the driver receives at most
   * min(filter, 8 bytes per row) per task.
+  *
+  * A write whose row count is not known before it cannot size the
+  * filter (`expectedItems` 0): the aggregate then evaluates to the raw
+  * hashes, for the driver to build the filter once the write has
+  * counted its rows ([[SegmentBloom.filterOf]]), or to null when they
+  * exceed [[SegmentBloom.RawHashBudget]] — each of a stage's tasks keeps
+  * at most its share of that budget, so what the tasks ship stays
+  * bounded whatever their number.
   */
 case class SegmentBloom(
     child: Expression,
@@ -34,7 +42,12 @@ case class SegmentBloom(
   extends TypedImperativeAggregate[SegmentBloom.Buffer] with UnaryLike[Expression] {
   import SegmentBloom.Buffer
 
-  override def createAggregationBuffer(): Buffer = new Buffer(expectedItems, fpp)
+  override def createAggregationBuffer(): Buffer = {
+    // a task keeps its stage's share of the raw-hash budget; the driver,
+    // merging every task's buffer, holds the whole budget
+    val tasks = Option(org.apache.spark.TaskContext.get()).map(_.numPartitions()).getOrElse(1)
+    new Buffer(expectedItems, fpp, SegmentBloom.RawHashBudget / math.max(tasks, 1))
+  }
 
   override def update(b: Buffer, input: InternalRow): Buffer = {
     val v = child.eval(input)
@@ -44,16 +57,12 @@ case class SegmentBloom(
 
   override def merge(b: Buffer, o: Buffer): Buffer = { b.mergeFrom(o); b }
 
-  override def eval(b: Buffer): Any = {
-    val bos = new ByteArrayOutputStream()
-    b.filter.writeTo(bos)
-    bos.toByteArray
-  }
+  override def eval(b: Buffer): Any = b.result
 
   override def serialize(b: Buffer): Array[Byte] = b.toBytes
 
   override def deserialize(bytes: Array[Byte]): Buffer =
-    Buffer.fromBytes(expectedItems, fpp, bytes)
+    Buffer.fromBytes(createAggregationBuffer(), bytes)
 
   override def withNewMutableAggBufferOffset(o: Int): SegmentBloom =
     copy(mutableAggBufferOffset = o)
@@ -63,12 +72,21 @@ case class SegmentBloom(
     copy(child = c)
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
+  override def nullable: Boolean = expectedItems <= 0
   override def prettyName: String = "segment_bloom"
 }
 
 object SegmentBloom {
-  /** Column API: the serialized filter over `hash` (a long column). */
+  /** Raw hashes one aggregate keeps across all of a write's tasks when
+    * the filter cannot be sized up front: 8 MB, a segment of about a
+    * million rows. A larger write builds its filter by a pass over its
+    * files, whose fixed cost is small beside such a write.
+    */
+  val RawHashBudget: Int = 1 << 20
+
+  /** Column API: the serialized filter over `hash` (a long column), or
+    * with `expectedItems` 0 its raw hashes (null beyond the budget).
+    */
   def agg(hash: Column, expectedItems: Long, fpp: Double): Column =
     ColumnExpr.toColumn(
       SegmentBloom(ColumnExpr.expr(hash), expectedItems, fpp).toAggregateExpression())
@@ -77,31 +95,63 @@ object SegmentBloom {
   def read(bytes: Array[Byte]): BloomFilter =
     BloomFilter.readFrom(new ByteArrayInputStream(bytes))
 
-  /** The raw hashes while fewer than a filter's worth of longs, then
-    * the filter itself.
+  /** The filter of `expectedItems` built from an unsized aggregate's
+    * raw hashes.
     */
-  final class Buffer(expectedItems: Long, fpp: Double) {
-    private val limit: Int = math.max(16L, math.min(Int.MaxValue - 8L,
-      BloomFilter.optimalNumOfBits(expectedItems, fpp) / 64)).toInt
+  def filterOf(hashes: Array[Byte], expectedItems: Long, fpp: Double): BloomFilter = {
+    val bf = BloomFilter.create(expectedItems, fpp)
+    val buf = java.nio.ByteBuffer.wrap(hashes)
+    while (buf.hasRemaining) bf.putLong(buf.getLong())
+    bf
+  }
+
+  /** The raw hashes while fewer than `limit` — a filter's worth of longs
+    * when sized, the budget share when not — then the filter itself, or
+    * (unsized) nothing: overflowed.
+    */
+  final class Buffer(expectedItems: Long, fpp: Double, budget: Int) {
+    private val sized = expectedItems > 0
+    private val limit: Int =
+      if (sized) math.max(16L, math.min(Int.MaxValue - 8L,
+        BloomFilter.optimalNumOfBits(expectedItems, fpp) / 64)).toInt
+      else budget
     private var hashes = new Array[Long](16)
     private var n = 0
     private var bloom: BloomFilter = null
+    private var overflowed = false
 
     def put(h: Long): Unit =
       if (bloom != null) bloom.putLong(h)
-      else if (n == limit) { toFilter(); bloom.putLong(h) }
-      else {
+      else if (overflowed) ()
+      else if (n == limit) {
+        if (sized) { toFilter(); bloom.putLong(h) }
+        else { overflowed = true; hashes = null; n = 0 }
+      } else {
         if (n == hashes.length)
-          hashes = java.util.Arrays.copyOf(hashes, math.min(limit, n * 2))
+          hashes = java.util.Arrays.copyOf(hashes, math.max(1, math.min(limit, n * 2)))
         hashes(n) = h
         n += 1
       }
 
     def mergeFrom(o: Buffer): Unit =
-      if (o.bloom == null) { var i = 0; while (i < o.n) { put(o.hashes(i)); i += 1 } }
+      if (o.overflowed) { overflowed = true; hashes = null; n = 0 }
+      else if (o.bloom == null) { var i = 0; while (i < o.n) { put(o.hashes(i)); i += 1 } }
       else { if (bloom == null) toFilter(); bloom.mergeInPlace(o.bloom) }
 
-    def filter: BloomFilter = { if (bloom == null) toFilter(); bloom }
+    /** The serialized filter (sized), the raw hashes, or null. */
+    def result: Array[Byte] =
+      if (sized) {
+        if (bloom == null) toFilter()
+        val bos = new ByteArrayOutputStream()
+        bloom.writeTo(bos)
+        bos.toByteArray
+      } else if (overflowed) null
+      else {
+        val buf = java.nio.ByteBuffer.allocate(8 * n)
+        var i = 0
+        while (i < n) { buf.putLong(hashes(i)); i += 1 }
+        buf.array()
+      }
 
     private def toFilter(): Unit = {
       bloom = BloomFilter.create(expectedItems, fpp)
@@ -114,9 +164,9 @@ object SegmentBloom {
     def toBytes: Array[Byte] = {
       val bos = new ByteArrayOutputStream()
       val out = new DataOutputStream(bos)
-      out.writeBoolean(bloom != null)
+      out.writeByte(if (overflowed) 2 else if (bloom != null) 1 else 0)
       if (bloom != null) bloom.writeTo(out)
-      else {
+      else if (!overflowed) {
         out.writeInt(n)
         var i = 0
         while (i < n) { out.writeLong(hashes(i)); i += 1 }
@@ -127,14 +177,15 @@ object SegmentBloom {
   }
 
   object Buffer {
-    def fromBytes(expectedItems: Long, fpp: Double, bytes: Array[Byte]): Buffer = {
-      val b = new Buffer(expectedItems, fpp)
+    def fromBytes(b: Buffer, bytes: Array[Byte]): Buffer = {
       val in = new DataInputStream(new ByteArrayInputStream(bytes))
-      if (in.readBoolean()) b.bloom = BloomFilter.readFrom(in)
-      else {
-        val n = in.readInt()
-        var i = 0
-        while (i < n) { b.put(in.readLong()); i += 1 }
+      in.readByte() match {
+        case 2 => b.overflowed = true; b.hashes = null
+        case 1 => b.bloom = BloomFilter.readFrom(in)
+        case _ =>
+          val n = in.readInt()
+          var i = 0
+          while (i < n) { b.put(in.readLong()); i += 1 }
       }
       b
     }

@@ -309,33 +309,40 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     bloomColumns.filter(schema.fieldNames.contains)
 
   /** One [[SegmentBloom]] aggregate per indexed column over
-    * xxhash64(column) — the hash the probe side computes — sized for a
-    * segment of `rows` rows; `value` gives the column in the frame
-    * aggregated.
+    * xxhash64(column) — the hash the probe side computes — sized for
+    * `expectedItems` (0: unsized, the raw hashes); `value` gives the
+    * column in the frame aggregated.
     */
-  private def bloomAggs(rows: Long, value: String => Column): Seq[Column] =
+  private def bloomAggs(expectedItems: Long, value: String => Column): Seq[Column] =
     indexedBloomColumns.map(c => SegmentBloom.agg(
-      org.apache.spark.sql.functions.xxhash64(value(c)),
-      bloomExpectedItems(rows), 0.03).as(s"bloom_$c"))
+      org.apache.spark.sql.functions.xxhash64(value(c)), expectedItems, 0.03)
+      .as(s"bloom_$c"))
 
-  private def bloomsOf(r: Row): Seq[(String, org.apache.spark.util.sketch.BloomFilter)] =
-    indexedBloomColumns.map(c => c -> SegmentBloom.read(r.getAs[Array[Byte]](s"bloom_$c")))
+  /** Every indexed column's filter from a row of [[bloomAggs]], or None
+    * when an unsized aggregate overflowed its budget.
+    */
+  private def bloomsOf(r: Row, filter: Array[Byte] => org.apache.spark.util.sketch.BloomFilter)
+      : Option[Seq[(String, org.apache.spark.util.sketch.BloomFilter)]] = {
+    val bytes = indexedBloomColumns.map(c => c -> r.getAs[Array[Byte]](s"bloom_$c"))
+    if (bytes.exists(_._2 == null)) None
+    else Some(bytes.map { case (c, b) => c -> filter(b) })
+  }
 
   /** The bloom pass for a staged segment whose filters could not ride
-    * on its write — its row count, which sizes them, was not known
-    * before the write. One aggregation over the staged files builds
-    * every indexed column's filter. The distributed scan happens where
-    * the STAGED data lives (outside the lock); only the sidecar write
-    * needs the final segment id. An empty segment needs no sidecar (it
-    * is either discarded — empty stream batches — or prunes on
-    * rowCount).
+    * on its write: sized for another row count than it holds, or built
+    * from more raw hashes than [[SegmentBloom.RawHashBudget]]. One
+    * aggregation over the staged files builds every indexed column's
+    * filter. The distributed scan happens where the STAGED data lives
+    * (outside the lock); only the sidecar write needs the final segment
+    * id. An empty segment needs no sidecar (it is either discarded —
+    * empty stream batches — or prunes on rowCount).
     */
   private def computeBlooms(dir: Path, rows: Long)
       : Seq[(String, org.apache.spark.util.sketch.BloomFilter)] = {
-    val aggs = bloomAggs(rows, col)
+    val aggs = bloomAggs(bloomExpectedItems(rows), col)
     if (rows == 0 || aggs.isEmpty) Nil
     else bloomsOf(spark.read.schema(schema).parquet(dir.toString)
-      .agg(aggs.head, aggs.tail: _*).collect()(0))
+      .agg(aggs.head, aggs.tail: _*).collect()(0), SegmentBloom.read).get
   }
 
   private def writeBlooms(segId: Int,
@@ -463,15 +470,17 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
 
   /** All of a segment write's heavy work against a unique temp dir,
     * with NO lock held: ONE distributed layout + Parquet write, which
-    * also observes the catalog stats of exactly the rows it writes
-    * (`Dataset.observe`). When the caller knows the segment's row count
-    * exactly (`rows`: a compaction's inputs, a rewrite's survivors),
-    * the bloom filters, which that count sizes, ride on the write too;
-    * otherwise, or when the write observed a different count, one bloom
-    * pass over the staged files builds them. Not dot-prefixed: Spark's
-    * file listing skips hidden paths, which would break that pass;
-    * queries never scan the table root wholesale, so the in-progress
-    * dir is invisible to them either way.
+    * also observes the catalog stats and the bloom filters of exactly
+    * the rows it writes (`Dataset.observe`). A filter's size depends on
+    * the segment's row count: when the caller knows it exactly (`rows`:
+    * a compaction's inputs, a rewrite's survivors) the write builds the
+    * filters; otherwise it collects the raw hashes and the filters are
+    * built here from the count it observed. A filter sized for another
+    * count, or raw hashes beyond their budget, leave one bloom pass over
+    * the staged files. Not dot-prefixed: Spark's file listing skips
+    * hidden paths, which would break that pass; queries never scan the
+    * table root wholesale, so the in-progress dir is invisible to them
+    * either way.
     */
   private def stageSegment(df: DataFrame, prefix: String,
                            rows: Option[Long] = None): StagedSegment = {
@@ -482,20 +491,23 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     val present = df.schema.fieldNames.map(columnKey).toSet
     def value(c: String): Column =
       if (present(columnKey(c))) col(c) else lit(null).cast(schema(c).dataType)
-    val rideBlooms = rows.filter(_ > 0)
-    val metrics = statsAggs(value) ++ rideBlooms.toSeq.flatMap(bloomAggs(_, value))
+    val sized = rows.filter(_ > 0)
+    val metrics = statsAggs(value) ++ bloomAggs(sized.map(bloomExpectedItems).getOrElse(0L), value)
     val observed = org.apache.spark.sql.Observation()
     applyLayout(df).observe(observed, metrics.head, metrics.tail: _*)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     val row = scala.concurrent.Await.result(observed.future,
       scala.concurrent.duration.Duration(10, java.util.concurrent.TimeUnit.MINUTES))
     val (n, stats, nulls) = statsOf(row)
+    lazy val ridden =
+      if (sized.isEmpty) bloomsOf(row, SegmentBloom.filterOf(_, bloomExpectedItems(n), 0.03))
+      else if (sized.contains(n)) bloomsOf(row, SegmentBloom.read)
+      else None
     val blooms =
       if (n == 0) Nil
-      else if (rideBlooms.contains(n)) bloomsOf(row)
-      else {
+      else ridden.getOrElse {
         val built = computeBlooms(tmp, n)
-        if (built.nonEmpty) touchStaging(tmp)
+        touchStaging(tmp)
         built
       }
     val (bytes, files) = listSegment(tmp)

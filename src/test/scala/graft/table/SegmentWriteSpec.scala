@@ -8,10 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{SparkJobs, TestSpark}
 
-/** The segment write path: a staged segment's catalog stats, and its
-  * bloom filters when its row count is known before the write, are
-  * observed on the Parquet write itself instead of by passes over the
-  * staged files.
+/** The segment write path: a staged segment's catalog stats and bloom
+  * filters are observed on the Parquet write itself instead of by
+  * passes over the staged files.
   */
 class SegmentWriteSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -54,7 +53,7 @@ class SegmentWriteSpec extends AnyFunSuite {
     t.status.segments.filter(s => s.id >= before && s.status == SegmentedTable.SUCCESS)
       .map(_.id)
 
-  test("one job per staged segment when its row count is known; no stats pass") {
+  test("one job per staged segment: stats and blooms ride on the write") {
     val li = rows.cache()
     try {
       li.count()
@@ -68,13 +67,12 @@ class SegmentWriteSpec extends AnyFunSuite {
         Map("sort_columns" -> "ship_day", "bloom_columns" -> blooms))
       t.load(li.filter(col("l_orderkey") % 2 === 0))
       // INSERT into a bloom-indexed table: its size is unknown before the
-      // write, so the write (one job) plus one bloom pass, and no stats pass
+      // write, which collects the raw hashes; no stats or bloom pass
       var next = t.status.nextId
       val ins = staging(SparkJobs.during(spark)(
         t.load(li.filter(col("l_orderkey") % 2 === 1))))
       assert(newIds(t, next).size == 1)
-      assert(ins.size == 2 && bloomPasses(ins) == 1, show(ins))
-      assert(ins.values.exists(_.size == 1), show(ins))
+      assert(ins.size == 1 && ins.values.forall(_.size == 1), show(ins))
 
       // DELETE rewriting both segments: one job each
       next = t.status.nextId
@@ -90,22 +88,37 @@ class SegmentWriteSpec extends AnyFunSuite {
       assert(newIds(t, next).size == 1)
       assert(upd.size == 1 && upd.values.forall(_.size == 1), show(upd))
 
-      // MERGE: the rewrite is its write alone (whose plan also builds the
-      // merge keys' broadcast); the inserted batch, of the source's size
-      // (unknown up front), is its write plus one bloom pass
+      // MERGE: the rewrite and the inserted batch are one write each (the
+      // rewrite's plan also builds the merge keys' broadcast)
       next = t.status.nextId
       val batch = t.read().filter(col("l_orderkey") === 3)
         .withColumn("l_quantity", lit(7.0))
       val mrg = staging(SparkJobs.during(spark)(
         t.merge(batch, Seq("l_orderkey", "l_linenumber"))))
       assert(newIds(t, next).size == 2)
-      assert(mrg.size == 3 && bloomPasses(mrg) == 1, show(mrg))
+      assert(mrg.size == 2 && bloomPasses(mrg) == 0, show(mrg))
 
       // COMPACT: the write is the only job
       val before = t.read().count()
       assert(SparkJobs.count(spark)(t.compact()) == 1)
       assert(t.read().count() == before)
     } finally li.unpersist()
+  }
+
+  test("a write task beyond its share of the raw-hash budget leaves one bloom pass") {
+    // two tasks, each entitled to half the budget: the first holds more
+    // than half, though the write as a whole stays within the budget
+    val big = SegmentBloom.RawHashBudget * 3L / 5
+    val spans = spark.sparkContext.parallelize(Seq(0L -> big, big -> (big + 1)), 2)
+    val ids = spark.createDataFrame(spans.flatMap { case (a, b) => a until b }
+      .map(org.apache.spark.sql.Row(_)), new org.apache.spark.sql.types.StructType()
+      .add("id", org.apache.spark.sql.types.LongType))
+    assert(ids.rdd.getNumPartitions == 2)
+    val t = SegmentedTable.create(spark, freshRoot("budget"), ids.schema,
+      Map("bloom_columns" -> "id"))
+    val q = staging(SparkJobs.during(spark)(t.load(ids)))
+    assert(q.size == 2 && bloomPasses(q) == 1, show(q))
+    assertAsTwoPass(t, newIds(t, 0))
   }
 
   /** The two-pass reference, recomputed from the staged files: the
@@ -171,7 +184,8 @@ class SegmentWriteSpec extends AnyFunSuite {
         assertAsTwoPass(t, ids)
         ids
       }
-      // loads of unknown size: stats observed, blooms by the fallback pass
+      // loads of unknown size: filters built from the raw hashes the
+      // write collected, sized by the count it observed
       (0 until 3).foreach(k => step(t.load(li.filter(col("l_orderkey") % 3 === k))))
       // rewrites of known size: stats and blooms observed on the write
       assert(step(t.delete(col("l_linenumber") === 1)).size == 3)
