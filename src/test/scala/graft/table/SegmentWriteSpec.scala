@@ -22,7 +22,8 @@ class SegmentWriteSpec extends AnyFunSuite {
     * decimal, dates, timestamps and strings.
     */
   private lazy val rows: DataFrame =
-    spark.read.parquet("/root/testdata/sf0.01/lineitem.parquet").select(
+    spark.read.parquet(
+      s"${new java.io.File(TestSpark.sf).getParent}/sf0.01/lineitem.parquet").select(
       col("l_orderkey"), col("l_partkey"), col("l_linenumber"),
       col("l_quantity"), col("l_returnflag"), col("l_shipdate"),
       to_date(col("l_shipdate")).as("ship_day"),
