@@ -11,42 +11,32 @@ import org.apache.spark.sql.graftbridge.ColumnExpr
 import org.apache.spark.sql.types.{BinaryType, DataType}
 import org.apache.spark.util.sketch.BloomFilter
 
-/** A segment's bloom filter as an aggregate: every non-null long of
-  * `child` (the column's xxhash64) put into `BloomFilter.create(
-  * expectedItems, fpp)`, evaluated to the filter's serialized bytes.
-  * The filter depends only on the set of values put, so the bytes equal
-  * those of any other build of the same filter over the same rows.
+/** The raw material of a segment's bloom filter as an aggregate: every
+  * non-null long of `child` (the column's xxhash64), evaluated to those
+  * longs packed big-endian, or to null once they exceed
+  * [[SegmentBloom.RawHashBudget]].
   *
-  * Its own aggregate rather than Spark's `BloomFilterAggregate`, which
-  * caps items and bits by the runtime-filter session confs (4M items,
-  * 64M bits) below the table's `bloom.max.items`. It also rides on a
-  * segment write as an observed metric, where every write task ships
-  * its buffer to the driver: a task keeps the raw hashes while they
-  * take less space than the filter, so the driver receives at most
-  * min(filter, 8 bytes per row) per task.
-  *
-  * A write whose row count is not known before it cannot size the
-  * filter (`expectedItems` 0): the aggregate then evaluates to the raw
-  * hashes, for the driver to build the filter once the write has
-  * counted its rows ([[SegmentBloom.filterOf]]), or to null when they
-  * exceed [[SegmentBloom.RawHashBudget]] — each of a stage's tasks keeps
-  * at most its share of that budget, so what the tasks ship stays
-  * bounded whatever their number.
+  * It rides on a segment write as an observed metric, before the write
+  * has counted the rows that size the filter; the driver builds the
+  * filter from the hashes afterwards ([[SegmentBloom.filterOf]]). Every
+  * write task ships its buffer to the driver, so each task keeps at
+  * most its share of the budget (budget ÷ the stage's tasks) and
+  * overflows past it: what the driver receives stays within the budget
+  * whatever the number of tasks, and an overflow leaves the filter to a
+  * pass over the written files.
   */
 case class SegmentBloom(
     child: Expression,
-    expectedItems: Long,
-    fpp: Double,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[SegmentBloom.Buffer] with UnaryLike[Expression] {
   import SegmentBloom.Buffer
 
   override def createAggregationBuffer(): Buffer = {
-    // a task keeps its stage's share of the raw-hash budget; the driver,
-    // merging every task's buffer, holds the whole budget
+    // a task keeps its stage's share of the budget; the driver, merging
+    // every task's buffer, holds the whole budget
     val tasks = Option(org.apache.spark.TaskContext.get()).map(_.numPartitions()).getOrElse(1)
-    new Buffer(expectedItems, fpp, SegmentBloom.RawHashBudget / math.max(tasks, 1))
+    new Buffer(SegmentBloom.RawHashBudget / math.max(tasks, 1))
   }
 
   override def update(b: Buffer, input: InternalRow): Buffer = {
@@ -72,32 +62,25 @@ case class SegmentBloom(
     copy(child = c)
 
   override def dataType: DataType = BinaryType
-  override def nullable: Boolean = expectedItems <= 0
+  override def nullable: Boolean = true
   override def prettyName: String = "segment_bloom"
 }
 
 object SegmentBloom {
-  /** Raw hashes one aggregate keeps across all of a write's tasks when
-    * the filter cannot be sized up front: 8 MB, a segment of about a
-    * million rows. A larger write builds its filter by a pass over its
-    * files, whose fixed cost is small beside such a write.
+  /** Raw hashes one aggregate keeps across all of a write's tasks: 8 MB,
+    * a segment of about a million rows. A larger write builds its
+    * filters by a pass over its files, whose fixed cost is small beside
+    * such a write.
     */
   val RawHashBudget: Int = 1 << 20
 
-  /** Column API: the serialized filter over `hash` (a long column), or
-    * with `expectedItems` 0 its raw hashes (null beyond the budget).
+  /** Column API: the raw hashes of `hash` (a long column), null beyond
+    * the budget.
     */
-  def agg(hash: Column, expectedItems: Long, fpp: Double): Column =
-    ColumnExpr.toColumn(
-      SegmentBloom(ColumnExpr.expr(hash), expectedItems, fpp).toAggregateExpression())
+  def agg(hash: Column): Column =
+    ColumnExpr.toColumn(SegmentBloom(ColumnExpr.expr(hash)).toAggregateExpression())
 
-  /** The filter an aggregate result holds. */
-  def read(bytes: Array[Byte]): BloomFilter =
-    BloomFilter.readFrom(new ByteArrayInputStream(bytes))
-
-  /** The filter of `expectedItems` built from an unsized aggregate's
-    * raw hashes.
-    */
+  /** The filter of `expectedItems` built from the aggregate's raw hashes. */
   def filterOf(hashes: Array[Byte], expectedItems: Long, fpp: Double): BloomFilter = {
     val bf = BloomFilter.create(expectedItems, fpp)
     val buf = java.nio.ByteBuffer.wrap(hashes)
@@ -105,47 +88,31 @@ object SegmentBloom {
     bf
   }
 
-  /** The raw hashes while fewer than `limit` — a filter's worth of longs
-    * when sized, the budget share when not — then the filter itself, or
-    * (unsized) nothing: overflowed.
-    */
-  final class Buffer(expectedItems: Long, fpp: Double, budget: Int) {
-    private val sized = expectedItems > 0
-    private val limit: Int =
-      if (sized) math.max(16L, math.min(Int.MaxValue - 8L,
-        BloomFilter.optimalNumOfBits(expectedItems, fpp) / 64)).toInt
-      else budget
+  /** The raw hashes while at most `limit`, then nothing: overflowed. */
+  final class Buffer(limit: Int) {
     private var hashes = new Array[Long](16)
     private var n = 0
-    private var bloom: BloomFilter = null
     private var overflowed = false
 
     def put(h: Long): Unit =
-      if (bloom != null) bloom.putLong(h)
-      else if (overflowed) ()
-      else if (n == limit) {
-        if (sized) { toFilter(); bloom.putLong(h) }
-        else { overflowed = true; hashes = null; n = 0 }
-      } else {
+      if (overflowed) ()
+      else if (n == limit) overflow()
+      else {
         if (n == hashes.length)
           hashes = java.util.Arrays.copyOf(hashes, math.max(1, math.min(limit, n * 2)))
         hashes(n) = h
         n += 1
       }
 
-    def mergeFrom(o: Buffer): Unit =
-      if (o.overflowed) { overflowed = true; hashes = null; n = 0 }
-      else if (o.bloom == null) { var i = 0; while (i < o.n) { put(o.hashes(i)); i += 1 } }
-      else { if (bloom == null) toFilter(); bloom.mergeInPlace(o.bloom) }
+    private def overflow(): Unit = { overflowed = true; hashes = null; n = 0 }
 
-    /** The serialized filter (sized), the raw hashes, or null. */
+    def mergeFrom(o: Buffer): Unit =
+      if (o.overflowed) overflow()
+      else { var i = 0; while (i < o.n) { put(o.hashes(i)); i += 1 } }
+
+    /** The raw hashes, or null. */
     def result: Array[Byte] =
-      if (sized) {
-        if (bloom == null) toFilter()
-        val bos = new ByteArrayOutputStream()
-        bloom.writeTo(bos)
-        bos.toByteArray
-      } else if (overflowed) null
+      if (overflowed) null
       else {
         val buf = java.nio.ByteBuffer.allocate(8 * n)
         var i = 0
@@ -153,24 +120,12 @@ object SegmentBloom {
         buf.array()
       }
 
-    private def toFilter(): Unit = {
-      bloom = BloomFilter.create(expectedItems, fpp)
-      var i = 0
-      while (i < n) { bloom.putLong(hashes(i)); i += 1 }
-      hashes = null
-      n = 0
-    }
-
     def toBytes: Array[Byte] = {
       val bos = new ByteArrayOutputStream()
       val out = new DataOutputStream(bos)
-      out.writeByte(if (overflowed) 2 else if (bloom != null) 1 else 0)
-      if (bloom != null) bloom.writeTo(out)
-      else if (!overflowed) {
-        out.writeInt(n)
-        var i = 0
-        while (i < n) { out.writeLong(hashes(i)); i += 1 }
-      }
+      out.writeInt(if (overflowed) -1 else n)
+      var i = 0
+      while (i < n) { out.writeLong(hashes(i)); i += 1 }
       out.close()
       bos.toByteArray
     }
@@ -179,14 +134,9 @@ object SegmentBloom {
   object Buffer {
     def fromBytes(b: Buffer, bytes: Array[Byte]): Buffer = {
       val in = new DataInputStream(new ByteArrayInputStream(bytes))
-      in.readByte() match {
-        case 2 => b.overflowed = true; b.hashes = null
-        case 1 => b.bloom = BloomFilter.readFrom(in)
-        case _ =>
-          val n = in.readInt()
-          var i = 0
-          while (i < n) { b.put(in.readLong()); i += 1 }
-      }
+      val n = in.readInt()
+      if (n < 0) b.overflow()
+      else { var i = 0; while (i < n) { b.put(in.readLong()); i += 1 } }
       b
     }
   }

@@ -309,41 +309,44 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     bloomColumns.filter(schema.fieldNames.contains)
 
   /** One [[SegmentBloom]] aggregate per indexed column over
-    * xxhash64(column) — the hash the probe side computes — sized for
-    * `expectedItems` (0: unsized, the raw hashes); `value` gives the
-    * column in the frame aggregated.
+    * xxhash64(column) — the hash the probe side computes; `value` gives
+    * the column in the frame aggregated.
     */
-  private def bloomAggs(expectedItems: Long, value: String => Column): Seq[Column] =
-    indexedBloomColumns.map(c => SegmentBloom.agg(
-      org.apache.spark.sql.functions.xxhash64(value(c)), expectedItems, 0.03)
-      .as(s"bloom_$c"))
+  private def bloomAggs(value: String => Column): Seq[Column] =
+    indexedBloomColumns.map(c =>
+      SegmentBloom.agg(org.apache.spark.sql.functions.xxhash64(value(c))).as(s"bloom_$c"))
 
-  /** Every indexed column's filter from a row of [[bloomAggs]], or None
-    * when an unsized aggregate overflowed its budget.
+  /** Every indexed column's filter for a segment of `rows`, built from
+    * the raw hashes in a row of [[bloomAggs]]; None when one overflowed
+    * its budget.
     */
-  private def bloomsOf(r: Row, filter: Array[Byte] => org.apache.spark.util.sketch.BloomFilter)
+  private def bloomsOf(r: Row, rows: Long)
       : Option[Seq[(String, org.apache.spark.util.sketch.BloomFilter)]] = {
     val bytes = indexedBloomColumns.map(c => c -> r.getAs[Array[Byte]](s"bloom_$c"))
     if (bytes.exists(_._2 == null)) None
-    else Some(bytes.map { case (c, b) => c -> filter(b) })
+    else Some(bytes.map { case (c, b) =>
+      c -> SegmentBloom.filterOf(b, bloomExpectedItems(rows), 0.03) })
   }
 
   /** The bloom pass for a staged segment whose filters could not ride
-    * on its write: sized for another row count than it holds, or built
-    * from more raw hashes than [[SegmentBloom.RawHashBudget]]. One
-    * aggregation over the staged files builds every indexed column's
-    * filter. The distributed scan happens where the STAGED data lives
-    * (outside the lock); only the sidecar write needs the final segment
-    * id. An empty segment needs no sidecar (it is either discarded —
-    * empty stream batches — or prunes on rowCount).
+    * on its write — more rows than [[SegmentBloom.RawHashBudget]], or
+    * metrics that never arrived: one pass over the staged files per
+    * bloom column. The distributed scan happens where the STAGED data
+    * lives (outside the lock); only the sidecar write needs the final
+    * segment id.
     */
   private def computeBlooms(dir: Path, rows: Long)
-      : Seq[(String, org.apache.spark.util.sketch.BloomFilter)] = {
-    val aggs = bloomAggs(bloomExpectedItems(rows), col)
-    if (rows == 0 || aggs.isEmpty) Nil
-    else bloomsOf(spark.read.schema(schema).parquet(dir.toString)
-      .agg(aggs.head, aggs.tail: _*).collect()(0), SegmentBloom.read).get
-  }
+      : Seq[(String, org.apache.spark.util.sketch.BloomFilter)] =
+    // rows == 0: Spark's stat.bloomFilter NPEs on empty input, and an
+    // empty segment needs no sidecar anyway (it is either discarded —
+    // empty stream batches — or prunes on rowCount). Without the guard
+    // an empty micro-batch into a bloom-indexed table kills the stream.
+    if (rows == 0) Nil
+    else indexedBloomColumns.map { c =>
+      c -> spark.read.schema(schema).parquet(dir.toString)
+        .select(org.apache.spark.sql.functions.xxhash64(col(c)).as("h"))
+        .stat.bloomFilter("h", bloomExpectedItems(rows), 0.03)
+    }
 
   private def writeBlooms(segId: Int,
       blooms: Seq[(String, org.apache.spark.util.sketch.BloomFilter)]): Unit =
@@ -424,9 +427,9 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
   import SegmentedTable.StagedSegment
 
   /** Refresh a staging dir's mtime so [[sweepStaleStaging]]'s TTL
-    * measures time since the LAST completed phase: the bloom pass runs
-    * after the write stops touching the dir, and without the refresh a
-    * slow stage could look abandoned mid-flight.
+    * measures time since the LAST completed phase: a pass over the
+    * staged files runs after the write stops touching the dir, and
+    * without the refresh a slow stage could look abandoned mid-flight.
     */
   private def touchStaging(dir: Path): Unit =
     try TableIO.setMTime(dir, System.currentTimeMillis())
@@ -468,22 +471,26 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     if (spark.conf.get("spark.sql.caseSensitive", "false").toBoolean) n
     else n.toLowerCase(java.util.Locale.ROOT)
 
+  /** How long a write waits, once it has returned, for the metrics it
+    * observed. They reach the driver as an event on the listener bus,
+    * normally within milliseconds; a late or lost event (a full event
+    * queue drops events) leaves the passes over the staged files.
+    */
+  @volatile private[table] var observedMetricsWait: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.FiniteDuration(30, java.util.concurrent.TimeUnit.SECONDS)
+
   /** All of a segment write's heavy work against a unique temp dir,
     * with NO lock held: ONE distributed layout + Parquet write, which
-    * also observes the catalog stats and the bloom filters of exactly
-    * the rows it writes (`Dataset.observe`). A filter's size depends on
-    * the segment's row count: when the caller knows it exactly (`rows`:
-    * a compaction's inputs, a rewrite's survivors) the write builds the
-    * filters; otherwise it collects the raw hashes and the filters are
-    * built here from the count it observed. A filter sized for another
-    * count, or raw hashes beyond their budget, leave one bloom pass over
-    * the staged files. Not dot-prefixed: Spark's file listing skips
-    * hidden paths, which would break that pass; queries never scan the
-    * table root wholesale, so the in-progress dir is invisible to them
-    * either way.
+    * also observes the catalog stats and the bloom columns' raw hashes
+    * of exactly the rows it writes (`Dataset.observe`). The filters are
+    * built here, sized by the row count the write observed. Raw hashes
+    * beyond their budget leave one bloom pass over the staged files,
+    * and metrics that never arrive a stats pass as well. Not
+    * dot-prefixed: Spark's file listing skips hidden paths, which would
+    * break those passes; queries never scan the table root wholesale,
+    * so the in-progress dir is invisible to them either way.
     */
-  private def stageSegment(df: DataFrame, prefix: String,
-                           rows: Option[Long] = None): StagedSegment = {
+  private def stageSegment(df: DataFrame, prefix: String): StagedSegment = {
     validateAgainstSchema(df)
     val tmp = new Path(root,
       s"${prefix}_${System.nanoTime()}_${SegmentedTable.stagingSeq.incrementAndGet()}")
@@ -491,21 +498,23 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     val present = df.schema.fieldNames.map(columnKey).toSet
     def value(c: String): Column =
       if (present(columnKey(c))) col(c) else lit(null).cast(schema(c).dataType)
-    val sized = rows.filter(_ > 0)
-    val metrics = statsAggs(value) ++ bloomAggs(sized.map(bloomExpectedItems).getOrElse(0L), value)
+    val metrics = statsAggs(value) ++ bloomAggs(value)
     val observed = org.apache.spark.sql.Observation()
     applyLayout(df).observe(observed, metrics.head, metrics.tail: _*)
       .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    val row = scala.concurrent.Await.result(observed.future,
-      scala.concurrent.duration.Duration(10, java.util.concurrent.TimeUnit.MINUTES))
-    val (n, stats, nulls) = statsOf(row)
-    lazy val ridden =
-      if (sized.isEmpty) bloomsOf(row, SegmentBloom.filterOf(_, bloomExpectedItems(n), 0.03))
-      else if (sized.contains(n)) bloomsOf(row, SegmentBloom.read)
-      else None
+    val row =
+      try Some(scala.concurrent.Await.result(observed.future, observedMetricsWait))
+      catch { case _: java.util.concurrent.TimeoutException => None }
+    val (n, stats, nulls) = row.map(statsOf).getOrElse {
+      val aggs = statsAggs(col)
+      val read = statsOf(spark.read.schema(schema).parquet(tmp.toString)
+        .agg(aggs.head, aggs.tail: _*).collect()(0))
+      touchStaging(tmp)
+      read
+    }
     val blooms =
       if (n == 0) Nil
-      else ridden.getOrElse {
+      else row.flatMap(bloomsOf(_, n)).getOrElse {
         val built = computeBlooms(tmp, n)
         touchStaging(tmp)
         built
@@ -1310,10 +1319,11 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     * leaves its temp dir behind (the price of writing outside the
     * lock). Sweep staging dirs untouched for longer than the TTL.
     * The write leaves the dir's mtime at its end and [[stageSegment]]
-    * refreshes it after a bloom pass, so the TTL bounds ONE phase plus
-    * the final lock wait (LeaseLock acquisition times out at 2 min) —
-    * default 1 h covers both; a table whose single write or bloom pass
-    * runs longer should raise the `staging.ttl.ms` property.
+    * refreshes it after each pass over the staged files, so the TTL
+    * bounds ONE phase plus the final lock wait (LeaseLock acquisition
+    * times out at 2 min) — default 1 h covers both; a table whose
+    * single write or pass runs longer should raise the
+    * `staging.ttl.ms` property.
     */
   private def sweepStaleStaging(): Unit = {
     val ttl = properties.get("staging.ttl.ms").map(_.toLong).getOrElse(3600000L)
@@ -1400,8 +1410,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     // deleteSegments/deleteSegmentsBefore in the merge window aborts
     // the compaction instead of resurrecting the deleted rows
     // write + stats + blooms all staged outside the lock
-    val staged = stageSegment(readSegments(live), "compacting",
-      rows = Some(live.map(_.rowCount).sum))
+    val staged = stageSegment(readSegments(live), "compacting")
     withLock {
       val st = status
       val stillLive = live.forall(s =>
@@ -1766,8 +1775,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
       stagePar(affected) { case (seg, matched) =>
         if (matched == seg.rowCount) seg -> None
         else seg -> Some(stageSegment(
-          readSegments(Seq(seg)).filter(keep), s"rewriting_${seg.id}",
-          rows = Some(seg.rowCount - matched)))
+          readSegments(Seq(seg)).filter(keep), s"rewriting_${seg.id}"))
       }
     commitRewrites(affected.map(_._1), replacements, "DELETE")
     affected.map(_._2).sum
@@ -1796,8 +1804,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
           case None => col(f.name)
         }
       }: _*)
-      seg -> Some(stageSegment(rewritten, s"rewriting_${seg.id}",
-        rows = Some(seg.rowCount)))
+      seg -> Some(stageSegment(rewritten, s"rewriting_${seg.id}"))
     }
     commitRewrites(affected.map(_._1), replacements, "UPDATE")
     affected.map(_._2).sum
@@ -1903,8 +1910,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
       else {
         val survivors = readSegments(Seq(seg))
           .join(keys, keyCols, "left_anti")
-        seg -> Some(stageSegment(survivors, s"rewriting_${seg.id}",
-          rows = Some(seg.rowCount - matched)))
+        seg -> Some(stageSegment(survivors, s"rewriting_${seg.id}"))
       }
     }
     // incoming batch lands as one new segment in the same commit
@@ -2139,7 +2145,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
         try stagePar(affected) { seg =>
           val staged = stageSegment(
             survivorsAll.filter(col("__seg") === seg.id).drop("__seg"),
-            s"rewriting_${seg.id}", rows = Some(seg.rowCount - segStats(seg.id)._2))
+            s"rewriting_${seg.id}")
           if (staged.rows == 0L) { deleteRecursively(staged.tmp); seg -> None }
           else seg -> Some(staged)
         } finally survivorsAll.unpersist()

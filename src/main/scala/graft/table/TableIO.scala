@@ -48,25 +48,35 @@ object TableIO {
       .getOrElse(new Configuration())
 
   /** (the session's SQL settings, the context's Hadoop configuration
-    * and its size, the copy built from them).
+    * and the hash of its entries, the copy built from them).
     */
   @volatile private var confCache: (Map[String, String], Configuration, Int, Configuration) = _
 
-  /** `newHadoopConf()` copies the whole Hadoop configuration (~180 µs)
-    * and a commit makes dozens of metadata calls, so one copy serves
-    * every call until the session's SQL settings change or a key is
-    * added to the context's Hadoop configuration — the two ways an
-    * `fs.*` setting reaches a session. The copy is shared: callers
-    * only read it.
+  /** A Configuration's entries; `getProps` is protected. */
+  private val propsOf: Option[java.lang.reflect.Method] = scala.util.Try {
+    val m = classOf[Configuration].getDeclaredMethod("getProps")
+    m.setAccessible(true)
+    m
+  }.toOption
+
+  /** `newHadoopConf()` copies the whole Hadoop configuration (130–180
+    * µs) and a commit makes dozens of metadata calls, so one copy serves
+    * every call until the session's SQL settings change or the
+    * context's Hadoop configuration does — a key added, removed or set
+    * in place, seen through the hash of its entries (~8 µs; a changed
+    * value whose string hash collides with the old one is missed).
+    * Without access to the entries every call copies. The copy is
+    * shared: callers only read it.
     */
   private def sessionHadoopConf(spark: SparkSession): Configuration = {
     val settings = spark.sessionState.conf.getAllConfs
     val base = spark.sparkContext.hadoopConfiguration
     val c = confCache
-    if (c != null && (c._2 eq base) && c._3 == base.size && c._1 == settings) c._4
+    val hash = propsOf.map(_.invoke(base).hashCode)
+    if (c != null && (c._2 eq base) && hash.contains(c._3) && c._1 == settings) c._4
     else {
       val built = spark.sessionState.newHadoopConf()
-      confCache = (settings, base, base.size, built)
+      confCache = (settings, base, hash.getOrElse(0), built)
       built
     }
   }

@@ -67,8 +67,8 @@ class SegmentWriteSpec extends AnyFunSuite {
       val t = SegmentedTable.create(spark, freshRoot("jobs_bloom"), li.schema,
         Map("sort_columns" -> "ship_day", "bloom_columns" -> blooms))
       t.load(li.filter(col("l_orderkey") % 2 === 0))
-      // INSERT into a bloom-indexed table: its size is unknown before the
-      // write, which collects the raw hashes; no stats or bloom pass
+      // INSERT into a bloom-indexed table: the write collects the raw
+      // hashes the filters are built from; no stats or bloom pass
       var next = t.status.nextId
       val ins = staging(SparkJobs.during(spark)(
         t.load(li.filter(col("l_orderkey") % 2 === 1))))
@@ -185,10 +185,10 @@ class SegmentWriteSpec extends AnyFunSuite {
         assertAsTwoPass(t, ids)
         ids
       }
-      // loads of unknown size: filters built from the raw hashes the
-      // write collected, sized by the count it observed
+      // loads: filters built from the raw hashes the write collected,
+      // sized by the count it observed
       (0 until 3).foreach(k => step(t.load(li.filter(col("l_orderkey") % 3 === k))))
-      // rewrites of known size: stats and blooms observed on the write
+      // rewrites, merges and a compaction: the same, on every write path
       assert(step(t.delete(col("l_linenumber") === 1)).size == 3)
       assert(step(t.update(col("l_orderkey") < 3000 && col("l_linenumber") === 2,
         Map("wide" -> lit(null), "l_returnflag" -> lit("Z")))).nonEmpty)
@@ -208,8 +208,8 @@ class SegmentWriteSpec extends AnyFunSuite {
       val empty = step(t.load(li.filter(lit(false))))
       assert(empty.size == 1)
       assert(t.status.segments.find(_.id == empty.head).get.rowCount == 0)
-      // a non-deterministic DELETE: the count known before the write is
-      // not the one written, and the fallback pass still gives exact blooms
+      // a non-deterministic DELETE: the count matched before the write is
+      // not the one written, and the filters still fit the rows written
       step(t.load(li.filter(col("l_orderkey") % 2 === 0)))
       val live = t.status.segments.filter(s => s.status == SegmentedTable.SUCCESS && s.rowCount > 0)
       val deleted = t.delete(rand(42) < 0.5)
@@ -217,8 +217,25 @@ class SegmentWriteSpec extends AnyFunSuite {
       val rewritten = after.filterNot(s => live.exists(_.id == s.id))
       assert(rewritten.size == 2)
       assert(after.map(_.rowCount).sum != live.map(_.rowCount).sum - deleted,
-        "the hinted and observed counts agree; the fallback was not exercised")
+        "the matched and written counts agree; the predicate was not re-evaluated")
       assertAsTwoPass(t, rewritten.map(_.id))
     } finally li.unpersist()
+  }
+
+  test("metrics that never reach the driver leave a stats pass and a bloom pass") {
+    // a session whose metrics listener is gone: no write's observation completes
+    val s2 = spark.newSession()
+    s2.range(1).observe(org.apache.spark.sql.Observation(), count(lit(1)).as("n")).collect()
+    s2.listenerManager.clear()
+    val ids = s2.range(0, 5000, 1, 2).select(col("id"),
+      when(col("id") % 7 === 0, lit(null)).otherwise(col("id") * 3).as("v"))
+    val t = SegmentedTable.create(s2, freshRoot("lost_metrics"), ids.schema,
+      Map("bloom_columns" -> "v"))
+    t.observedMetricsWait =
+      scala.concurrent.duration.FiniteDuration(1, java.util.concurrent.TimeUnit.SECONDS)
+    val q = staging(SparkJobs.during(spark)(t.load(ids)))
+    assert(bloomPasses(q) == 1 && q.size == 3, show(q))
+    assertAsTwoPass(t, newIds(t, 0))
+    assert(t.status.segments.map(_.rowCount).sum == 5000)
   }
 }

@@ -43,6 +43,20 @@ class TableIOSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.spec.conf.probe")
   }
 
+  test("an in-place change to the context's Hadoop configuration reaches the next call") {
+    spark.range(1).count()
+    val base = spark.sparkContext.hadoopConfiguration
+    val key = "fs.graftspec.endpoint"
+    base.set(key, "a")
+    try {
+      assert(TableIO.hadoopConf.get(key) == "a")
+      assert(TableIO.hadoopConf eq TableIO.hadoopConf)
+      // the same keys, one value rotated
+      base.set(key, "b")
+      assert(TableIO.hadoopConf.get(key) == "b")
+    } finally base.unset(key)
+  }
+
   test("an fs.* setting made on the session after the first call reaches FileSystem and FileContext creation") {
     spark.range(1).count()
     val p = new Path("confprobe:/a")
