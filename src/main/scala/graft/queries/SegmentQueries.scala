@@ -207,6 +207,16 @@ object SegmentQueries {
       s"$cat.default.li_tt|$v"
     })
 
+  /** `stmt` parsed and analyzed by Spark, then planned by the graft
+    * row-level DML rule — what a session with the graft extensions
+    * does to an ANSI MERGE/UPDATE on a graft catalog table.
+    */
+  private def graftDml(s: SparkSession, stmt: String)
+      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    graft.sql.GraftRowLevelDml(s.sessionState.analyzer.executeAndCheck(
+      s.sessionState.sqlParser.parsePlan(stmt),
+      new org.apache.spark.sql.catalyst.QueryPlanningTracker))
+
   /** g19's full-MERGE'd table: one mixed ANSI MERGE — conditional
     * UPDATE with expression assignments, bare DELETE, conditional
     * column-list INSERT — applied through the catalog SQL surface.
@@ -225,11 +235,11 @@ object SegmentQueries {
         "AS SELECT * FROM g19_orders_src")
       // matched 'O' rows re-price, every other matched row deletes,
       // unmatched cheap source rows insert with a column list. The
-      // statement goes through the graft dialect parser EXPLICITLY:
-      // Verify's session has no injected extensions (parsers cannot
-      // be added at runtime), and the gate must exercise the same
-      // parse → AnsiMergeFullCommand → mergeFull path a
-      // session-with-extensions user gets.
+      // statement is analyzed and converted by the graft rule
+      // EXPLICITLY: Verify's session has no injected extensions
+      // (analyzer rules cannot be added at runtime), and the gate must
+      // exercise the same parse → analyze → MergeFullGraftCommand →
+      // mergeFull path a session-with-extensions user gets.
       val stmt =
         s"""MERGE INTO $cat.default.mord t
             USING (SELECT o_orderkey AS k, o_totalprice AS p
@@ -244,9 +254,8 @@ object SegmentQueries {
             WHEN NOT MATCHED AND s.p < 100000 THEN
               INSERT (o_orderkey, o_orderstatus, o_totalprice)
               VALUES (s.k, 'N', s.p)"""
-      new graft.sql.GraftSqlParser(s.sessionState.sqlParser)
-        .parsePlan(stmt) match {
-        case cmd: graft.sql.AnsiMergeFullCommand => cmd.run(s)
+      graftDml(s, stmt) match {
+        case cmd: graft.sql.MergeFullGraftCommand => cmd.run(s)
         case other => throw new IllegalStateException(
           s"g19 statement must parse to the full-merge command, got $other")
       }
@@ -275,9 +284,9 @@ object SegmentQueries {
       // source-only inserts); every OTHER target row is by-source:
       // 'F' rows delete, the rest re-flag to 'Z'. The matched family
       // re-prices 'O' rows and deletes the rest — so all five clauses
-      // fire. The clause conditions deliberately use a top-level CASE
-      // WHEN ... THEN ... END to pin the clause-splitting fix (a CASE
-      // inside a WHEN condition must not split the clause list).
+      // fire. A clause condition is a top-level CASE WHEN ... THEN ...
+      // END, whose WHEN/THEN belong to the condition, not the clause
+      // list.
       val stmt =
         s"""MERGE INTO $cat.default.bsord t
             USING (SELECT o_orderkey AS k, o_totalprice AS p
@@ -297,10 +306,9 @@ object SegmentQueries {
               DELETE
             WHEN NOT MATCHED BY SOURCE THEN
               UPDATE SET o_orderstatus = 'Z'"""
-      new graft.sql.GraftSqlParser(s.sessionState.sqlParser)
-        .parsePlan(stmt) match {
-        case cmd: graft.sql.AnsiMergeFullCommand =>
-          require(cmd.bySourceClauses.size == 2,
+      graftDml(s, stmt) match {
+        case cmd: graft.sql.MergeFullGraftCommand =>
+          require(cmd.bySource.size == 2,
             s"g20 statement must carry 2 by-source clauses, got $cmd")
           cmd.run(s)
         case other => throw new IllegalStateException(

@@ -416,7 +416,7 @@ private[graft] class GraftV2Table(ident: Identifier, tablePath: String,
   with org.apache.spark.sql.graftbridge.GraftV1FallbackTable {
 
   private def spark: SparkSession = SparkSession.active
-  private def open(): SegmentedTable = SegmentedTable.open(spark, tablePath)
+  private[graft] def open(): SegmentedTable = SegmentedTable.open(spark, tablePath)
 
   /** The live segment scan a stats fold may reason over, exposed
     * for [[graft.mv.StatsAggFromCatalog]]'s PRE-pushdown interception

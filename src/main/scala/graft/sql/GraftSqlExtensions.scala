@@ -70,11 +70,14 @@ import graft.table.{SegmentedTable, TableIO}
   * Tables live under the store root (`spark.graft.store` conf, default
   * /tmp/graft_store) as `<store>/<name>`. Registered with
   * `SparkSession.builder.withExtensions(new GraftSqlExtensions)`;
-  * non-graft statements delegate untouched to Spark's parser.
+  * non-graft statements delegate untouched to Spark's parser. ANSI
+  * `MERGE INTO` and `UPDATE` on a graft catalog table are Spark's own
+  * statements: [[GraftRowLevelDml]] plans them after analysis.
   */
 class GraftSqlExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectParser((_, delegate) => new GraftSqlParser(delegate))
+    e.injectPostHocResolutionRule(_ => GraftRowLevelDml)
     e.injectOptimizerRule(s => graft.mv.AggTableRewrite(s))
     e.injectOptimizerRule(s => graft.mv.StatsAggFromCatalog(s))
     e.injectOptimizerRule(s => graft.table.GraftSegmentPruning(s))
@@ -1034,57 +1037,6 @@ object GraftCatalog {
     SegmentedTable.open(spark, p)
   }
 
-  /** Is `cat` a registered graft catalog in the active session? The
-    * dialect parser uses this to claim ANSI UPDATE/MERGE statements on
-    * ANY graft catalog's identifiers (scoped roots included) while
-    * leaving every other catalog's statements to the delegate. The
-    * name `graft` (the engine's documented catalog name) is claimed
-    * when `spark.sql.catalog.graft` is unset OR bound to this plugin —
-    * but NOT when the user bound that name to a different plugin, or
-    * when `graft` is merely a database in the session catalog with no
-    * catalog conf at all either way the delegate must see the
-    * statement (ADVICE r16). Unset + bare name still claims: the
-    * plugin self-registers the `graft` name lazily on first use.
-    */
-  private[sql] def isGraftCatalog(spark: SparkSession, cat: String): Boolean = {
-    def boundHere(c: String): Option[Boolean] =
-      spark.conf.getOption(s"spark.sql.catalog.$c")
-        .map(_ == classOf[GraftCatalogPlugin].getName)
-    val bindings =
-      Seq(cat, cat.toLowerCase(java.util.Locale.ROOT)).distinct.flatMap(boundHere)
-    if (bindings.nonEmpty) bindings.contains(true)
-    else cat.equalsIgnoreCase("graft")
-  }
-
-  /** The store root catalog `cat` resolves against: its `root` option
-    * when scoped, the session-wide store otherwise (mirrors
-    * [[GraftCatalogPlugin.initialize]]).
-    */
-  private[sql] def storeRootOf(spark: SparkSession, cat: String): String =
-    spark.conf.getOption(s"spark.sql.catalog.$cat.root")
-      .filter(_.nonEmpty).getOrElse(storeRoot(spark))
-
-  /** [[open]] against an explicit catalog's store (rename indirection
-    * honored per-store).
-    */
-  def openIn(spark: SparkSession, cat: String, name: String): SegmentedTable =
-    openIn(spark, cat, "default", name)
-
-  /** [[open]] against an explicit catalog + namespace (the store-root
-    * subdirectory layout the V2 plugin serves).
-    */
-  def openIn(spark: SparkSession, cat: String, ns: String,
-             name: String): SegmentedTable = {
-    val store = storeRootOf(spark, cat)
-    require(namespaceExists(store, ns),
-      s"graft namespace not found: $cat.$ns")
-    val nsRoot = nsRootOf(store, ns)
-    val p = resolvedPath(nsRoot, name).getOrElse(s"$nsRoot/$name")
-    require(SegmentedTable.exists(p),
-      s"graft table not found: $cat.$ns.$name ($p)")
-    SegmentedTable.open(spark, p)
-  }
-
   /** Positive table-dir memo for catalog browsing: a path that once
     * validated as a graft table stays one until dropped (drop prunes
     * its entry; the plugin's listTables prunes entries whose dir
@@ -1174,23 +1126,8 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     """(?is)\s*DELETE\s+FROM\s+GRAFT\s+TABLE\s+(\w+)\s+WHERE\s+(.+)""".r
   private val mergeRowsRe =
     """(?is)\s*MERGE\s+GRAFT\s+TABLE\s+(\w+)\s+FROM\s+INPATH\s+'([^']+)'\s+ON\s*\(([^)]*)\)\s*""".r
-  // ANSI MERGE INTO over a graft-catalog identifier, restricted to the
-  // upsert shape the engine's MERGE implements (UPDATE SET * +
-  // INSERT *); claimed ONLY for `graft.`-prefixed targets so MERGE
-  // INTO against any other catalog still reaches the delegate
-  private val ansiMergeRe =
-    """(?is)\s*MERGE\s+INTO\s+(\w+)\.(?:(\w+)\.)?(\w+)(?:\s+(?:AS\s+)?(\w+))?\s+USING\s+(.+?)\s*;?\s*""".r
-  private val ansiMergeUpsertRe =
-    """(?is)WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*\s+WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*""".r
-  private val ansiMergeKeyRe =
-    """(?i)\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*""".r
   private val updateRowsRe =
     """(?is)\s*UPDATE\s+GRAFT\s+TABLE\s+(\w+)\s+SET\s+(.+)""".r
-  // ANSI UPDATE over a graft-catalog identifier — same command as the
-  // dialect's UPDATE GRAFT TABLE; claimed only for `graft.`-prefixed
-  // targets so other catalogs' UPDATEs reach the delegate
-  private val ansiUpdateRe =
-    """(?is)\s*UPDATE\s+(\w+)\.(?:(\w+)\.)?(\w+)\s+SET\s+(.+)""".r
   private val compactRe =
     """(?is)\s*COMPACT\s+GRAFT\s+TABLE\s+(\w+)\s*(MINOR)?\s*""".r
   private val optimizeRe =
@@ -1209,10 +1146,19 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     """(?is)\s*ALTER\s+GRAFT\s+TABLE\s+(\w+)\s+DROP\s+COLUMN\s+(\w+)\s*""".r
   private val propRe = """'([^']+)'\s*=\s*'([^']*)'""".r
 
-  override def parsePlan(sqlText: String): LogicalPlan = sqlText match {
+  override def parsePlan(sqlText: String): LogicalPlan =
+    dialect.applyOrElse(sqlText, delegate.parsePlan)
+
+  // a dialect statement takes no parameter markers; everything else
+  // binds them in Spark's own parser
+  override def parsePlanWithParameters(sqlText: String,
+      ctx: ParameterContext): LogicalPlan =
+    dialect.applyOrElse(sqlText, delegate.parsePlanWithParameters(_: String, ctx))
+
+  private val dialect: PartialFunction[String, LogicalPlan] = {
     // carbon-native cube dialect first: its keywords never collide
     // with the graft grammar or with Spark SQL
-    case createCubeRe(ifNotExists, name, body) =>
+    case sqlText @ createCubeRe(ifNotExists, name, body) =>
       parseCreateCube(sqlText, name, body, ifNotExists != null)
     case dropCubeRe(ifExists, name) =>
       DropGraftTableCommand(name, ifExists = ifExists != null)
@@ -1226,7 +1172,7 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       LoadGraftDataCommand(name, path, o)
     case createAggCubeRe(aggSpec, cube) =>
       parseCreateAggregateTable(aggSpec, cube)
-    case alterCubeRe(name, body) => parseAlterCube(sqlText, name, body)
+    case sqlText @ alterCubeRe(name, body) => parseAlterCube(sqlText, name, body)
     // aggregate-table DDL must match before the plain-table forms
     // (CREATE/DROP GRAFT TABLE would otherwise swallow the prefix)
     case createAggRe(name, path, groupCols, aggSpec) =>
@@ -1261,7 +1207,7 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
           m.group(1).toLowerCase(Locale.ROOT) -> m.group(2)).toMap)
         .getOrElse(Map.empty)
       LoadGraftDataCommand(name, path, o)
-    case loadFactDimRe(factPath, dimSpec, name, opts) =>
+    case sqlText @ loadFactDimRe(factPath, dimSpec, name, opts) =>
       val o = Option(opts).map(s =>
         propRe.findAllMatchIn(s).map(m =>
           m.group(1).toLowerCase(Locale.ROOT) -> m.group(2)).toMap)
@@ -1304,41 +1250,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     case mergeRowsRe(name, path, keys) =>
       MergeGraftDataCommand(name, path,
         keys.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    case ansiMergeRe(cat, nsOrNull, name, aliasOrNull, rest)
-        if GraftCatalog.isGraftCatalog(activeSession, cat) =>
-      val ns = Option(nsOrNull).getOrElse("default")
-      // the ON / WHEN boundaries are found quote- and paren-aware, so
-      // a source SUBQUERY containing its own join ON (or a literal
-      // with the word) cannot split the statement in the wrong place
-      val onIdx = topLevelIndexOf(rest, "ON")
-      require(onIdx > 0, "graft MERGE INTO requires an ON clause")
-      val whenIdx = topLevelIndexOf(rest, "WHEN")
-      require(whenIdx > onIdx, "graft MERGE INTO requires WHEN clauses")
-      val source = rest.substring(0, onIdx).trim
-      val cond = rest.substring(onIdx + 2, whenIdx).trim
-      val whenClauses = rest.substring(whenIdx).trim
-      val tgtAlias = Option(aliasOrNull).getOrElse(name)
-      // FAST PATH — the exact last-write-wins upsert shape (UPDATE SET
-      // * + INSERT *) over an AND of same-named key equalities routes
-      // to the engine's single-pass stats-pruned upsert (no join
-      // materialization, no window); every richer shape takes the
-      // general full-outer rewrite below
-      val upsertKeys: Option[Seq[String]] =
-        if (!ansiMergeUpsertRe.pattern.matcher(whenClauses).matches()) None
-        else scala.util.Try(cond.split("(?i)\\s+AND\\s+").toSeq.map {
-          case ansiMergeKeyRe(_, colL, _, colR) if colL.equalsIgnoreCase(colR) =>
-            colL
-        }).toOption
-      upsertKeys match {
-        case Some(keys) =>
-          AnsiMergeIntoGraftCommand(cat, ns, name, source, keys)
-        case None =>
-          val srcAlias = trailingAlias(source)
-          val (mWhen, nmWhen, bsWhen) = parseMergeClauses(whenClauses)
-          AnsiMergeFullCommand(cat, ns, name, tgtAlias, source, srcAlias,
-            cond, mWhen, nmWhen,
-            extractEquiKeys(cond, tgtAlias, srcAlias), bsWhen)
-      }
     case updateRowsRe(name, rest) =>
       // the WHERE boundary is found quote- and paren-aware, so a
       // literal containing " where " (or a subquery) cannot split the
@@ -1346,14 +1257,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
       val i = topLevelIndexOf(rest, "WHERE")
       require(i > 0, "UPDATE GRAFT TABLE requires a WHERE clause")
       UpdateGraftRowsCommand(name, splitAssignments(rest.take(i)),
-        rest.drop(i + "WHERE".length).trim)
-    case ansiUpdateRe(cat, nsOrNull, name, rest)
-        if GraftCatalog.isGraftCatalog(activeSession, cat) =>
-      val i = topLevelIndexOf(rest, "WHERE")
-      require(i > 0, "graft UPDATE requires a WHERE clause (a " +
-        "full-table rewrite must be spelled WHERE TRUE deliberately)")
-      AnsiUpdateGraftRowsCommand(cat, Option(nsOrNull).getOrElse("default"),
-        name, splitAssignments(rest.take(i)),
         rest.drop(i + "WHERE".length).trim)
     case compactRe(name, minor) =>
       CompactGraftTableCommand(name, minor != null)
@@ -1373,49 +1276,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
     case dropColRe(name, colName) => AlterGraftDropColumnCommand(name, colName)
     case dropRe(ifExists, name) =>
       DropGraftTableCommand(name, ifExists = ifExists != null)
-    case _ => delegate.parsePlan(sqlText)
-  }
-
-  override def parsePlanWithParameters(sqlText: String,
-      ctx: ParameterContext): LogicalPlan =
-    if (isGraft(sqlText)) parsePlan(sqlText)
-    else delegate.parsePlanWithParameters(sqlText, ctx)
-
-  private def activeSession: SparkSession = SparkSession.active
-
-  /** The catalog qualifier of an ANSI UPDATE/MERGE statement, when the
-    * statement has one (normalized-uppercase input).
-    */
-  private def catalogDmlTarget(t: String): Option[String] = {
-    val m = java.util.regex.Pattern
-      .compile("^(?:MERGE INTO|UPDATE) (\\w+)\\.").matcher(t)
-    if (m.find()) Some(m.group(1)) else None
-  }
-
-  private def isGraft(s: String): Boolean = {
-    val u = s.toUpperCase(Locale.ROOT)
-    // all checks run on the whitespace-NORMALIZED form: "GRAFT\n"
-    // (formatted statements) must route exactly like "GRAFT "
-    val t = u.trim.replaceAll("\\s+", " ")
-    (t.contains("GRAFT ") && (t.startsWith("CREATE") ||
-      t.startsWith("LOAD") || t.startsWith("SHOW") ||
-      t.startsWith("DELETE") || t.startsWith("COMPACT") ||
-      t.startsWith("OPTIMIZE") || t.startsWith("RESTORE") ||
-      t.startsWith("CLEAN") || t.startsWith("DROP") ||
-      t.startsWith("ALTER") || t.startsWith("DESCRIBE") ||
-      t.startsWith("REFRESH") || t.startsWith("UPDATE") ||
-      t.startsWith("MERGE") || t.startsWith("MOVE"))) ||
-    // carbon-native cube dialect — none of these prefixes are valid
-    // Spark SQL, so claiming them cannot shadow the delegate
-    t.startsWith("CREATE CUBE") || t.startsWith("DROP CUBE") ||
-    t.startsWith("ALTER CUBE") || t.startsWith("SHOW CUBES") ||
-    t.startsWith("SHOW CREATE CUBE") ||
-    t.startsWith("CREATE AGGREGATETABLE") ||
-    (t.startsWith("LOAD DATA") && t.contains(" INTO CUBE ")) ||
-    // ANSI MERGE INTO / UPDATE on a graft-catalog identifier (any
-    // registered graft catalog, scoped roots included); other
-    // catalogs' statements still reach the delegate untouched
-    catalogDmlTarget(t).exists(GraftCatalog.isGraftCatalog(activeSession, _))
   }
 
   /** Split `a = f(x, y), b = 'x, y'` on top-level commas
@@ -1591,169 +1451,6 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   // top-level keyword scanning: the shared quote/paren-aware scanner
   private def topLevelIndexOf(s: String, keyword: String): Int =
     SqlScan.topLevelIndexOf(s, keyword)
-  private def topLevelIndicesOf(s: String, keyword: String): Seq[Int] =
-    SqlScan.topLevelIndicesOf(s, keyword)
-
-  /** The qualifier a MERGE source is referenced by in clause
-    * expressions: its trailing alias token when present, the (last
-    * segment of the) bare relation name otherwise — the same rule SQL
-    * scoping applies to an unaliased table.
-    */
-  private def trailingAlias(source: String): String = {
-    val t = source.trim
-    val meaningful =
-      SqlScan.topLevelTokens(t).filterNot(_.equalsIgnoreCase("AS"))
-    meaningful.lastOption match {
-      case Some(last) if meaningful.size > 1 && last.matches("\\w+") => last
-      // a single token starting with '(' is an UNALIASED subquery —
-      // fall through to the loud "alias the source" error instead of
-      // returning the raw '(SELECT ...)' text as an alias
-      case Some(only) if meaningful.size == 1 && !only.startsWith("(") =>
-        only.split('.').last.replaceAll("`", "")
-      case _ => throw new IllegalArgumentException(
-        s"graft MERGE INTO: cannot determine the source alias from " +
-          s"'$source' — alias the source (USING (...) s)")
-    }
-  }
-
-  private val mergeMatchedHeadRe =
-    """(?is)^MATCHED(?:\s+AND\s+(.+))?$""".r
-  private val mergeNotMatchedHeadRe =
-    """(?is)^NOT\s+MATCHED(?:\s+BY\s+TARGET)?(?:\s+AND\s+(.+))?$""".r
-  private val mergeBySourceHeadRe =
-    """(?is)^NOT\s+MATCHED\s+BY\s+SOURCE(?:\s+AND\s+(.+))?$""".r
-  private val mergeWhenHeadTailRe =
-    """(?is)^\s+(?:NOT\s+)?MATCHED\b.*""".r
-  private val mergeUpdateStarRe = """(?is)^UPDATE\s+SET\s+\*$""".r
-  private val mergeUpdateSetRe = """(?is)^UPDATE\s+SET\s+(.+)$""".r
-  private val mergeDeleteRe = """(?is)^DELETE$""".r
-  private val mergeInsertStarRe = """(?is)^INSERT\s+\*$""".r
-  private val mergeInsertColsRe =
-    """(?is)^INSERT\s*\(([^)]*)\)\s*VALUES\s*\((.+)\)$""".r
-
-  /** The top-level `WHEN` indices that actually START a MERGE clause:
-    * the keyword must be followed by `MATCHED` / `NOT MATCHED`. A bare
-    * top-level `CASE WHEN x THEN y END` inside a clause condition or a
-    * SET expression therefore cannot split the clause list (its WHEN
-    * is followed by the scrutinee, not MATCHED).
-    */
-  private def mergeWhenHeadIndices(text: String): Seq[Int] =
-    topLevelIndicesOf(text, "WHEN").filter(i =>
-      mergeWhenHeadTailRe.pattern
-        .matcher(text.substring(i + "WHEN".length)).matches())
-
-  /** The `THEN` closing a MERGE WHEN clause head — the first top-level
-    * THEN not owned by a CASE expression
-    * ([[SqlScan.firstOutsideCase]]: `WHEN MATCHED AND CASE WHEN p
-    * THEN q END THEN DELETE` finds the SECOND then). -1 when absent.
-    */
-  private def clauseThenIndex(sp: String): Int =
-    SqlScan.firstOutsideCase(sp, "THEN")
-
-  /** Parse a MERGE statement's WHEN-clause list into the engine's
-    * clause model — conditional UPDATE (SET * or assignments),
-    * DELETE, conditional INSERT (* or column list + VALUES),
-    * conditional `NOT MATCHED BY SOURCE` UPDATE/DELETE (the
-    * Delta/Spark full-sync extension), multiple clauses, first-match
-    * order preserved per family.
-    */
-  private def parseMergeClauses(text: String)
-      : (Seq[graft.table.SegmentedTable.MergeWhen],
-         Seq[graft.table.SegmentedTable.MergeInsert],
-         Seq[graft.table.SegmentedTable.MergeWhen]) = {
-    import graft.table.SegmentedTable.{MergeDelete, MergeInsert, MergeUpdate, MergeWhen}
-    val idxs = mergeWhenHeadIndices(text)
-    require(idxs.nonEmpty && text.substring(0, idxs.head).trim.isEmpty,
-      s"malformed MERGE WHEN clauses: $text")
-    val spans = idxs.zip(idxs.drop(1) :+ text.length).map {
-      case (a, b) => text.substring(a + "WHEN".length, b).trim
-    }
-    val matched = scala.collection.mutable.ListBuffer.empty[MergeWhen]
-    val notMatched = scala.collection.mutable.ListBuffer.empty[MergeInsert]
-    val bySource = scala.collection.mutable.ListBuffer.empty[MergeWhen]
-    spans.foreach { sp =>
-      val thenIdx = clauseThenIndex(sp)
-      require(thenIdx > 0, s"malformed MERGE WHEN clause (no THEN): $sp")
-      val head = sp.take(thenIdx).trim
-      val action = sp.substring(thenIdx + "THEN".length).trim
-        .stripSuffix(";").trim
-      head match {
-        case mergeBySourceHeadRe(condOrNull) =>
-          val c = Option(condOrNull).map(_.trim)
-          action match {
-            case mergeUpdateStarRe() => throw new IllegalArgumentException(
-              "WHEN NOT MATCHED BY SOURCE cannot UPDATE SET * — source " +
-                "columns are all NULL on a by-source row; list explicit " +
-                "target-column assignments")
-            case mergeDeleteRe() => bySource += MergeDelete(c)
-            case mergeUpdateSetRe(sets) =>
-              bySource += MergeUpdate(c, splitAssignments(sets).map {
-                case (k, v) => stripTargetQualifier(k) -> v
-              })
-            case other => throw new IllegalArgumentException(
-              s"WHEN NOT MATCHED BY SOURCE takes UPDATE SET .../DELETE, " +
-                s"got: $other")
-          }
-        case mergeNotMatchedHeadRe(condOrNull) =>
-          val c = Option(condOrNull).map(_.trim)
-          action match {
-            case mergeInsertStarRe() => notMatched += MergeInsert(c, Nil, Nil)
-            case mergeInsertColsRe(cols, vals) =>
-              val cs = cols.split(",").map(stripTargetQualifier).toSeq
-                .filter(_.nonEmpty)
-              val vs = splitTopCommas(vals).map(_.trim)
-              require(cs.size == vs.size,
-                s"MERGE INSERT column/value count mismatch: ($cols) vs ($vals)")
-              notMatched += MergeInsert(c, cs, vs)
-            case other => throw new IllegalArgumentException(
-              s"WHEN NOT MATCHED takes INSERT, got: $other")
-          }
-        case mergeMatchedHeadRe(condOrNull) =>
-          val c = Option(condOrNull).map(_.trim)
-          action match {
-            case mergeUpdateStarRe() => matched += MergeUpdate(c, Nil)
-            case mergeDeleteRe() => matched += MergeDelete(c)
-            case mergeUpdateSetRe(sets) =>
-              matched += MergeUpdate(c, splitAssignments(sets).map {
-                case (k, v) => stripTargetQualifier(k) -> v
-              })
-            case other => throw new IllegalArgumentException(
-              s"WHEN MATCHED takes UPDATE SET .../DELETE, got: $other")
-          }
-        case other => throw new IllegalArgumentException(
-          s"malformed MERGE WHEN clause head: $other")
-      }
-    }
-    (matched.toSeq, notMatched.toSeq, bySource.toSeq)
-  }
-
-  /** An assignment/insert target column may be alias-qualified
-    * (`t.c = ...`); the engine stores bare target column names.
-    */
-  private def stripTargetQualifier(c: String): String = {
-    val t = c.trim
-    val i = t.lastIndexOf('.')
-    if (i > 0) t.substring(i + 1) else t
-  }
-
-  /** Target↔source column pairs when the ON condition is an AND of
-    * alias.col = alias.col equalities — used ONLY for segment-stats
-    * pruning (semantics always evaluate the full ON); anything
-    * unparseable simply disables pruning.
-    */
-  private def extractEquiKeys(cond: String, tgtAlias: String,
-                              srcAlias: String): Seq[(String, String)] = {
-    val pairs = cond.split("(?i)\\s+AND\\s+").toSeq.map {
-      case ansiMergeKeyRe(al, colL, ar, colR)
-          if al.equalsIgnoreCase(tgtAlias) && ar.equalsIgnoreCase(srcAlias) =>
-        Some(colL -> colR)
-      case ansiMergeKeyRe(al, colL, ar, colR)
-          if al.equalsIgnoreCase(srcAlias) && ar.equalsIgnoreCase(tgtAlias) =>
-        Some(colR -> colL)
-      case _ => None
-    }
-    if (pairs.forall(_.isDefined)) pairs.flatten else Nil
-  }
 
   override def parseExpression(s: String): Expression = delegate.parseExpression(s)
   override def parseTableIdentifier(s: String): TableIdentifier =
@@ -2084,73 +1781,6 @@ case class MergeGraftDataCommand(name: String, path: String,
     val n = t.merge(df, keyCols)
     t.read().createOrReplaceTempView(name)
     Seq(Row(n))
-  }
-}
-
-/** ANSI `MERGE INTO graft.default.t USING src ON t.k = s.k WHEN
-  * MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *` — the
-  * catalog-SQL spelling of [[SegmentedTable.merge]]'s atomic upsert
-  * (same stats-pruned rewrite set, same single commit). The source is
-  * any FROM-able text: a table/view identifier or a parenthesized
-  * subquery, aliases included; it must produce every target column
-  * (INSERT * semantics). Returns the count of replaced rows.
-  */
-case class AnsiMergeIntoGraftCommand(cat: String, ns: String, name: String,
-    sourceFrom: String, keyCols: Seq[String]) extends LeafRunnableCommand {
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("replaced_rows", LongType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftCatalog.openIn(spark, cat, ns, name)
-    val src = spark.sql(s"SELECT * FROM $sourceFrom")
-    Seq(Row(t.merge(src, keyCols)))
-  }
-}
-
-/** Full ANSI `MERGE INTO <cat>.<ns>.t USING src ON <cond> WHEN ...` —
-  * conditional assignments, WHEN MATCHED DELETE, multiple clauses,
-  * column-list INSERT, `WHEN NOT MATCHED BY SOURCE` UPDATE/DELETE —
-  * executed by [[graft.table.SegmentedTable.mergeFull]]'s single-join
-  * copy-on-write rewrite (one atomic commit; ANSI multi-match
-  * cardinality enforced). The exact upsert shape (UPDATE SET * +
-  * INSERT * over same-named keys) never reaches here — the parser
-  * routes it to the cheaper single-pass [[AnsiMergeIntoGraftCommand]].
-  */
-case class AnsiMergeFullCommand(cat: String, ns: String, name: String,
-    targetAlias: String, sourceFrom: String, sourceAlias: String,
-    onSql: String,
-    matchedClauses: Seq[graft.table.SegmentedTable.MergeWhen],
-    notMatchedClauses: Seq[graft.table.SegmentedTable.MergeInsert],
-    equiKeys: Seq[(String, String)],
-    bySourceClauses: Seq[graft.table.SegmentedTable.MergeWhen] = Nil)
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] = Seq(
-    AttributeReference("updated_rows", LongType, nullable = false)(),
-    AttributeReference("deleted_rows", LongType, nullable = false)(),
-    AttributeReference("inserted_rows", LongType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftCatalog.openIn(spark, cat, ns, name)
-    val src = spark.sql(s"SELECT * FROM $sourceFrom")
-    val (u, d, i) = t.mergeFull(src, sourceAlias, targetAlias, onSql,
-      matchedClauses, notMatchedClauses, equiKeys, bySourceClauses)
-    Seq(Row(u, d, i))
-  }
-}
-
-/** ANSI `UPDATE <cat>.default.t SET ... WHERE ...` on a graft catalog
-  * identifier — the copy-on-write update, resolved against that
-  * catalog's store root (scoped catalogs included).
-  */
-case class AnsiUpdateGraftRowsCommand(cat: String, ns: String, name: String,
-    assignments: Seq[(String, String)], whereSql: String)
-    extends LeafRunnableCommand {
-  override val output: Seq[Attribute] =
-    Seq(AttributeReference("updated_rows", LongType, nullable = false)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftCatalog.openIn(spark, cat, ns, name)
-    def expr(s: String) = org.apache.spark.sql.graftbridge.ColumnExpr.toColumn(
-      spark.sessionState.sqlParser.parseExpression(s))
-    Seq(Row(t.update(expr(whereSql),
-      assignments.map { case (c, v) => c -> expr(v) }.toMap)))
   }
 }
 

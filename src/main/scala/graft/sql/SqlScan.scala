@@ -4,10 +4,9 @@ import java.util.Locale
 
 /** THE shared quote/paren-aware scanner over SQL TEXT for the graft
   * dialect ([[GraftSqlParser]]). Every clause-splitting need — finding
-  * a top-level keyword, splitting on top-level commas, skipping
-  * CASE..END spans, tokenizing a FROM-clause tail — derives from the
-  * same traversal rules, centralized here so the next clause family
-  * does not re-derive (and subtly diverge on) them:
+  * a top-level keyword, splitting on top-level commas — derives from
+  * the same traversal rules, centralized here so the next clause
+  * family does not re-derive (and subtly diverge on) them:
   *
   *  - a single-quoted SQL literal is opaque: every character inside
   *    it, keywords and delimiters included, is data. '' escaping needs
@@ -25,8 +24,8 @@ import java.util.Locale
   *    loud, statement-specific errors.
   *
   * Property-based coverage: SqlScanSpec generates random nesting
-  * shapes (parens × literals × CASE..END) with known top-level
-  * positions and checks every scanner against the construction.
+  * shapes (parens × literals) with known top-level positions and
+  * checks every scanner against the construction.
   */
 private[sql] object SqlScan {
 
@@ -62,41 +61,6 @@ private[sql] object SqlScan {
     -1
   }
 
-  /** Every top-level occurrence of `keyword` (see [[topLevelIndexOf]]).
-    * Resuming after a found index is state-clean: a top-level hit is
-    * by definition outside any parens/quotes.
-    */
-  def topLevelIndicesOf(s: String, keyword: String): Seq[Int] = {
-    val out = scala.collection.mutable.ListBuffer.empty[Int]
-    var off = 0
-    var idx = topLevelIndexOf(s, keyword)
-    while (idx >= 0) {
-      out += off + idx
-      off = off + idx + keyword.length
-      idx = topLevelIndexOf(s.substring(off), keyword)
-    }
-    out.toSeq
-  }
-
-  /** The first top-level `keyword` NOT owned by a CASE expression:
-    * every top-level CASE..END span counts as nesting, so
-    * `... AND CASE WHEN p THEN q END THEN DELETE` finds the SECOND
-    * THEN. -1 when absent (including when every occurrence is inside
-    * a CASE). Unbalanced ENDs clamp at depth zero.
-    */
-  def firstOutsideCase(s: String, keyword: String): Int = {
-    val events = (topLevelIndicesOf(s, "CASE").map(_ -> 'c') ++
-      topLevelIndicesOf(s, "END").map(_ -> 'e') ++
-      topLevelIndicesOf(s, keyword).map(_ -> 'k')).sortBy(_._1)
-    var caseDepth = 0
-    events.foreach {
-      case (_, 'c') => caseDepth += 1
-      case (_, 'e') => caseDepth = math.max(0, caseDepth - 1)
-      case (i, _) => if (caseDepth == 0) return i
-    }
-    -1
-  }
-
   /** Split on top-level commas — commas inside parentheses (and, with
     * `angleNests`, angle brackets: complex type arguments) or
     * single-quoted literals are content, not separators. Parts are
@@ -122,31 +86,5 @@ private[sql] object SqlScan {
     }
     parts += cur.result()
     parts.toSeq
-  }
-
-  /** Top-level whitespace tokens, with single quotes AND backticks
-    * opaque (a FROM-clause tail: relation names, aliases, subqueries).
-    */
-  def topLevelTokens(s: String): Seq[String] = {
-    val toks = scala.collection.mutable.ListBuffer.empty[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var inQuote = false
-    var inTick = false
-    s.foreach { c =>
-      if (inQuote) { cur += c; if (c == '\'') inQuote = false }
-      else if (inTick) { cur += c; if (c == '`') inTick = false }
-      else c match {
-        case '\'' => inQuote = true; cur += c
-        case '`' => inTick = true; cur += c
-        case '(' => depth += 1; cur += c
-        case ')' => depth = math.max(0, depth - 1); cur += c
-        case ws if ws.isWhitespace && depth == 0 =>
-          if (cur.nonEmpty) { toks += cur.result(); cur.clear() }
-        case other => cur += other
-      }
-    }
-    if (cur.nonEmpty) toks += cur.result()
-    toks.toSeq
   }
 }

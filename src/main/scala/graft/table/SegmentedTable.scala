@@ -1861,62 +1861,78 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     * existing rows with the same key and the remainder appends as a
     * new segment — all in one atomic commit. Candidate segments come
     * from the incoming key envelope (min/max per key column) through
-    * the normal stats pruning, matches are confirmed with one
-    * semi-join job, and only segments actually holding a matched key
-    * are rewritten (anti-join against the broadcast incoming keys).
-    * Incoming rows are appended as-is — callers dedupe the batch if
-    * its keys repeat. Returns the number of existing rows replaced.
+    * the normal stats pruning, matches are confirmed with one join
+    * job, and only segments actually holding a matched key
+    * are rewritten (anti-join against the incoming keys). Incoming
+    * rows are appended as-is: a key repeated in the batch inserts every
+    * copy when no existing row holds it, and fails the MERGE with a
+    * cardinality violation, before any write, when one does. Returns
+    * the number of existing rows replaced.
+    *
+    * The batch's per-key counts are computed once and persisted for
+    * the statement: the envelope, the hit-count job and every rewrite
+    * read them instead of re-reading and re-aggregating the batch.
     *
     * Scale: key envelope + stats bound the rewrite set exactly like
-    * DELETE; the only corpus-wide work is one semi-join keyed on the
-    * merge key. The key-set side carries NO broadcast hint — an
-    * explicit hint is honored regardless of size and would pin a huge
-    * merge batch to the driver/8 GB broadcast ceiling; letting the
-    * planner (and AQE at runtime) choose broadcasts small batches and
-    * degrades large ones to a shuffle join of the same shape.
+    * DELETE; the only corpus-wide work is one join keyed on the merge
+    * key. The key-count side carries NO broadcast hint — an explicit
+    * hint is honored regardless of size and would pin a huge merge
+    * batch to the driver/8 GB broadcast ceiling; letting the planner
+    * (and AQE at runtime) choose broadcasts small batches and degrades
+    * large ones to a shuffle join of the same shape.
     */
   def merge(df: DataFrame, keyCols: Seq[String]): Long = {
     require(keyCols.nonEmpty, "merge requires at least one key column")
     val unknown = keyCols.filterNot(schema.fieldNames.contains)
     require(unknown.isEmpty, s"unknown merge key columns: ${unknown.mkString(", ")}")
     val incoming = df.select(schema.fieldNames.map(col).toSeq: _*)
-    val keys = incoming.select(keyCols.map(col): _*).distinct()
-    // incoming key envelope -> candidate segments via stats pruning
-    val aggs = keyCols.flatMap(k =>
-      Seq(min(col(k)).as(s"__mn_$k"), max(col(k)).as(s"__mx_$k")))
-    val env = incoming.agg(aggs.head, aggs.tail: _*).collect()(0)
-    if (env.getAs[Any](s"__mn_${keyCols.head}") == null) return 0L // empty batch
-    val envelope = keyCols.map(k =>
-      col(k) >= lit(env.getAs[Any](s"__mn_$k")) &&
-        col(k) <= lit(env.getAs[Any](s"__mx_$k"))).reduce(_ && _)
-    val candidates = pruneSegments(envelope)
-    // one job: which candidate segments hold at least one matched key?
-    val hitCounts: Map[Int, Long] =
-      if (candidates.isEmpty) Map.empty
-      else readSegments(candidates)
-        // the file-derived segment id must attach BEFORE the join
-        // (input_file_name is single-source only)
-        .withColumn("__seg", org.apache.spark.sql.functions.regexp_extract(
-          org.apache.spark.sql.functions.input_file_name(),
-          "segment_(\\d+)/", 1).cast("int"))
-        .join(keys, keyCols, "left_semi")
-        .groupBy(col("__seg"))
-        .count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val affected =
-      candidates.flatMap(seg => hitCounts.get(seg.id).filter(_ > 0).map(seg -> _))
-    // rewrite matched segments without the replaced keys
-    val replacements = stagePar(affected) { case (seg, matched) =>
-      if (matched == seg.rowCount) seg -> None
-      else {
-        val survivors = readSegments(Seq(seg))
-          .join(keys, keyCols, "left_anti")
-        seg -> Some(stageSegment(survivors, s"rewriting_${seg.id}"))
+    val keyCounts = incoming.groupBy(keyCols.map(col): _*)
+      .agg(org.apache.spark.sql.functions.count(lit(1)).as("__n"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      // incoming key envelope -> candidate segments via stats pruning
+      val aggs = keyCols.flatMap(k =>
+        Seq(min(col(k)).as(s"__mn_$k"), max(col(k)).as(s"__mx_$k")))
+      val env = keyCounts.agg(aggs.head, aggs.tail: _*).collect()(0)
+      if (env.getAs[Any](s"__mn_${keyCols.head}") == null) return 0L // empty batch
+      val envelope = keyCols.map(k =>
+        col(k) >= lit(env.getAs[Any](s"__mn_$k")) &&
+          col(k) <= lit(env.getAs[Any](s"__mx_$k"))).reduce(_ && _)
+      val candidates = pruneSegments(envelope)
+      // one job: how many rows of each candidate segment match a key,
+      // and the most incoming rows any of them matches
+      val hits: Map[Int, (Long, Long)] =
+        if (candidates.isEmpty) Map.empty
+        else readSegments(candidates)
+          // the file-derived segment id must attach BEFORE the join
+          // (input_file_name is single-source only)
+          .withColumn("__seg", org.apache.spark.sql.functions.regexp_extract(
+            org.apache.spark.sql.functions.input_file_name(),
+            "segment_(\\d+)/", 1).cast("int"))
+          .join(keyCounts, keyCols)
+          .groupBy(col("__seg"))
+          .agg(org.apache.spark.sql.functions.count(lit(1)), max(col("__n")))
+          .collect().map(r => r.getInt(0) -> (r.getLong(1) -> r.getLong(2))).toMap
+      if (hits.values.exists(_._2 > 1)) throw new IllegalStateException(
+        "MERGE cardinality violation: a target row matches more than " +
+          "one source row — deduplicate the source on the merge keys")
+      val affected =
+        candidates.flatMap(seg => hits.get(seg.id).map(seg -> _._1))
+      // rewrite matched segments without the replaced keys
+      val keys = keyCounts.select(keyCols.map(col): _*)
+      val replacements = stagePar(affected) { case (seg, matched) =>
+        if (matched == seg.rowCount) seg -> None
+        else {
+          val survivors = readSegments(Seq(seg))
+            .join(keys, keyCols, "left_anti")
+          seg -> Some(stageSegment(survivors, s"rewriting_${seg.id}"))
+        }
       }
-    }
-    // incoming batch lands as one new segment in the same commit
-    commitRewrites(affected.map(_._1), replacements, "MERGE",
-      additions = Seq(stageSegment(incoming, "merging")))
-    affected.map(_._2).sum
+      // incoming batch lands as one new segment in the same commit
+      commitRewrites(affected.map(_._1), replacements, "MERGE",
+        additions = Seq(stageSegment(incoming, "merging")))
+      affected.map(_._2).sum
+    } finally keyCounts.unpersist()
   }
 
   /** FULL ANSI MERGE: conditional `WHEN MATCHED [AND p] THEN UPDATE
@@ -1963,7 +1979,7 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
     * Returns (updated, deleted, inserted) row counts.
     */
   def mergeFull(source: DataFrame, sourceAlias: String, targetAlias: String,
-                onSql: String,
+                on: Column,
                 matched: Seq[SegmentedTable.MergeWhen],
                 notMatched: Seq[SegmentedTable.MergeInsert],
                 equiKeys: Seq[(String, String)] = Nil,
@@ -2018,12 +2034,12 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
       .withColumn("__tp", lit(true))
       .alias(targetAlias)
     val src = source.withColumn("__sp", lit(true)).alias(sourceAlias)
-    val joined = tgt.join(src, F.expr(onSql), "full_outer")
+    val joined = tgt.join(src, on, "full_outer")
 
     val isMatched = col("__tp").isNotNull && col("__sp").isNotNull
     val isSrcOnly = col("__tp").isNull && col("__sp").isNotNull
     val isTgtOnly = col("__tp").isNotNull && col("__sp").isNull
-    def condOf(sql: Option[String]): Column = sql.map(F.expr).getOrElse(lit(true))
+    def condOf(c: Option[Column]): Column = c.getOrElse(lit(true))
 
     // the two target-row clause families share one ordered chain: a
     // join row is either matched or target-only, never both, so the
@@ -2040,19 +2056,19 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
       if (targetClauses.isEmpty) lit(0)
       else targetClauses.zipWithIndex.foldLeft(F.when(lit(false), 0)) {
         case (acc, ((pred, w), i)) =>
-          acc.when(pred && condOf(w.condSql), lit(i + 1))
+          acc.when(pred && condOf(w.cond), lit(i + 1))
       }.otherwise(lit(0))
     val isDel =
       if (targetClauses.isEmpty) lit(false)
       else targetClauses.foldLeft(F.when(lit(false), false)) {
-        case (acc, (pred, w)) => acc.when(pred && condOf(w.condSql),
+        case (acc, (pred, w)) => acc.when(pred && condOf(w.cond),
           lit(w.isInstanceOf[MergeDelete]))
       }.otherwise(lit(false))
     val iact =
       if (notMatched.isEmpty) lit(0)
       else notMatched.zipWithIndex.foldLeft(F.when(lit(false), 0)) {
         case (acc, (w, i)) =>
-          acc.when(isSrcOnly && condOf(w.condSql), lit(i + 1))
+          acc.when(isSrcOnly && condOf(w.cond), lit(i + 1))
       }.otherwise(lit(0))
 
     // post-merge value of each target column for a surviving target
@@ -2070,12 +2086,12 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
               col(s"$sourceAlias.${f.name}").cast(f.dataType)
             case u: MergeUpdate =>
               u.sets.find(_._1 == f.name)
-                .map { case (_, e) => F.expr(e).cast(f.dataType) }
+                .map { case (_, e) => e.cast(f.dataType) }
                 .getOrElse(orig)
             case _: MergeDelete => orig // row is dropped via isDel
             case other => throw new IllegalStateException(other.toString)
           }
-          acc.when(pred && condOf(w.condSql), v)
+          acc.when(pred && condOf(w.cond), v)
       }.otherwise(orig)
     }
     def insCol(f: StructField): Column =
@@ -2085,9 +2101,9 @@ class SegmentedTable private (val spark: SparkSession, val root: Path,
           val v =
             if (w.cols.isEmpty) col(s"$sourceAlias.${f.name}").cast(f.dataType)
             else w.cols.zip(w.vals).find(_._1 == f.name)
-              .map { case (_, e) => F.expr(e).cast(f.dataType) }
+              .map { case (_, e) => e.cast(f.dataType) }
               .getOrElse(lit(null).cast(f.dataType))
-          acc.when(isSrcOnly && condOf(w.condSql), v)
+          acc.when(isSrcOnly && condOf(w.cond), v)
       }.otherwise(lit(null).cast(f.dataType))
 
     val flat = joined.select(
@@ -2368,22 +2384,22 @@ object SegmentedTable {
   private[table] val stagingSeq = new java.util.concurrent.atomic.AtomicLong()
 
   /** [[SegmentedTable.mergeFull]]'s clause model: conditions and
-    * assignment values stay SQL TEXT (resolved against the aliased
+    * assignment values are Columns resolved against the aliased
     * target⋈source join inside mergeFull, so `t.c`/`s.c` references
-    * mean what the statement wrote). Clause order IS evaluation order
+    * mean what the statement wrote. Clause order IS evaluation order
     * (ANSI first-match).
     */
-  sealed trait MergeWhen { def condSql: Option[String] }
+  sealed trait MergeWhen { def cond: Option[Column] }
   /** UPDATE SET assignments; empty `sets` means `UPDATE SET *`. */
-  final case class MergeUpdate(condSql: Option[String],
-                               sets: Seq[(String, String)]) extends MergeWhen
-  final case class MergeDelete(condSql: Option[String]) extends MergeWhen
+  final case class MergeUpdate(cond: Option[Column],
+                               sets: Seq[(String, Column)]) extends MergeWhen
+  final case class MergeDelete(cond: Option[Column]) extends MergeWhen
   /** INSERT; empty `cols` means `INSERT *`, otherwise the column list
     * with positionally matching value expressions (unlisted columns
     * insert NULL).
     */
-  final case class MergeInsert(condSql: Option[String], cols: Seq[String],
-                               vals: Seq[String]) extends MergeWhen
+  final case class MergeInsert(cond: Option[Column], cols: Seq[String],
+                               vals: Seq[Column]) extends MergeWhen
 
   /** Sink-lineage id prefix for PER-START (non-durable) streaming
     * queries: epoch entries under it are garbage once their query

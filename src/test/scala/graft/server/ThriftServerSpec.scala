@@ -93,7 +93,8 @@ class ThriftServerSpec extends AnyFunSuite {
 
       // the r16 DML surface from a stock JDBC client: row-level
       // DELETE through SupportsDeleteV2, ANSI UPDATE and MERGE INTO
-      // through the per-connection dialect parser
+      // through Spark's parser and the per-connection graft analyzer
+      // rule
       st.execute("DELETE FROM graft.default.thrift_regions WHERE r_regionkey % 5 = 0")
       val r8 = st.executeQuery(
         "SELECT count(*) AS c FROM graft.default.thrift_regions")

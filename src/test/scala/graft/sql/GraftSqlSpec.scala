@@ -1267,16 +1267,89 @@ class GraftSqlSpec extends AnyFunSuite {
     assert(c == Map(1L -> "case_small", 3L -> "case_big",
       4L -> "stale", 5L -> "hold"), s"got $c")
 
-    // an UNALIASED parenthesized subquery source fails loudly with the
-    // alias hint instead of a confusing downstream resolution error
+    // an UNALIASED parenthesized subquery source: Spark's resolution
+    // finds the bare `k` in both the target and the source and fails
+    // the statement loudly
     val e2 = intercept[Exception] {
       spark.sql(
         """MERGE INTO graft.default.mbs t
            USING (SELECT 1 AS k) ON t.k = k
            WHEN MATCHED THEN DELETE""")
     }
-    assert(e2.getMessage.contains("alias the source"), e2.getMessage)
+    assert(e2.getMessage.contains("AMBIGUOUS_REFERENCE"), e2.getMessage)
     spark.sql("DROP TABLE graft.default.mbs")
+  }
+
+  test("ANSI UPDATE and MERGE bind named and positional parameter markers") {
+    spark.sql("DROP TABLE IF EXISTS graft.default.params_t")
+    spark.sql("CREATE TABLE graft.default.params_t (k BIGINT, status STRING) USING graft")
+    spark.sql("INSERT INTO graft.default.params_t VALUES (1, 'a'), (2, 'b')")
+    spark.sql("UPDATE graft.default.params_t SET status = :s WHERE k = :k",
+      Map("s" -> "named", "k" -> 1L))
+    spark.sql("UPDATE graft.default.params_t SET status = ? WHERE k = ?",
+      Array[Any]("positional", 2L))
+    spark.sql(
+      """MERGE INTO graft.default.params_t t
+         USING (SELECT CAST(:k AS BIGINT) AS k, 'merged' AS status) s ON t.k = s.k
+         WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *""",
+      Map("k" -> 3L))
+    val rows = spark.table("graft.default.params_t").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows == Map(1L -> "named", 2L -> "positional", 3L -> "merged"), s"got $rows")
+    spark.sql("DROP TABLE graft.default.params_t")
+  }
+
+  test("both MERGE routes cast the same source to the target's column types") {
+    spark.sql("SELECT CAST(k AS BIGINT) AS k, CAST(p AS DECIMAL(3,2)) AS price " +
+      "FROM VALUES (1, 1.25), (3, 3.5) AS v(k, p)").createOrReplaceTempView("typed_src")
+    def merged(name: String, clauses: String): (Int, Map[Long, Double]) = {
+      spark.sql(s"DROP TABLE IF EXISTS graft.default.$name")
+      spark.sql(s"CREATE TABLE graft.default.$name (k BIGINT, price DOUBLE) USING graft")
+      spark.sql(s"INSERT INTO graft.default.$name VALUES (1, 1.0), (2, 2.0)")
+      val width = spark.sql(s"MERGE INTO graft.default.$name t USING typed_src s " +
+        s"ON t.k = s.k $clauses").head().size
+      val rows = spark.table(s"graft.default.$name").collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      spark.sql(s"DROP TABLE graft.default.$name")
+      (width, rows)
+    }
+    val upsert = merged("typed_upsert",
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    val general = merged("typed_general",
+      "WHEN MATCHED THEN UPDATE SET price = s.price " +
+        "WHEN NOT MATCHED THEN INSERT (k, price) VALUES (s.k, s.price)")
+    // the upsert reports replaced rows, the general route three counts
+    assert(upsert._1 == 1 && general._1 == 3)
+    assert(upsert._2 == Map(1L -> 1.25, 2L -> 2.0, 3L -> 3.5), s"got ${upsert._2}")
+    assert(general._2 == upsert._2)
+  }
+
+  test("a source repeating a matched key fails the MERGE on both routes") {
+    spark.sql("DROP TABLE IF EXISTS graft.default.dup_src_t")
+    spark.sql("CREATE TABLE graft.default.dup_src_t (k BIGINT, v STRING) USING graft")
+    spark.sql("INSERT INTO graft.default.dup_src_t VALUES (1, 'a'), (2, 'b')")
+    spark.sql("SELECT * FROM VALUES (1, 'x'), (1, 'y') AS v(k, v)")
+      .createOrReplaceTempView("dup_src")
+    def rows() = spark.table("graft.default.dup_src_t").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toSet
+    val before = rows()
+    Seq("WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+      "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *")
+      .foreach { clauses =>
+        val e = intercept[Exception] {
+          spark.sql(s"MERGE INTO graft.default.dup_src_t t USING dup_src s " +
+            s"ON t.k = s.k $clauses")
+        }
+        assert(e.getMessage.contains("cardinality"), e.getMessage)
+        assert(rows() == before, s"$clauses must abort before any write")
+      }
+    // a repeated key no target row holds inserts every copy
+    spark.sql("SELECT * FROM VALUES (5, 'x'), (5, 'y') AS v(k, v)")
+      .createOrReplaceTempView("dup_new_src")
+    spark.sql("MERGE INTO graft.default.dup_src_t t USING dup_new_src s ON t.k = s.k " +
+      "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    assert(rows() == before ++ Set(5L -> "x", 5L -> "y"))
+    spark.sql("DROP TABLE graft.default.dup_src_t")
   }
 
   test("CREATE TABLE ... PARTITIONED BY (k) maps identity transforms to the co-located layout") {
@@ -1534,10 +1607,15 @@ class GraftSqlSpec extends AnyFunSuite {
       assert(mg.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.MergeIntoTable],
         s"foreign-bound graft catalog MERGE must reach the delegate, got ${mg.getClass}")
     } finally spark.conf.set(key, orig)
-    // bound back to this plugin (the normal state), the claim holds
-    val claimed = spark.sessionState.sqlParser.parsePlan(
-      "UPDATE graft.default.t SET a = 1 WHERE b = 2")
-    assert(claimed.isInstanceOf[AnsiUpdateGraftRowsCommand],
+    // bound back to this plugin (the normal state), the claim holds:
+    // the analyzed statement is the graft UPDATE
+    spark.sql("CREATE TABLE graft.default.claim_t (a INT, b INT) USING graft")
+    val claimed = spark.sessionState.analyzer.executeAndCheck(
+      spark.sessionState.sqlParser.parsePlan(
+        "UPDATE graft.default.claim_t SET a = 1 WHERE b = 2"),
+      new org.apache.spark.sql.catalyst.QueryPlanningTracker)
+    spark.sql("DROP TABLE graft.default.claim_t")
+    assert(claimed.isInstanceOf[UpdateGraftCommand],
       s"got ${claimed.getClass}")
   }
 

@@ -5,8 +5,8 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Property tests for [[SqlScan]], the one shared top-level SQL-text
-  * scanner: random nesting shapes (parens × single-quoted literals ×
-  * CASE..END spans) are built WITH their expected top-level positions
+  * scanner: random nesting shapes (parens × single-quoted literals)
+  * are built WITH their expected top-level positions
   * tracked during construction, so every scanner is checked against
   * ground truth by construction — not against a second implementation.
   */
@@ -55,13 +55,14 @@ class SqlScanSpec extends AnyFunSuite {
       (sb.result(), expected.toSeq)
     }
 
-  test("topLevelIndicesOf finds exactly the constructed top-level keywords") {
+  test("topLevelIndexOf finds the first constructed top-level keyword") {
     (1L to 200L).foreach { seed =>
       val (text, expected) = sample(statement("WHEN"), seed)
-      assert(SqlScan.topLevelIndicesOf(text, "WHEN") == expected,
+      val first = expected.headOption.getOrElse(-1)
+      assert(SqlScan.topLevelIndexOf(text, "WHEN") == first,
         s"seed=$seed text=$text")
       // case-insensitive: the scan over the lowercased text agrees
-      assert(SqlScan.topLevelIndicesOf(text.toLowerCase, "WHEN") == expected,
+      assert(SqlScan.topLevelIndexOf(text.toLowerCase, "WHEN") == first,
         s"seed=$seed lower text=$text")
     }
   }
@@ -76,51 +77,5 @@ class SqlScanSpec extends AnyFunSuite {
       assert(got == parts, s"seed=$seed joined=$joined")
       assert(got.mkString(",") == joined) // raw split is an identity
     }
-  }
-
-  /** Statement with CASE..END spans: tracks the expected FIRST
-    * top-level keyword outside every case span.
-    */
-  private def caseStatement(kw: String): Gen[(String, Int)] = {
-    val inCase: Gen[String] = for {
-      c <- word; v <- word
-    } yield s"CASE $c $kw $v END" // the kw inside is owned by the CASE
-    val piece: Gen[(String, Boolean)] = Gen.frequency(
-      4 -> word.map(w => (w, false)),
-      2 -> inCase.map(c => (c, false)),
-      2 -> Gen.const((kw, true)))
-    Gen.nonEmptyListOf(piece).map { ps =>
-      val sb = new StringBuilder
-      var expected = -1
-      ps.foreach { case (text, isBare) =>
-        if (sb.nonEmpty) sb += ' '
-        if (isBare && expected < 0) expected = sb.length
-        sb ++= text
-      }
-      (sb.result(), expected)
-    }
-  }
-
-  test("firstOutsideCase skips keywords owned by CASE..END, at any nesting") {
-    (1L to 200L).foreach { seed =>
-      val (text, expected) = sample(caseStatement("THEN"), seed)
-      assert(SqlScan.firstOutsideCase(text, "THEN") == expected,
-        s"seed=$seed text=$text")
-    }
-    // hand-pinned shapes the generator may not hit
-    assert(SqlScan.firstOutsideCase(
-      "MATCHED AND CASE WHEN p THEN q END THEN", "THEN") == 35)
-    assert(SqlScan.firstOutsideCase(
-      "CASE WHEN a THEN CASE WHEN b THEN c END END THEN x", "THEN") == 44)
-    assert(SqlScan.firstOutsideCase("CASE WHEN a THEN b END", "THEN") == -1)
-    assert(SqlScan.firstOutsideCase("'THEN' (THEN) THEN", "THEN") == 14)
-  }
-
-  test("topLevelTokens: quotes, backticks and parens are opaque") {
-    assert(SqlScan.topLevelTokens("a b c") == Seq("a", "b", "c"))
-    assert(SqlScan.topLevelTokens("(select 1 from t) s") ==
-      Seq("(select 1 from t)", "s"))
-    assert(SqlScan.topLevelTokens("`weird name` x 'a b'") ==
-      Seq("`weird name`", "x", "'a b'"))
   }
 }

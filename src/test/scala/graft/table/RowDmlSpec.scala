@@ -310,8 +310,8 @@ class RowDmlSpec extends AnyFunSuite {
     // full MERGE with a BY SOURCE clause: every live segment is a
     // candidate and every one holds both matched and unmatched rows
     val src = (0L until 800L by 2L).map(i => (i, s"s$i")).toDF("sk", "sv")
-    val (u2, d2, i2) = t.mergeFull(src, "s", "t", "t.k = s.sk",
-      matched = Seq(SegmentedTable.MergeUpdate(None, Seq("v" -> "s.sv"))),
+    val (u2, d2, i2) = t.mergeFull(src, "s", "t", expr("t.k = s.sk"),
+      matched = Seq(SegmentedTable.MergeUpdate(None, Seq("v" -> expr("s.sv")))),
       notMatched = Nil,
       equiKeys = Seq("k" -> "sk"),
       bySource = Seq(SegmentedTable.MergeDelete(None)))

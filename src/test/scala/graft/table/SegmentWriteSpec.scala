@@ -106,6 +106,33 @@ class SegmentWriteSpec extends AnyFunSuite {
     } finally li.unpersist()
   }
 
+  test("a MERGE aggregates its source once, however many segments it rewrites") {
+    import spark.implicits._
+    val t = SegmentedTable.create(spark, freshRoot("merge_once"),
+      new org.apache.spark.sql.types.StructType().add("k", "bigint").add("v", "string"),
+      Map.empty[String, String])
+    t.load((0L until 100L).map(k => (k, "old")).toDF("k", "v"))
+    t.load((100L until 200L).map(k => (k, "old")).toDF("k", "v"))
+    // a local source: each query that scans it builds its own
+    // ParallelCollectionRDD, and no other input of the merge is one
+    val src = Seq((5L, "new"), (150L, "new"), (500L, "new")).toDF("k", "v")
+    val next = t.status.nextId
+    val jobs = SparkJobs.during(spark)(assert(t.merge(src, Seq("k")) == 2L))
+    assert(newIds(t, next).size == 3) // two rewrites and the inserted batch
+    // the map sides of shuffles (stages another stage depends on) that
+    // scan the source: one scan, the per-key counts every later query
+    // reads back (a job lists an already-computed map stage again, as
+    // skipped, so the scan's RDD id is what identifies a re-read)
+    val stages = jobs.flatMap(_.start.stageInfos)
+    val parents = stages.flatMap(_.parentIds).toSet
+    val sourceScans = stages.filter(s => parents(s.stageId))
+      .flatMap(_.rddInfos.filter(_.name == "ParallelCollectionRDD").map(_.id)).distinct
+    assert(sourceScans.size == 1, stages.map(s =>
+      s"stage ${s.stageId} <- ${s.parentIds}: " +
+        s.rddInfos.map(r => s"${r.name.take(30)}#${r.id}").mkString(",")))
+    assert(t.read().filter(col("v") === "new").count() == 3)
+  }
+
   test("a write task beyond its share of the raw-hash budget leaves one bloom pass") {
     // two tasks, each entitled to half the budget: the first holds more
     // than half, though the write as a whole stays within the budget
@@ -192,14 +219,17 @@ class SegmentWriteSpec extends AnyFunSuite {
       assert(step(t.delete(col("l_linenumber") === 1)).size == 3)
       assert(step(t.update(col("l_orderkey") < 3000 && col("l_linenumber") === 2,
         Map("wide" -> lit(null), "l_returnflag" -> lit("Z")))).nonEmpty)
+      // the corpus repeats some keys; a batch repeating a key the table
+      // holds is a cardinality violation, so the batch holds each once
       val batch = li.filter(col("l_orderkey") < 200 && col("l_linenumber") === 3)
+        .dropDuplicates("l_orderkey", "l_linenumber")
         .withColumn("maybe_null", lit(null).cast("bigint"))
       assert(step(t.merge(batch, Seq("l_orderkey", "l_linenumber"))).nonEmpty)
       val src = li.filter(col("l_orderkey") >= 200 && col("l_orderkey") < 600)
         .dropDuplicates("l_orderkey", "l_linenumber")
       assert(step(t.mergeFull(src, "s", "t",
-        "t.l_orderkey = s.l_orderkey AND t.l_linenumber = s.l_linenumber",
-        matched = Seq(SegmentedTable.MergeDelete(Some("s.l_quantity > 25"))),
+        expr("t.l_orderkey = s.l_orderkey AND t.l_linenumber = s.l_linenumber"),
+        matched = Seq(SegmentedTable.MergeDelete(Some(expr("s.l_quantity > 25")))),
         notMatched = Seq(SegmentedTable.MergeInsert(None, Nil, Nil)),
         equiKeys = Seq("l_orderkey" -> "l_orderkey", "l_linenumber" -> "l_linenumber")))
         .nonEmpty)
